@@ -298,14 +298,11 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ranks = ranks.localCheckpoint()
     out = ranks.select("node", F.round("pr", 6).alias("pr"))
     if caches and _RELEASE_FALLBACK_CACHE:
-        # The persisted builds pinned the edge and degree tables;
-        # release that executor storage before returning (r5 ADVICE: it
-        # otherwise leaks across subsequent queries in a long-lived
-        # session). The final iteration is checkpointed first so the
-        # returned frame no longer depends on the caches being
-        # populated. (The small-graph localCheckpoint path has nothing
-        # in the cache manager — the ContextCleaner reclaims its RDD
-        # blocks on GC.)
+        # Both branches persist the edge and degree tables; release
+        # that executor storage before returning (it otherwise leaks
+        # across subsequent queries in a long-lived session). The final
+        # iteration is checkpointed first so the returned frame no
+        # longer depends on the caches being populated.
         out = out.localCheckpoint()
         for c in caches:
             c.unpersist()

@@ -236,13 +236,7 @@ def rdf_rest_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         return "\n".join(lines)
 
     parsed = scan_paginated(spark, fetcher)
-    # Materialize the fetched+parsed triples before the global sort:
-    # orderBy's range-boundary sampling executes its child once more, and
-    # for an external-source scan that means re-fetching every page (paid
-    # twice in stub mode, harmful in live mode). The lazy localCheckpoint
-    # makes the sampling pass and the sort read one materialization.
-    out = triples_only(parsed).select("s", "p", "o").localCheckpoint(eager=False)
-    return out.orderBy("s", "p", "o")
+    return triples_only(parsed).select("s", "p", "o").orderBy("s", "p", "o")
 
 
 @query("rdf_rest_datasource_scan", oracle=_REST_SCAN_ORACLE)
@@ -270,11 +264,7 @@ def rdf_rest_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     parsed = parse_bodies(pages.select("value"))
-    # Same materialize-before-sort posture as the serial path: without
-    # it, orderBy's boundary sampling re-executes the whole Python
-    # DataSource + parse stage (a second fetch of every page).
-    out = triples_only(parsed).select("s", "p", "o").localCheckpoint(eager=False)
-    return out.orderBy("s", "p", "o")
+    return triples_only(parsed).select("s", "p", "o").orderBy("s", "p", "o")
 
 
 @query(
@@ -338,10 +328,4 @@ def rdf_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         return f'<urn:monument:{key}> <urn:p:identifier> "{key}" .'
 
     enriched = transform.enrich_with_rijksmonument_data(graph, stub_fetcher)
-    # Materialize before the global sort: the enrichment stage performs
-    # one REST fetch per distinct key on the executors, and orderBy's
-    # boundary sampling would run that stage a second time — doubling
-    # live HTTP traffic, not just compute. One materialization feeds
-    # both the sampling pass and the sort.
-    out = enriched.select("s", "p", "o").localCheckpoint(eager=False)
-    return out.orderBy("s", "p", "o")
+    return enriched.select("s", "p", "o").orderBy("s", "p", "o")

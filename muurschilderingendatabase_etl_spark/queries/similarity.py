@@ -46,12 +46,12 @@ def _dlit_arr(vals) -> "F.Column":
     Each call site references its array once, so the pre-folding
     CreateArray shape has none of the bloom-bitmap inline-6× blowup.
 
-    Finite values only (r12 ADVICE): repr of nan/inf would emit
-    'nanD'/'infD', which the SQL parser rejects — assert here so a
-    future non-finite input fails with a clear message at build time
-    rather than a parse error inside Catalyst."""
+    Finite values only: repr of nan/inf would emit 'nanD'/'infD', which
+    the SQL parser rejects, so a non-finite input raises ValueError at
+    build time rather than a parse error inside Catalyst."""
     vals = [float(x) for x in vals]
-    assert all(math.isfinite(x) for x in vals), "non-finite value in _dlit_arr"
+    if not all(math.isfinite(x) for x in vals):
+        raise ValueError("non-finite value in _dlit_arr")
     return F.expr("array(" + ",".join(f"{x!r}D" for x in vals) + ")")
 
 

@@ -1,10 +1,14 @@
 """End-to-end ETL pipelines (SURVEY.md O18, O19).
 
 The reference's two entry points — export (export_from_omeka_s.py) and
-transform (transform_datamodel.py main, T:140-165) — each become a
-single lazy DataFrame plan ending in one action, instead of six eager
-full-graph passes. The 3-job CI DAG (O19) maps to staged runs sharing a
-parquet checkpoint.
+transform (transform_datamodel.py main, T:140-165) — each become a lazy
+DataFrame plan instead of six eager full-graph passes. The writer runs
+several Spark actions over it (``auto_prefixes``, the sort's range
+sampling, the write). The invariant is that each Python kernel and
+external fetch runs once per run: the Turtle parse and the enrichment
+fetch return lazy local checkpoints, and the writer reads one
+materialization of its input. The 3-job CI DAG (O19) maps to
+staged runs sharing a Turtle or parquet artifact.
 """
 
 from __future__ import annotations
@@ -52,8 +56,10 @@ def run_transform(
     fetcher: Fetcher | None = None,
 ) -> DataFrame:
     """Entry point 2 (SURVEY §3.2, transform:140-165): enrich → rename →
-    filter, as ONE lazy plan (read → union → dedup → withColumn →
-    filter)."""
+    filter (read → union → dedup → withColumn → filter). The result is
+    lazy; the only materialized step inside it is the enrichment fetch,
+    which runs once per distinct monument key however many actions the
+    caller runs on the result."""
     if fetcher is not None:
         triples = transform.enrich_with_rijksmonument_data(triples, fetcher)
     else:

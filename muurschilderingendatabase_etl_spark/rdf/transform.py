@@ -3,9 +3,10 @@ predicate filter, graph union with set semantics, and the
 rijksmonument enrichment join.
 
 The reference runs six eager full-graph passes
-(transform_datamodel.py:140-165); every function here is a lazy
-DataFrame transformation, so the whole pipeline fuses into one Catalyst
-plan with a single shuffle (the dedup after union).
+(transform_datamodel.py:140-165). Every function here is a lazy
+DataFrame transformation; ``fetch_enrichments`` also checkpoints its
+result (lazily), so the external fetch runs once per distinct key per
+run however many actions read it.
 """
 
 from __future__ import annotations
@@ -101,6 +102,11 @@ def fetch_enrichments(keys: DataFrame, fetcher: Fetcher) -> DataFrame:
 
     At 100 TB the key set is still small (distinct monument numbers), so
     this stage is narrow; the expensive side never moves.
+
+    The result is a lazy local checkpoint, so each distinct key is
+    fetched once per run however many actions (the union's broadcast
+    and shuffle stages, ``auto_prefixes``, the writer's sort sampling)
+    read the enrichments.
     """
     schema = "s string, s_kind string, p string, o string, o_kind string, o_lang string, o_datatype string"
 
@@ -117,7 +123,11 @@ def fetch_enrichments(keys: DataFrame, fetcher: Fetcher) -> DataFrame:
                 # per-key failure tolerance (transform:100-101)
                 continue
 
-    return keys.rdd.mapPartitions(fetch_partition).toDF(schema)
+    return (
+        keys.rdd.mapPartitions(fetch_partition)
+        .toDF(schema)
+        .localCheckpoint(eager=False)
+    )
 
 
 def add_same_as(triples: DataFrame) -> DataFrame:

@@ -35,7 +35,7 @@ blank-node labels.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -117,6 +117,14 @@ def _tokenize(text: str) -> Iterator[tuple[str, str]]:
         yield kind, m.group()
 
 
+def _at(tokens: list, i: int) -> tuple[str, str]:
+    """``tokens[i]``; a document that ends before it is malformed, so
+    this raises ValueError (the quarantine signal), never IndexError."""
+    if i >= len(tokens):
+        raise ValueError(f"unexpected end of input at token {i}")
+    return tokens[i]
+
+
 class _Parser:
     """Statement-at-a-time Turtle parser over a token stream."""
 
@@ -144,15 +152,15 @@ class _Parser:
             kind, val = tokens[i]
             if kind == "keyword" and val in ("@prefix", "PREFIX"):
                 # @prefix ex: <http://…> .
-                pname = tokens[i + 1][1]
-                iri = tokens[i + 2][1][1:-1]
+                pname = _at(tokens, i + 1)[1]
+                iri = _at(tokens, i + 2)[1][1:-1]
                 self.prefixes[pname[:-1]] = iri
                 i += 3
                 if i < n and tokens[i] == ("punct", "."):
                     i += 1
                 continue
             if kind == "keyword" and val in ("@base", "BASE"):
-                self.base = tokens[i + 1][1][1:-1]
+                self.base = _at(tokens, i + 1)[1][1:-1]
                 i += 2
                 if i < n and tokens[i] == ("punct", "."):
                     i += 1
@@ -188,7 +196,7 @@ class _Parser:
         """Parse ``p o (, o)* (; p o …)*`` for ``subj``, appending triples
         to ``out``. Leaves the terminator ('.' or ']') unconsumed."""
         while True:
-            pred = self._predicate(tokens[i])
+            pred = self._predicate(_at(tokens, i))
             i += 1
             while True:
                 i, obj = self._object(tokens, i, out)
@@ -289,7 +297,7 @@ class _Parser:
         return term
 
     def _object(self, tokens: list, i: int, out: list[dict]) -> tuple[int, dict]:
-        kind, val = tokens[i]
+        kind, val = _at(tokens, i)
         if kind == "bracket" and val == "[":
             i, node = self._anon_property_list(tokens, i, out)
             return i, {"o": node, "o_kind": BNODE, "o_lang": None, "o_datatype": None}
@@ -308,7 +316,7 @@ class _Parser:
                 lang = tokens[i][1][1:]
                 i += 1
             elif i < len(tokens) and tokens[i][0] == "dtype_marker":
-                dtype, _ = self._term(tokens[i + 1])
+                dtype, _ = self._term(_at(tokens, i + 1))
                 i += 2
             return i, {"o": text, "o_kind": LITERAL, "o_lang": lang, "o_datatype": dtype}
         if kind == "number":
@@ -335,6 +343,11 @@ def parse_bodies(bodies: DataFrame, column: str = "value") -> DataFrame:
     ``column``) → triples DataFrame (+ ``_corrupt`` quarantine column —
     PERMISSIVE mode, SURVEY O20). The shared kernel for file input
     (``read_turtle``) and the paginated REST source (``rdf/source.py``).
+
+    The result is a lazy local checkpoint: the first action that reads
+    it runs the Python parse (and whatever fetch feeds ``bodies``) once,
+    and every later action — the quarantine split, ``auto_prefixes``, a
+    sort's range sampling, the write — reads that materialization.
     """
 
     def parse_partition(rows: Iterable[Row]) -> Iterator[tuple]:
@@ -352,7 +365,11 @@ def parse_bodies(bodies: DataFrame, column: str = "value") -> DataFrame:
                 yield (None, None, None, None, None, None, None,
                        f"{exc}: {body[:200]}")
 
-    return bodies.rdd.mapPartitions(parse_partition).toDF(PARSED_SCHEMA)
+    return (
+        bodies.rdd.mapPartitions(parse_partition)
+        .toDF(PARSED_SCHEMA)
+        .localCheckpoint(eager=False)
+    )
 
 
 def read_turtle(spark: SparkSession, paths: str | list[str]) -> DataFrame:
@@ -456,10 +473,62 @@ def _serializable(triples: DataFrame) -> DataFrame:
     literal built from a NULL source column — is not a triple. All three
     writers skip such rows, mirroring the reference's garbage-triple
     cleanup (export_from_omeka_s.py:53-59), instead of crashing the
-    formatter on None."""
+    formatter on None. Keeps only the triple columns."""
     return triples.where(
         F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o").isNotNull()
-    )
+    ).select(*TRIPLE_COLS)
+
+
+def _writer_core(
+    triples: DataFrame,
+    prefixes: dict[str, str] | None,
+    auto_compact: bool,
+    reused: bool,
+) -> tuple[DataFrame, list[str], Callable[[Row], str]]:
+    """The three writers' shared setup → (rows, header lines, formatter).
+
+    ``rows`` are the serializable triples. With ``reused`` (more than one
+    action follows: ``auto_prefixes``, or a range partitioning whose
+    boundary sampling runs the input once more) they are a lazy local
+    checkpoint, so the upstream plan — Python parse and enrichment
+    fetch included — runs once and every action reads that copy.
+    ``auto_compact=True`` synthesizes ``nsN`` prefixes for unbound
+    namespaces (rdflib auto_compact analogue, transform_datamodel.py:135).
+    The formatter renders one row as one Turtle triple line."""
+    rows = _serializable(triples)
+    if reused:
+        rows = rows.localCheckpoint(eager=False)
+    if auto_compact:
+        prefixes = auto_prefixes(rows, prefixes)
+    prefix_items = sorted((prefixes or {}).items())
+    header = [f"@prefix {p}: <{ns}> ." for p, ns in prefix_items]
+    # longest namespace first so the most specific prefix wins
+    prefix_order = sorted(prefix_items, key=lambda kv: -len(kv[1]))
+
+    def line(r: Row) -> str:
+        subj = _format_term(r.s, r.s_kind, None, None, prefix_order)
+        pred = _format_term(r.p, IRI, None, None, prefix_order)
+        obj = _format_term(r.o, r.o_kind, r.o_lang, r.o_datatype, prefix_order)
+        return f"{subj} {pred} {obj} ."
+
+    return rows, header, line
+
+
+def _save_documents(
+    ordered: DataFrame, header: list[str], line: Callable[[Row], str], path: str
+) -> None:
+    """Save ``ordered`` as text, one part file per partition; a
+    non-empty part is the header, then one line per triple."""
+
+    def format_partition(rows: Iterable[Row]) -> Iterator[str]:
+        first = True
+        for r in rows:
+            if first:
+                yield from header
+                first = False
+            yield line(r)
+
+    ordered.rdd.mapPartitions(format_partition).saveAsTextFile(path)
 
 
 def write_turtle(
@@ -476,32 +545,11 @@ def write_turtle(
     stable sort is the determinism contract that golden-file tests rely
     on (SURVEY O21). coalesce(1) matches the reference's single-artifact
     handoff — documented scale ceiling, use parquet for the at-scale
-    representation.
+    representation. The sort's range sampling and the write (plus
+    ``auto_prefixes``) read one materialization of ``triples``.
     """
-    triples = _serializable(triples)
-    if auto_compact:
-        prefixes = auto_prefixes(triples, prefixes)
-    prefix_items = sorted((prefixes or {}).items())
-    # longest namespace first so the most specific prefix wins
-    prefix_order = sorted(prefix_items, key=lambda kv: -len(kv[1]))
-
-    header = "".join(f"@prefix {p}: <{ns}> .\n" for p, ns in prefix_items)
-
-    ordered = triples.select(*TRIPLE_COLS).orderBy("s", "p", "o").coalesce(1)
-
-    def format_partition(rows: Iterable[Row]) -> Iterator[str]:
-        first = True
-        for r in rows:
-            if first and header:
-                yield header.rstrip("\n")
-                first = False
-            subj = _format_term(r.s, r.s_kind, None, None, prefix_order)
-            pred = _format_term(r.p, IRI, None, None, prefix_order)
-            obj = _format_term(r.o, r.o_kind, r.o_lang, r.o_datatype, prefix_order)
-            yield f"{subj} {pred} {obj} ."
-
-    lines = ordered.rdd.mapPartitions(format_partition)
-    lines.saveAsTextFile(path)
+    rows, header, line = _writer_core(triples, prefixes, auto_compact, reused=True)
+    _save_documents(rows.orderBy("s", "p", "o").coalesce(1), header, line, path)
 
 
 def write_turtle_sharded(
@@ -531,34 +579,12 @@ def write_turtle_sharded(
         independently, and read_turtle(path) reassembles the graph.
 
     ``num_shards`` defaults to the session's shuffle parallelism."""
-    triples = _serializable(triples)
-    if auto_compact:
-        prefixes = auto_prefixes(triples, prefixes)
-    prefix_items = sorted((prefixes or {}).items())
-    prefix_order = sorted(prefix_items, key=lambda kv: -len(kv[1]))
-    header = "".join(f"@prefix {p}: <{ns}> .\n" for p, ns in prefix_items)
-
-    n = num_shards or triples.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
+    rows, header, line = _writer_core(triples, prefixes, auto_compact, reused=True)
+    n = num_shards or rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    ordered = rows.repartitionByRange(int(n), "s", "p", "o").sortWithinPartitions(
+        "s", "p", "o"
     )
-    ordered = (
-        triples.select(*TRIPLE_COLS)
-        .repartitionByRange(int(n), "s", "p", "o")
-        .sortWithinPartitions("s", "p", "o")
-    )
-
-    def format_partition(rows: Iterable[Row]) -> Iterator[str]:
-        first = True
-        for r in rows:
-            if first and header:
-                yield header.rstrip("\n")
-                first = False
-            subj = _format_term(r.s, r.s_kind, None, None, prefix_order)
-            pred = _format_term(r.p, IRI, None, None, prefix_order)
-            obj = _format_term(r.o, r.o_kind, r.o_lang, r.o_datatype, prefix_order)
-            yield f"{subj} {pred} {obj} ."
-
-    ordered.rdd.mapPartitions(format_partition).saveAsTextFile(path)
+    _save_documents(ordered, header, line, path)
 
 
 _SERIALIZE_MAX_TRIPLES = 1_000_000  # ~100 MB of driver strings; override per call
@@ -577,36 +603,19 @@ def serialize_turtle(
     Guarded: this path collects to the driver, so a graph above
     `max_triples` raises instead of silently OOM-ing the driver at 100x
     scale — callers with big graphs belong on the distributed
-    `write_turtle` sink. r12 perf (guide §1.2: one pass, not two): the
-    guard is folded into the collect itself — `orderBy.limit(n+1)` is a
-    TakeOrdered (per-partition top-k + driver merge), so the driver
-    receives at most max_triples+1 rows and the raise fires from the
-    collected length. The old separate `limit(n+1).count()` job
-    re-executed the whole upstream plan (for parsed graphs, a second
-    full Python parse pass — measured ~1.1 s of rdf_turtle_roundtrip at
-    sf0.1). An oversized graph now pays auto_prefixes' distributed scan
-    before raising; the driver-memory bound is unchanged."""
-    triples = _serializable(triples)
-    if auto_compact:
-        prefixes = auto_prefixes(triples, prefixes)
-    prefix_items = sorted((prefixes or {}).items())
-    prefix_order = sorted(prefix_items, key=lambda kv: -len(kv[1]))
-    rows = (
-        triples.select(*TRIPLE_COLS)
-        .orderBy("s", "p", "o")
-        .limit(max_triples + 1)
-        .collect()
-    )
-    if len(rows) > max_triples:
+    `write_turtle` sink. The guard is folded into the collect itself:
+    `orderBy.limit(n+1)` is a TakeOrdered (per-partition top-k + driver
+    merge), so the driver receives at most max_triples+1 rows, the raise
+    fires from the collected length, and the upstream plan runs in one
+    action (no checkpoint unless ``auto_compact`` adds a second). An
+    oversized graph pays auto_prefixes' distributed scan before raising;
+    the driver-memory bound is unchanged."""
+    rows, header, line = _writer_core(triples, prefixes, auto_compact, reused=auto_compact)
+    collected = rows.orderBy("s", "p", "o").limit(max_triples + 1).collect()
+    if len(collected) > max_triples:
         raise ValueError(
             f"serialize_turtle collects to the driver and the graph exceeds "
             f"max_triples={max_triples}; use write_turtle(df, path) for the "
             f"distributed single-artifact sink instead"
         )
-    out = [f"@prefix {p}: <{ns}> ." for p, ns in prefix_items]
-    for r in rows:
-        subj = _format_term(r.s, r.s_kind, None, None, prefix_order)
-        pred = _format_term(r.p, IRI, None, None, prefix_order)
-        obj = _format_term(r.o, r.o_kind, r.o_lang, r.o_datatype, prefix_order)
-        out.append(f"{subj} {pred} {obj} .")
-    return "\n".join(out) + "\n"
+    return "\n".join(header + [line(r) for r in collected]) + "\n"

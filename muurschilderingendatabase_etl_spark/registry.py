@@ -64,7 +64,7 @@ _REWRITTEN_IN_ROUND: dict[str, int] = {
     # money.py (hi/lo exact sums), the streaming replay floor, and a
     # dozen per-query rewrites. 183 of 186 queries therefore carry an
     # r12 rewrite entry (the three that synthesize their own data —
-    # rdf_rest_*_scan, scan_json_corrupt_records — are untouched).
+    # rdf_rest_*_scan, scan_json_corrupt_records — were untouched then).
     # All 186 re-verified against the DuckDB oracle at sf0.01 via
     # scripts/driver_mimic.py before commit (OPTIMIZATION_r12.md).
     # Historical per-round entries (r8-r11) are superseded by these;
@@ -168,8 +168,14 @@ _REWRITTEN_IN_ROUND: dict[str, int] = {
     "quality_gopher_gates": 13,
     "quality_length_band_filter": 12,
     "quality_repetition_dupwords": 13,
-    "rdf_enrichment_join": 13,
+    # r14: the three RDF queries that materialized their own input
+    # before the global sort now rely on the parse kernel and the
+    # enrichment fetch materializing theirs (rdf/turtle.py,
+    # rdf/transform.py); oracle-verified at sf0.001 by the parity tests.
+    "rdf_enrichment_join": 14,
     "rdf_graph_pipeline": 13,
+    "rdf_rest_datasource_scan": 14,
+    "rdf_rest_source_scan": 14,
     "rdf_turtle_roundtrip": 12,
     "retention_weekly_cohorts": 13,
     "sample_hash_stratified": 12,

@@ -152,6 +152,39 @@ def test_corrupt_quarantine(spark, tmp_path):
     assert triples_only(parsed).count() == 1
 
 
+# Documents that end mid-statement: the parser must report them as
+# malformed (ValueError, the quarantine signal), not run off the end of
+# its token list.
+TRUNCATED_TTL = [
+    "<http://a> <http://b> <http://c> ;",
+    "@prefix ex:",
+    "<http://a> <http://b>",
+    '<http://a> <http://b> "x"^^',
+]
+
+
+@pytest.mark.parametrize("text", TRUNCATED_TTL)
+def test_truncated_turtle_raises_value_error(text):
+    with pytest.raises(ValueError, match="unexpected end of input"):
+        parse_turtle_text(text)
+
+
+def test_truncated_pages_quarantined_by_scan(spark):
+    pages = [f'<{ITEM}1> <{DCTERMS}title> "a" .', *TRUNCATED_TTL,
+             f'<{ITEM}2> <{DCTERMS}title> "b" .']
+
+    def fetcher(page: int) -> str:
+        return pages[page - 1] if page <= len(pages) else ""
+
+    parsed = scan_paginated(spark, fetcher)
+    corrupt = [r._corrupt for r in parsed.where("_corrupt IS NOT NULL").collect()]
+    assert len(corrupt) == len(TRUNCATED_TTL)
+    assert all("unexpected end of input" in c for c in corrupt)
+    assert {(r.s, r.o) for r in triples_only(parsed).collect()} == {
+        (ITEM + "1", "a"), (ITEM + "2", "b"),
+    }
+
+
 def test_cleanup_filters(spark):
     triples = _fixture_triples(spark)
     cleaned = cleanup.clean(triples)

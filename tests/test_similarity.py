@@ -4,7 +4,10 @@ return k rows."""
 
 from __future__ import annotations
 
+import pytest
+
 from muurschilderingendatabase_etl_spark.queries.similarity import (
+    _dlit_arr,
     _ivf_topk,
     similarity_topk_bruteforce,
 )
@@ -48,3 +51,11 @@ def test_hyperplane_lsh_recall_vs_bruteforce(spark):
     # catch a real multiprobe regression, with margin for a fixture
     # refresh (r4 verdict item 7).
     assert recall >= 0.92, f"hyperplane-LSH recall@k collapsed: {recall:.2f}"
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_dlit_arr_rejects_non_finite(bad):
+    # A raise, not an assert: `python -O` strips asserts, and the SQL
+    # parser would then fail on 'nanD'/'infD' inside Catalyst.
+    with pytest.raises(ValueError, match="non-finite"):
+        _dlit_arr([1.0, bad])
