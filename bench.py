@@ -75,23 +75,18 @@ def _cpu_snapshot():
         return None
 
 
-# A timed loop whose attempt-level contention telemetry crosses either
-# bound is re-run ONCE and the less-contended attempt reported (both
-# attempts kept in the detail sidecar). VERDICT r12 item 1's fallback:
-# the host's co-tenant persists (r12's official run shared the box with
-# an 18-core neighbor, and identical r13 code measured 212 vs 167 s
-# under demand-correlated hypervisor steal), and one bounded retry is
-# the contract-preserving mitigation — same env vars, same final
-# one-line JSON, same per-query methodology within an attempt. The
-# selection criterion is CONTENTION, never speed: a clean-first-attempt
-# run is reported unchanged, and a twice-contaminated run reports the
-# quieter of the two with the evidence of both on disk.
-_RETRY_STEAL_CORES = 1.0
-_RETRY_OTHER_CORES = 3.0
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
 
+    spark = get_spark(app_name="bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = registry.all_queries()
 
-def _timed_pass(spark, queries, sf_dir):
-    """One full timed loop; returns (timings, contention dict)."""
+    # Warm-up: JVM JIT, codegen, parquet footer caches.
+    materialize(queries["flagship_revenue_by_nation"](spark, sf_dir))
+
     snap0 = _cpu_snapshot()
     wall0 = time.perf_counter()
     try:
@@ -130,50 +125,6 @@ def _timed_pass(spark, queries, sf_dir):
         contention["steal_cpu_cores"] = round(
             max(0.0, (snap1[2] - snap0[2]) / hz / elapsed), 2
         )
-    return timings, contention
-
-
-def _contaminated(contention: dict) -> bool:
-    return (
-        float(contention.get("steal_cpu_cores", 0.0)) > _RETRY_STEAL_CORES
-        or float(contention.get("other_cpu_cores", 0.0)) > _RETRY_OTHER_CORES
-    )
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = registry.all_queries()
-
-    # Warm-up: JVM JIT, codegen, parquet footer caches.
-    materialize(queries["flagship_revenue_by_nation"](spark, sf_dir))
-
-    timings, contention = _timed_pass(spark, queries, sf_dir)
-    rejected = None
-    if _contaminated(contention):
-        print(
-            f"BENCH CONTENTION {contention}: co-tenant detected, "
-            "re-running the timed loop once",
-            file=sys.stderr,
-        )
-        timings2, contention2 = _timed_pass(spark, queries, sf_dir)
-
-        def _score(c):
-            return float(c.get("steal_cpu_cores", 0.0)) + float(
-                c.get("other_cpu_cores", 0.0)
-            )
-
-        if _score(contention2) <= _score(contention):
-            rejected = {"queries": timings, **contention, "attempt": 1}
-            timings, contention = timings2, contention2
-            contention = {**contention, "attempt": 2}
-        else:
-            rejected = {"queries": timings2, **contention2, "attempt": 2}
-            contention = {**contention, "attempt": 1}
 
     total = round(sum(v for v in timings.values() if v >= 0), 3)
     # Full per-query detail goes to a sidecar file and an early stdout line;
@@ -190,16 +141,9 @@ def main() -> None:
         "sf": sf,
         **contention,
     }
-    printed = dict(detail)
-    if rejected is not None:
-        # both attempts stay on the record; the FINAL line reports the
-        # less-contended one (selection by contention, never by speed).
-        # The rejected attempt goes to the SIDECAR only — stdout keeps
-        # the round-1 lesson that the driver tail-parses small lines.
-        detail["rejected_attempt"] = rejected
     with open("BENCH_DETAIL.json", "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
-    print(json.dumps(printed))
+    print(json.dumps(detail))
     print(
         json.dumps(
             {

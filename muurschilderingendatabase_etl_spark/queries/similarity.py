@@ -243,10 +243,10 @@ def similarity_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming-≤3 neighbors (93 probes, ~36% of the bucket space) in EVERY
     table, candidates union across tables, exact cosine re-ranks.
     Measured recall@5: 0.96 at sf0.001, 0.98 at sf0.01 and sf0.1
-    (regression floor 0.85, tests/test_similarity.py); the sweep behind
-    the choice is scripts/exp_lsh_recall.py (radius 2 → 0.66-0.88,
-    radius 3 lifts every table count ≥0.92). Deterministic (seeded
-    planes, vec_id tiebreak).
+    (regression floor 0.85, tests/test_similarity.py); the radius sweep
+    behind the choice (radius 2 → 0.66-0.88, radius 3 lifts every table
+    count ≥0.92) was a one-off script, kept in git history. Deterministic
+    (seeded planes, vec_id tiebreak).
 
     Scale shape: corpus side carries (table, bucket, vec) — a 4× row
     fan-out, not a data copy per probe; the probe join is equi on

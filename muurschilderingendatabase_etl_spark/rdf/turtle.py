@@ -125,6 +125,15 @@ def _at(tokens: list, i: int) -> tuple[str, str]:
     return tokens[i]
 
 
+def _expect(tokens: list, i: int, kind: str) -> str:
+    """The value of ``tokens[i]``, which must be of ``kind``; anything
+    else makes the document malformed (ValueError)."""
+    got, val = _at(tokens, i)
+    if got != kind:
+        raise ValueError(f"expected {kind} at token {i}, got {got} {val!r}")
+    return val
+
+
 class _Parser:
     """Statement-at-a-time Turtle parser over a token stream."""
 
@@ -152,15 +161,19 @@ class _Parser:
             kind, val = tokens[i]
             if kind == "keyword" and val in ("@prefix", "PREFIX"):
                 # @prefix ex: <http://…> .
-                pname = _at(tokens, i + 1)[1]
-                iri = _at(tokens, i + 2)[1][1:-1]
+                pname = _expect(tokens, i + 1, "pname")
+                if not pname.endswith(":"):
+                    raise ValueError(
+                        f"expected a prefix name ending in ':', got {pname!r}"
+                    )
+                iri = _expect(tokens, i + 2, "iri")[1:-1]
                 self.prefixes[pname[:-1]] = iri
                 i += 3
                 if i < n and tokens[i] == ("punct", "."):
                     i += 1
                 continue
             if kind == "keyword" and val in ("@base", "BASE"):
-                self.base = _at(tokens, i + 1)[1][1:-1]
+                self.base = _expect(tokens, i + 1, "iri")[1:-1]
                 i += 2
                 if i < n and tokens[i] == ("punct", "."):
                     i += 1

@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """Consolidated scale dossier (r11 VERDICT item 7): one generated table —
 query -> latest sf0.1 / sf1 / sf10 / sf100 seconds -> worst per-decade
-ratio -> class — so the 100 TB claim is auditable at a glance and a query
-whose scale evidence went stale after a rewrite is flagged mechanically.
+ratio -> class — so the 100 TB claim is auditable at a glance.
 
 Sources:
 - ``bench_scale/*.json`` — every committed big-SF artifact. The scale
@@ -15,9 +14,6 @@ Sources:
   same way they did in the SCALE.md narrative.
 - sf0.1 anchors: the highest-round ``BENCH_DETAIL_r*.json`` (the full
   per-query official bench archive; r11 VERDICT item 4).
-- staleness: ``registry._REWRITTEN_IN_ROUND`` — a query rewritten in a
-  round LATER than its latest big-SF reading is marked ``stale`` (its
-  scale evidence predates the code that now runs).
 
 Ratio: worst adjacent-pair per-decade geometric mean,
 ``(t_hi/t_lo) ** (1/log10(sf_hi/sf_lo))`` over consecutive measured SFs.
@@ -209,28 +205,15 @@ def registered_queries() -> list[str]:
     return sorted(registry.all_queries())
 
 
-def rewritten_rounds() -> dict[str, int]:
-    from muurschilderingendatabase_etl_spark.registry import _REWRITTEN_IN_ROUND
-
-    return dict(_REWRITTEN_IN_ROUND)
-
-
 def build_rows():
     table, anchor_round = collect()
-    rewrites = rewritten_rounds()
     rows = []
     missing = []
     for q in registered_queries():
         per_sf = table.get(q, {})
-        big_sfs = [sf for sf in per_sf if sf >= 1]
-        if not big_sfs:
+        if not any(sf >= 1 for sf in per_sf):
             missing.append(q)
         ratio = worst_ratio(per_sf)
-        # stale: the latest big-SF reading predates the last rewrite
-        stale = False
-        if big_sfs:
-            latest_big_round = max(per_sf[sf][1] for sf in big_sfs)
-            stale = rewrites.get(q, 0) > latest_big_round
         if ratio is None:
             cls = "no-reading"
         elif q in ADJUDICATED:
@@ -241,7 +224,7 @@ def build_rows():
             cls = "watch"
         else:
             cls = "ok"
-        rows.append((q, per_sf, ratio, cls, stale))
+        rows.append((q, per_sf, ratio, cls))
     return rows, missing, anchor_round
 
 
@@ -262,22 +245,16 @@ def render(rows, missing, anchor_round) -> str:
         f"Latest reading per (query, scale factor); sf0.1 from "
         f"`BENCH_DETAIL_r{anchor_round}.json`; rN = round of the reading. "
         "Ratio = worst adjacent-pair per-decade geometric mean. "
-        "`stale` = rewritten after its latest big-SF reading (re-probe "
-        "owed). Class lines for adjudicated queries quote SCALE.md's "
+        "Class lines for adjudicated queries quote SCALE.md's "
         "narrative verdict.",
         "",
         "| query | sf0.1 | sf1 | sf10 | sf100 | worst x/decade | class |",
         "|---|---|---|---|---|---|---|",
     ]
-    n_stale = 0
-    for q, per_sf, ratio, cls, stale in sorted(
-        rows, key=lambda r: -(r[2] or 0)
-    ):
-        name = f"{q} **[stale]**" if stale else q
-        n_stale += stale
+    for q, per_sf, ratio, cls in sorted(rows, key=lambda r: -(r[2] or 0)):
         rtxt = f"{ratio:.1f}" if ratio is not None else "—"
         lines.append(
-            f"| {name} | {_fmt(per_sf, 0.1)} | {_fmt(per_sf, 1)} "
+            f"| {q} | {_fmt(per_sf, 0.1)} | {_fmt(per_sf, 1)} "
             f"| {_fmt(per_sf, 10)} | {_fmt(per_sf, 100)} | {rtxt} | {cls} |"
         )
     lines += [
@@ -285,7 +262,6 @@ def render(rows, missing, anchor_round) -> str:
         f"Totals: {len(rows)} registered queries; "
         f"{len(rows) - len(missing)} with at least one big-SF reading; "
         f"{len(missing)} without ({', '.join(missing) or 'none'}); "
-        f"{n_stale} stale; "
         f"{sum(1 for r in rows if r[3] == 'FLAG')} unadjudicated flags.",
         "",
         END,
@@ -310,9 +286,6 @@ def main() -> None:
         print(f"SCALE.md dossier regenerated ({len(rows)} queries).")
     else:
         print(block)
-    stale = [q for q, _, _, _, s in rows if s]
-    if stale:
-        print(f"\nSTALE (re-probe owed): {', '.join(stale)}", file=sys.stderr)
 
 
 if __name__ == "__main__":

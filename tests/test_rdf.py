@@ -169,6 +169,37 @@ def test_truncated_turtle_raises_value_error(text):
         parse_turtle_text(text)
 
 
+# Directives whose operands are the wrong kind of token: a string or a
+# number is not a namespace IRI and an IRI is not a prefix name, so the
+# page is malformed rather than silently bound to the wrong namespace.
+BAD_DIRECTIVE_TTL = [
+    '@prefix ex: "http://x/" . ex:a ex:b ex:c .',
+    '@base "http://x/" . <a> <b> <c> .',
+    "@prefix <http://y/> <http://x/> . <http://a> <http://b> <http://c> .",
+    "PREFIX ex: 42 ex:a ex:b ex:c .",
+]
+
+
+@pytest.mark.parametrize("text", BAD_DIRECTIVE_TTL)
+def test_bad_directive_raises_value_error(text):
+    with pytest.raises(ValueError, match="expected"):
+        parse_turtle_text(text)
+
+
+def test_bad_directive_page_quarantined_by_scan(spark):
+    pages = [f'<{ITEM}1> <{DCTERMS}title> "a" .', BAD_DIRECTIVE_TTL[0],
+             f'<{ITEM}2> <{DCTERMS}title> "b" .']
+
+    def fetcher(page: int) -> str:
+        return pages[page - 1] if page <= len(pages) else ""
+
+    parsed = scan_paginated(spark, fetcher)
+    assert parsed.where("_corrupt IS NOT NULL").count() == 1
+    assert {(r.s, r.o) for r in triples_only(parsed).collect()} == {
+        (ITEM + "1", "a"), (ITEM + "2", "b"),
+    }
+
+
 def test_truncated_pages_quarantined_by_scan(spark):
     pages = [f'<{ITEM}1> <{DCTERMS}title> "a" .', *TRUNCATED_TTL,
              f'<{ITEM}2> <{DCTERMS}title> "b" .']

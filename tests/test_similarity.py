@@ -46,7 +46,7 @@ def test_hyperplane_lsh_recall_vs_bruteforce(spark):
     recall = hits / sum(len(exact[q]) for q in exact)
     # Four independent tables x hamming-3 multiprobe (93/256 buckets per
     # table): measured 0.96 at sf0.001, 0.98 at sf0.01/sf0.1
-    # (scripts/exp_lsh_recall.py sweep). Chance is ~0.005. Floor at 0.92
+    # (one-off radius sweep, in git history). Chance is ~0.005. Floor at 0.92
     # — close enough under the two-round measured range (0.96–0.98) to
     # catch a real multiprobe regression, with margin for a fixture
     # refresh (r4 verdict item 7).

@@ -7,6 +7,7 @@ batch engine, closing the triangle."""
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 import pyspark.sql.functions as F
@@ -139,6 +140,38 @@ def test_replay_leaves_no_scratch_dirs(spark):
     assert after - before == set(), (
         f"streaming replay leaked checkpoint dirs: {sorted(after - before)}"
     )
+
+
+def test_staging_fallback_matches_symlink_path(spark, tmp_path, monkeypatch):
+    """read_events_stream stages the events file by symlink, and falls
+    back to a staged Spark write when events.parquet is a directory
+    dataset or os.symlink raises. Both fallbacks must replay the same
+    rows as the symlink path."""
+    from muurschilderingendatabase_etl_spark.streaming import replay
+
+    def staged_by_write(sf_dir: str) -> bool:
+        staged = replay._STAGED[(spark.sparkContext.applicationId, sf_dir)]
+        return not os.path.islink(os.path.join(staged, "events.parquet"))
+
+    expected = _sorted_rows(stream_tumbling_window(spark, SF_DIR))
+    assert not staged_by_write(SF_DIR)
+    src = os.path.join(SF_DIR, "events.parquet")
+
+    dir_sf = tmp_path / "directory_dataset"
+    (dir_sf / "events.parquet").mkdir(parents=True)
+    shutil.copy(src, dir_sf / "events.parquet" / "part-0.parquet")
+    assert _sorted_rows(stream_tumbling_window(spark, str(dir_sf))) == expected
+    assert staged_by_write(str(dir_sf))
+
+    def no_symlink(*args, **kwargs):
+        raise OSError("symlinks unavailable")
+
+    monkeypatch.setattr(os, "symlink", no_symlink)
+    file_sf = tmp_path / "no_symlink"
+    file_sf.mkdir()
+    shutil.copy(src, file_sf / "events.parquet")
+    assert _sorted_rows(stream_tumbling_window(spark, str(file_sf))) == expected
+    assert staged_by_write(str(file_sf))
 
 
 def test_batch_sink_idempotent_under_redelivery(spark):
