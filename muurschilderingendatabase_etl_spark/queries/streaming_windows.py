@@ -3,9 +3,10 @@
 
 Each query replays the events parquet through ``readStream`` with
 ``trigger(availableNow=True)`` (streaming/replay.py) and materializes the
-result via a memory sink, so the registered callable still returns a batch
-DataFrame for the driver to collect. The topology is the production one:
-swap the file source for Kafka and the same plan runs continuously.
+result through ``run_to_memory``'s idempotent foreachBatch parquet sink,
+so the registered callable still returns a batch DataFrame for the driver
+to collect. The topology is the production one: swap the file source for
+Kafka and the same plan runs continuously.
 
 Oracle notes:
 - Tumbling/sliding/session windows are batch-equivalent, so they get full
@@ -351,7 +352,6 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from muurschilderingendatabase_etl_spark.streaming.replay import (
-        source_bytes_of,
         stage_events_two_phase,
         stream_state_partitions,
     )
@@ -381,7 +381,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        with stream_state_partitions(spark, source_bytes=source_bytes_of(win)):
+        with stream_state_partitions(win):
             q = (
                 win.writeStream.format("parquet")
                 .option("path", outdir)
@@ -399,6 +399,9 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         # leave the source dir bulk-only for repeat in-session invocations
         os.remove(f"{srcdir}/b_stragglers.parquet")
+        # the checkpoint is dead once run 2 ends: the file sink's own log
+        # (outdir/_spark_metadata) lists the output read below
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(outdir)
 
 
@@ -467,39 +470,12 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch sink: each micro-batch lands as parquet via arbitrary
     batch-DataFrame logic — the escape hatch for sinks Spark lacks
-    (JDBC upsert, multi-table writes). Result = re-read of everything
-    written, aggregated."""
-    import shutil
-    import tempfile
-
-    from muurschilderingendatabase_etl_spark.queries.scans import _rm_at_exit
-
-    outdir = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_feb_out_"))
+    (JDBC upsert, multi-table writes) — here ``run_to_memory``'s
+    per-batch-directory sink, idempotent under redelivery. Result =
+    re-read of everything written, aggregated."""
     ev = read_events_stream(spark, sf_dir).select("event_type", "value")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(outdir)
-
-    from muurschilderingendatabase_etl_spark.streaming.replay import (
-        source_bytes_of,
-        stream_state_partitions,
-    )
-
-    ckpt = tempfile.mkdtemp(prefix="msdb_feb_ckpt_")
-    try:
-        with stream_state_partitions(spark, source_bytes=source_bytes_of(ev)):
-            q = (
-                ev.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # run-to-completion replay: checkpoint is dead once terminated
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        spark.read.parquet(outdir)
+        run_to_memory(ev, "append")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -534,21 +510,12 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic under availableNow replay, hence oracle-checkable.
 
     Environment gate: the TWS driver worker requires the `protobuf`
-    package (its state server speaks protobuf to the JVM); this
-    container doesn't ship it, so when the import is unavailable the
-    query runs the SAME per-user summary through
-    applyInPandasWithState — identical semantics and state shape, so
-    the oracle contract holds either way. The TWS path is the one
-    exercised wherever protobuf exists. PERMANENT WAIVER (r6;
-    re-probed 2026-08-16/r10 — protobuf still absent): package
-    installation is out of scope in this build environment and
-    protobuf is absent from the image (re-probed 2026-08-18/r13:
-    `import google.protobuf` still ModuleNotFoundError), so the true
-    TWS path cannot execute here by construction; the gate itself is
-    unit-tested, the
-    fallback is batch-equivalence-tested, and the single pytest skip
-    (tests/test_streaming.py) is the documented cost until the runtime
-    image carries protobuf."""
+    package (its state server speaks protobuf to the JVM). Where it is
+    absent the query runs the SAME per-user fold through
+    applyInPandasWithState — identical semantics and state shape, so the
+    oracle contract holds either way. Only the path the host supports
+    runs: images without protobuf oracle-check the fallback, and the TWS
+    path runs wherever protobuf is installed."""
     import importlib.util
 
     import numpy as np
@@ -558,6 +525,29 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         StatefulProcessorHandle,
     )
 
+    def fold(key, stats, pdfs, update):
+        """Both API paths' per-user step: fold ``pdfs`` into ``stats``
+        (n_purchases, purchase_cents, n_events), store the result with
+        ``update``, and emit the user's row if they have purchases."""
+        # integer-cents state: see queries/money.py
+        n_p, cents, n_e = stats
+        for pdf in pdfs:
+            purchases = pdf[pdf["event_type"] == "purchase"]
+            n_p += len(purchases)
+            v = purchases["value"].dropna().to_numpy()
+            cents += int(np.rint(v * 100).astype("int64").sum())
+            n_e += len(pdf)
+        update((n_p, cents, n_e))
+        if n_p > 0:
+            yield pd.DataFrame(
+                {
+                    "user_id": [key[0]],
+                    "n_purchases": [n_p],
+                    "purchase_value": [cents / 100.0],
+                    "n_events": [n_e],
+                }
+            )
+
     class PurchaseStats(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._state = handle.getValueState(
@@ -565,26 +555,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            # integer-cents state: see queries/money.py
-            n_p, cents, n_e = (
-                self._state.get() if self._state.exists() else (0, 0, 0)
-            )
-            for pdf in rows:
-                purchases = pdf[pdf["event_type"] == "purchase"]
-                n_p += len(purchases)
-                v = purchases["value"].dropna().to_numpy()
-                cents += int(np.rint(v * 100).astype("int64").sum())
-                n_e += len(pdf)
-            self._state.update((n_p, cents, n_e))
-            if n_p > 0:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "n_purchases": [n_p],
-                        "purchase_value": [cents / 100.0],
-                        "n_events": [n_e],
-                    }
-                )
+            stats = self._state.get() if self._state.exists() else (0, 0, 0)
+            return fold(key, stats, rows, self._state.update)
 
         def close(self) -> None:
             pass
@@ -610,24 +582,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
         def update(key, pdfs, state: GroupState):
-            # integer-cents state: see queries/money.py
-            n_p, cents, n_e = state.get if state.exists else (0, 0, 0)
-            for pdf in pdfs:
-                purchases = pdf[pdf["event_type"] == "purchase"]
-                n_p += len(purchases)
-                v = purchases["value"].dropna().to_numpy()
-                cents += int(np.rint(v * 100).astype("int64").sum())
-                n_e += len(pdf)
-            state.update((n_p, cents, n_e))
-            if n_p > 0:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "n_purchases": [n_p],
-                        "purchase_value": [cents / 100.0],
-                        "n_events": [n_e],
-                    }
-                )
+            stats = state.get if state.exists else (0, 0, 0)
+            return fold(key, stats, pdfs, state.update)
 
         out = ev.groupBy("user_id").applyInPandasWithState(
             update,

@@ -1,10 +1,10 @@
 """Replay the events parquet through Structured Streaming.
 
 ``readStream`` needs an explicit schema; we reuse the batch reader's
-(including the TIMESTAMP(NANOS) → bigint → timestamp conversion from
-``tables.t``). ``trigger(availableNow=True)`` processes the backlog and
-terminates — the deterministic replay mode that makes batch-stream
-equivalence testable (SURVEY §5.2 item 4).
+(including the TIMESTAMP(NANOS) → bigint → timestamp conversion of
+``tables.read_events``). ``trigger(availableNow=True)`` processes the
+backlog and terminates — the deterministic replay mode that makes
+batch-stream equivalence testable (SURVEY §5.2 item 4).
 
 At scale the same topology runs unmodified against a live source (Kafka
 / file drop): swap ``readStream.parquet`` for the real source; watermarks
@@ -18,20 +18,20 @@ import contextlib
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from muurschilderingendatabase_etl_spark import tables
 
-_STAGED: dict[tuple[str, str], str] = {}
-# Bytes of every staged stream-source directory, keyed by its path (set
-# by read_events_stream / stage_events_two_phase): sizes the state-store
-# partition default below. Keyed by PATH, not "most recently staged" —
-# a last-staged global picks the wrong size when staging calls
-# interleave with query execution (r10 ADVICE): source_bytes_of()
-# resolves the size of the source actually feeding a given stream by
-# matching these paths against its analyzed plan.
-_STAGED_BYTES: dict[str, int] = {}
+
+# Every staged stream source, keyed (applicationId, sf_dir, form): the
+# staged root and its bytes, recorded once when the root is built. The
+# bytes size the state-store partitions of each stream over that root
+# (stream_state_partitions), matched by PATH against the stream's plan,
+# so interleaved stagings never size one stream by another's source.
+_STAGED: dict[tuple[str, str, str], tuple[str, int]] = {}
 
 
 def _dir_bytes(path: str) -> int:
@@ -45,69 +45,58 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def source_bytes_of(stream_df: DataFrame) -> int:
-    """Bytes of the staged source(s) feeding ``stream_df``, resolved by
-    matching the staged directory paths against the stream's ANALYZED
-    plan — so the state-store sizing below follows the stream actually
-    being run, not whichever source happened to be staged last (r10
-    ADVICE: a last-staged module global mis-sizes interleaved stagings).
-
-    Falls back to the largest staged source this session when no staged
-    path appears in the plan (e.g. a rate source): conservative — more
-    state partitions, never fewer than the floor."""
-    try:
-        plan = stream_df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        plan = ""
-    total = sum(b for path, b in _STAGED_BYTES.items() if path in plan)
-    if total:
-        return total
-    return max(_STAGED_BYTES.values(), default=0)
+def _staged(
+    spark: SparkSession, sf_dir: str, form: str, build: Callable[[str], None]
+) -> str:
+    """Root of the ``form`` staging of ``sf_dir`` for this session, built
+    once by ``build(root)`` into a fresh temp dir. The root is reused for
+    the session and deleted at interpreter exit — the returned streams
+    read it lazily, so it must outlive every query over it."""
+    key = (spark.sparkContext.applicationId, sf_dir, form)
+    if key not in _STAGED:
+        root = tempfile.mkdtemp(prefix=f"msdb_{form}_stage_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        build(root)
+        _STAGED[key] = (root, _dir_bytes(root))
+    return _STAGED[key][0]
 
 
 @contextlib.contextmanager
-def stream_state_partitions(
-    spark: SparkSession,
-    n: int | None = None,
-    *,
-    source_bytes: int | None = None,
-):
-    """Temporarily size `spark.sql.shuffle.partitions` for a streaming
-    query start.
+def stream_state_partitions(stream_df: DataFrame):
+    """Temporarily size `spark.sql.shuffle.partitions` for starting the
+    streaming query over ``stream_df``.
 
     The stateful-operator partition count is LOCKED INTO THE CHECKPOINT
     when a streaming query first starts, so it must be sized to the
     query's state cardinality, not inherited from the batch default: each
     state partition is a state-store instance with per-micro-batch
     open/commit/snapshot overhead, which dominates when per-key state is
-    small (measured on the stream-stream joins: 32 -> 8 partitions cut
-    wall time from 8.0 s to 3.5 s at sf0.1 in r10; the r12 re-measure
-    under the parquet replay sink found 8 -> 4 saves a further ~0.3-0.6 s
-    per stream across three stateful shapes — tumbling agg 1.65 -> 1.21,
-    stream-stream join 3.3 -> 2.7, session window 1.7 -> 1.25 warm —
-    while 4 -> 2 is flat, so 4 is the new floor). At 100 TB scale this
-    knob goes UP with keyspace — the default scales with the bytes of the
-    stream's staged source (~one state partition per 64 MB): at sf100
-    (1.9 GB events) that is the difference between a few fat
-    single-threaded state stores and one per core. The core-count cap
-    DOMINATES the floor (``min(cores, max(4, ...))``): on a small machine
-    the count never exceeds the available parallelism — DELIBERATE (r11
-    ADVICE confirmed): fewer cores than the floor means the extra state
-    stores would just time-slice, and the floor figure was measured on
-    the 32-core bench host, which all BASELINE/BENCH numbers assume.
-    Pass ``source_bytes``
-    (see ``source_bytes_of``) to size for a specific stream; override
-    everything via SPARK_GRAFT_STREAM_STATE_PARTITIONS.
+    small (stream-stream joins at sf0.1: 32 -> 8 partitions cut wall time
+    from 8.0 s to 3.5 s; 8 -> 4 saves ~0.3-0.6 s per stream across the
+    tumbling, join and session shapes, while 4 -> 2 is flat — so 4 is the
+    floor). At scale the count goes UP with keyspace: ~one state
+    partition per 64 MB of the stream's staged source, so at sf100
+    (1.9 GB events) there is one state store per core rather than a few
+    fat single-threaded ones. The core-count cap DOMINATES the floor
+    (``min(cores, max(4, ...))``): with fewer cores than the floor the
+    extra state stores would only time-slice.
+
+    The source is the staged root(s) whose path appears in the stream's
+    ANALYZED plan; with none (e.g. a rate source) it falls back to the
+    largest staged source — more state partitions, never fewer than the
+    floor.
     """
-    if n is None:
-        env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-        if env is not None:
-            n = int(env)
-        else:
-            if source_bytes is None:
-                source_bytes = max(_STAGED_BYTES.values(), default=0)
-            cores = spark.sparkContext.defaultParallelism
-            n = min(cores, max(4, source_bytes // (64 << 20)))
+    spark = stream_df.sparkSession
+    try:
+        plan = stream_df._jdf.queryExecution().analyzed().toString()
+    except Exception:
+        plan = ""
+    staged = _STAGED.values()
+    source_bytes = sum(b for root, b in staged if root in plan) or max(
+        (b for _root, b in staged), default=0
+    )
+    cores = spark.sparkContext.defaultParallelism
+    n = min(cores, max(4, source_bytes // (64 << 20)))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -121,50 +110,32 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory, so stage the events parquet into a session-scoped temp
     dir once per sf_dir, then readStream from it.
 
-    Staging is a SYMLINK of the raw fixture file (r13): the r12 shape
-    rewrote the timestamp-normalized table through a full Spark write
-    (~3.2 s at sf0.1, paid by the first streaming query of every
-    session), but the only thing the rewrite added was the ts
-    conversion — which is a per-row expression that belongs ON the
-    stream (exactly what tables.t applies to the batch frame). A file
-    appearing in the watched directory is the file-drop contract
-    itself; the source follows the link and reads the same bytes.
-    Falls back to the staged write when symlinks are unavailable or
-    the fixture is already a directory dataset."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    staged = _STAGED.get(key)
-    if staged is None:
-        staged = tempfile.mkdtemp(prefix="msdb_events_stage_")
-        # session-scoped reuse, deleted at interpreter exit (the staged
-        # write era measured 184 MB per sf_dir at sf10; a symlink dir
-        # is bytes, but the same lifetime discipline applies)
-        atexit.register(shutil.rmtree, staged, ignore_errors=True)
+    Staging is a SYMLINK of the raw fixture file: a file appearing in the
+    watched directory is the file-drop contract itself, the source
+    follows the link and reads the same bytes, and the ts conversion is
+    a per-row expression applied ON the stream (exactly what tables.t
+    applies to the batch frame), so nothing is rewritten. Falls back to
+    a staged Spark write of the normalized table when symlinks are
+    unavailable or the fixture is already a directory dataset."""
+
+    def build(root: str) -> None:
         src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
         try:
             if os.path.isdir(src):
                 raise OSError("directory dataset — stage a real copy")
-            os.symlink(src, os.path.join(staged, "events.parquet"))
+            os.symlink(src, os.path.join(root, "events.parquet"))
         except OSError:
-            from muurschilderingendatabase_etl_spark.tables import t
+            tables.t(spark, sf_dir, "events").write.mode("overwrite").parquet(root)
 
-            t(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
-        _STAGED[key] = staged
-    _STAGED_BYTES[staged] = _dir_bytes(staged)
-    # Raw fixture ts is TIMESTAMP(NANOS) (read as int64 via the legacy
-    # conf) or TIMESTAMP_NTZ depending on fixture era; normalize on the
-    # stream with the SAME conversions tables.t applies to the batch
-    # frame, so stream and batch frames agree bit-for-bit.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(staged).schema
-    stream = spark.readStream.schema(schema).parquet(staged)
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    root = _staged(spark, sf_dir, "events", build)
+    # Same ts normalization as the batch frame, so stream and batch
+    # frames agree bit-for-bit.
+    return tables.read_events(
+        spark,
+        lambda: spark.readStream.schema(spark.read.parquet(root).schema).parquet(
+            root
+        ),
+    )
 
 
 def batch_sink(outdir: str):
@@ -209,10 +180,10 @@ def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame
     Sink: foreachBatch -> parquet, NOT format("memory"). The memory sink
     buffers every emitted row as JVM objects in the driver-side
     ArrayBuffer (plus a full clone at commit) — at sf100 the
-    session-window replay's ~30M-row result OOMed a 48 GB heap inside
-    MemoryDataWriter.commit (r10 mid-tier sweep). foreachBatch keeps the
-    write DISTRIBUTED and disk-backed at any scale while reproducing the
-    memory sink's contents exactly under availableNow replay:
+    session-window replay's ~30M-row result OOMs a 48 GB heap inside
+    MemoryDataWriter.commit. foreachBatch keeps the write DISTRIBUTED and
+    disk-backed at any scale while reproducing the memory sink's
+    contents exactly under availableNow replay:
 
     - complete mode re-emits the FULL state every micro-batch and the
       memory sink replaces its contents -> only the LAST batch is read
@@ -222,10 +193,10 @@ def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame
 
     Each micro-batch writes to its own ``batch-<id>`` subdirectory with
     mode=overwrite, which makes the sink IDEMPOTENT under foreachBatch's
-    at-least-once contract (r10 VERDICT item 2): a batch redelivered
-    after a partial write rewrites ITS OWN directory instead of
-    appending duplicate rows — the memory sink's once-per-batch
-    semantics (latestBatchId dedup) preserved by construction.
+    at-least-once contract: a batch redelivered after a partial write
+    rewrites ITS OWN directory instead of appending duplicate rows — the
+    memory sink's once-per-batch semantics (latestBatchId dedup)
+    preserved by construction.
     """
     spark = result.sparkSession
     ckpt = tempfile.mkdtemp(prefix="msdb_ckpt_")
@@ -235,9 +206,7 @@ def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame
     outdir = tempfile.mkdtemp(prefix="msdb_sink_")
     atexit.register(shutil.rmtree, outdir, ignore_errors=True)
     try:
-        with stream_state_partitions(
-            spark, source_bytes=source_bytes_of(result)
-        ):
+        with stream_state_partitions(result):
             query = (
                 result.writeStream.foreachBatch(batch_sink(outdir))
                 .outputMode(output_mode)
@@ -249,17 +218,13 @@ def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame
     finally:
         # The checkpoint exists only for THIS availableNow run — the
         # parquet sink holds the materialized rows once the query
-        # terminates, so the state-store snapshots are dead weight.
-        # Without this a long-lived session (bench: 13 streaming
-        # queries per run; the round driver: hundreds) leaks one
-        # checkpoint dir per execution — measured 318 MB each at sf10.
-        # A RESUMABLE production stream keeps its checkpoint; this
-        # helper is by contract a run-to-completion replay.
+        # terminates, so the state-store snapshots are dead weight, and
+        # a long-lived session would otherwise keep one checkpoint dir
+        # per execution (318 MB each at sf10). A RESUMABLE production
+        # stream keeps its checkpoint; this helper is by contract a
+        # run-to-completion replay.
         shutil.rmtree(ckpt, ignore_errors=True)
     return read_sink(spark, outdir, output_mode, result.schema)
-
-
-_STAGED2: dict[tuple[str, str], tuple[str, str]] = {}
 
 
 def stage_events_two_phase(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -272,36 +237,25 @@ def stage_events_two_phase(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     - stragglers: the withheld OLD rows (genuinely late once the first
       run's watermark is persisted) plus the final 2 days.
 
-    Returns (source_dir, parked_stragglers_path).
+    Returns (source_dir, parked_stragglers_path), both under one staged
+    root that holds exactly these two files.
     """
-    import os
 
-    from muurschilderingendatabase_etl_spark.tables import t
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STAGED2:
-        staged = tempfile.mkdtemp(prefix="msdb_events_2phase_")
-        atexit.register(shutil.rmtree, staged, ignore_errors=True)
-        srcdir = os.path.join(staged, "source")
-        os.makedirs(srcdir)
-        ev = t(spark, sf_dir, "events")
+    def build(root: str) -> None:
+        ev = tables.t(spark, sf_dir, "events")
         split = ev.selectExpr(
             "max(ts) - INTERVAL 2 DAYS AS tsplit"
         ).collect()[0]["tsplit"]
-        # ONE pass splits both phases (r13, guide §1.2): the r12 shape
-        # ran two filtered coalesce(1) writes — two full scans of the
-        # events pipeline for complementary predicates. A partitioned
-        # write of the phase flag emits both files from a single
-        # coalesce(1) task (no shuffle; partitionBy drops the flag
-        # column, so file schemas are unchanged). Row order within a
-        # file is irrelevant downstream: the consumer aggregates
-        # windowed counts and the per-run watermark is a batch-level
-        # max. Staging cost 4.3 s → 3.3 s cold at sf0.1 (the remaining
-        # cost is the split collect's first events scan + the write).
+        # ONE pass splits both phases: a partitioned write of the phase
+        # flag emits both files from a single coalesce(1) task (no
+        # shuffle; partitionBy drops the flag column, so file schemas
+        # are unchanged). Row order within a file is irrelevant
+        # downstream: the consumer aggregates windowed counts and the
+        # per-run watermark is a batch-level max.
         is_straggler = (F.col("ts") > F.lit(split)) | (
             F.col("event_id") % 50 == 0
         )
-        stage = staged + "/stage"
+        stage = os.path.join(root, "stage")
         (
             ev.withColumn(
                 "phase", F.when(is_straggler, "b").otherwise("a")
@@ -323,9 +277,10 @@ def stage_events_two_phase(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 d, next(p for p in os.listdir(d) if p.endswith(".parquet"))
             )
 
-        os.rename(_one_part("a"), f"{srcdir}/a_bulk.parquet")
-        parked = f"{staged}/b_stragglers.parquet"
-        os.rename(_one_part("b"), parked)
-        _STAGED2[key] = (srcdir, parked)
-    _STAGED_BYTES[_STAGED2[key][0]] = _dir_bytes(_STAGED2[key][0])
-    return _STAGED2[key]
+        os.makedirs(os.path.join(root, "source"))
+        os.rename(_one_part("a"), os.path.join(root, "source", "a_bulk.parquet"))
+        os.rename(_one_part("b"), os.path.join(root, "b_stragglers.parquet"))
+        shutil.rmtree(stage)
+
+    root = _staged(spark, sf_dir, "two_phase", build)
+    return os.path.join(root, "source"), os.path.join(root, "b_stragglers.parquet")

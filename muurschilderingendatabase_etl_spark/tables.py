@@ -8,6 +8,8 @@ where it matters.
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,62 +31,66 @@ TABLES = (
 ALWAYS_BROADCAST = frozenset({"region", "nation"})
 
 
-# Lazy-DataFrame memo, keyed by (applicationId, sf_dir, table). This is
-# CATALOG caching, not result caching: the cached object is an unexecuted
-# logical plan — every action over it re-reads the parquet files — it is
-# exactly what a registered catalog table gives a real deployment. It
-# exists because `spark.read.parquet` pays file-listing + footer schema
-# inference + relation analysis on EVERY call (measured 0.23-0.49 s per
-# call warm at sf0.1), and the bench suite makes ~280 such calls — tens
-# of seconds of pure re-resolution of ten never-changing fixture paths
-# (r12, guide §6 file listing / §7.3 driver-side planning cost). Keyed
-# by applicationId so a new session never sees a stale relation; fixture
-# dirs are immutable within a session by contract (tests that synthesize
-# fixtures use fresh tmp paths).
+# Lazy-DataFrame memo, keyed by (applicationId, id(spark), sf_dir, table).
+# This is CATALOG caching, not result caching: the cached object is an
+# unexecuted logical plan — every action over it re-reads the parquet
+# files — exactly what a registered catalog table gives a real
+# deployment. It exists because `spark.read.parquet` pays file listing +
+# footer schema inference + relation analysis on EVERY call (0.23-0.49 s
+# per call warm at sf0.1, ~280 calls per bench suite). Fixture dirs are
+# immutable within a session by contract (tests that synthesize fixtures
+# use fresh tmp paths).
+#
+# Key invariant: a cached DataFrame holds a reference to its session, so
+# while an entry lives its session cannot be collected and id(spark)
+# cannot be reused by another session object. id(spark) therefore tells
+# apart sessions that share an applicationId (newSession() siblings, each
+# with its own conf — nanosAsLong, shuffle overrides), and a hit never
+# hands out a DataFrame bound to a sibling session. Entries are never
+# evicted, so each session stays pinned for the life of the process.
 _DF_CACHE: dict[tuple[str, int, str, str], DataFrame] = {}
 
 
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table as a DataFrame.
+def read_events(spark: SparkSession, load: Callable[[], DataFrame]) -> DataFrame:
+    """The events table as ``load()`` reads it (a batch or a stream read
+    of events parquet), with ``ts`` normalized to a TIMESTAMP for every
+    fixture era.
 
-    events.ts is TIMESTAMP(NANOS) in parquet; Spark reads it as int64
-    nanos (spark.sql.legacy.parquet.nanosAsLong) and we convert to a
-    proper timestamp here (µs truncation — sub-µs never carries meaning
-    in this engine's operators).
+    events.parquet stores ts as INT64 TIMESTAMP(NANOS), which a vanilla
+    SparkSession rejects (PARQUET_TYPE_ILLEGAL). The legacy conf is
+    runtime-settable, so it is set here before ``load`` rather than relying
+    on the session having been built by session.get_spark() — any caller's
+    session (e.g. a bare ``SparkSession.builder`` one) must be able to
+    load every fixture table. Spark then reads ts as int64 nanos, converted to
+    a µs timestamp (sub-µs never carries meaning in this engine's
+    operators). A timestamp[us] (no tz) fixture reads as TIMESTAMP_NTZ,
+    which watermarks and unix_micros reject; session TZ is UTC
+    (session.get_spark), so the cast to TIMESTAMP is value-preserving and
+    matches DuckDB's naive-timestamp oracle.
     """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = load()
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one fixture table as a DataFrame (events via ``read_events``)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    # id(spark) alongside applicationId (r12 ADVICE): sessions created
-    # via newSession() share an applicationId but have their own conf;
-    # a cache hit must never hand a DataFrame bound to a sibling
-    # session (whose nanosAsLong / shuffle overrides would silently be
-    # the ones in effect). applicationId still anchors the lifetime —
-    # id() alone could collide after a session is GC'd and the address
-    # reused.
     key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
     cached = _DF_CACHE.get(key)
     if cached is not None:
         return cached
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        # events.parquet stores ts as INT64 TIMESTAMP(NANOS), which a vanilla
-        # SparkSession rejects (PARQUET_TYPE_ILLEGAL). The legacy conf is
-        # runtime-settable, so set it here defensively rather than relying on
-        # the session having been built by session.get_spark() — any caller's
-        # session (e.g. the round driver's bare builder) must be able to load
-        # every fixture table.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # TIMESTAMP(NANOS) fixture era: int64 nanos → µs timestamp.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # timestamp[us] (no tz) fixture era: Spark reads TIMESTAMP_NTZ,
-            # which watermarks/unix_micros reject. Session TZ is UTC
-            # (session.get_spark), so the cast to TIMESTAMP is
-            # value-preserving and matches DuckDB's naive-timestamp oracle.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = read_events(spark, lambda: spark.read.parquet(path))
+    else:
+        df = spark.read.parquet(path)
     _DF_CACHE[key] = df
     return df
 

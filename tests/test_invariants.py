@@ -389,16 +389,14 @@ def test_merge_upsert_cow_semantics(spark):
 
 
 def test_skyline_fast_form_equals_quadratic_oracle():
-    # The sf10 skyline check (scripts/skyline_sf10_check.py) replaces
+    # The sf10 skyline check (tests/scale_oracles.py) replaces
     # the registered quadratic NOT EXISTS oracle with an O(n log n)
     # running-max form. They are the same predicate split by the price
     # comparison (q.price < p.price | q.price = p.price); prove the
     # equivalence on real data where the quadratic side is feasible.
     import duckdb
-    import sys, os
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from skyline_sf10_check import FAST_SKYLINE
     import __spark_entry__ as mod
+    from tests.scale_oracles import FAST_SKYLINE
 
     con = duckdb.connect()
     con.sql(
@@ -412,7 +410,7 @@ def test_skyline_fast_form_equals_quadratic_oracle():
 
 
 def test_geo_grid_form_equals_allpairs_oracle():
-    # The sf10 geo check (scripts/geo_sf10_check.py) mirrors the grid
+    # The sf10 geo check (tests/scale_oracles.py) mirrors the grid
     # blocking in DuckDB because the registered all-pairs oracle is
     # ~1.5e11 haversines at sf10. Prove grid-form == all-pairs-form IN
     # DUCKDB on real data, so the at-scale check inherits the
@@ -420,10 +418,8 @@ def test_geo_grid_form_equals_allpairs_oracle():
     # +-1 lat cell and +-2 ring-wrapped lon cells cover the radius for
     # |lat| <= 60 — the same covering argument the Spark plan documents).
     import duckdb
-    import sys, os
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from geo_sf10_check import grid_oracle_sql
     import __spark_entry__ as mod
+    from tests.scale_oracles import grid_oracle_sql
 
     con = duckdb.connect()
     for t_ in ("supplier", "customer"):
@@ -439,7 +435,7 @@ def test_geo_grid_form_equals_allpairs_oracle():
 
 
 def test_pairminer_prefix_filter_forms_equal_allpairs_oracles():
-    # The sf10 pair-miner check (scripts/pairminer_sf10_check.py)
+    # The sf10 pair-miner check (tests/scale_oracles.py)
     # replaces the all-pairs candidate stage with prefix filtering
     # (Bayardo et al. WWW'07): Jaccard >= t forces >= ceil(t*|B|)
     # common tokens, which cannot all sit in B's ceil(t*|B|)-1 suffix
@@ -448,10 +444,8 @@ def test_pairminer_prefix_filter_forms_equal_allpairs_oracles():
     # oracle's own list_intersect, so values are computed identically.
     # Prove form-identity on real data for all three queries.
     import duckdb
-    import sys, os
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from pairminer_sf10_check import fast_oracle_sql
     import __spark_entry__ as mod
+    from tests.scale_oracles import fast_oracle_sql
 
     con = duckdb.connect()
     con.sql(

@@ -26,7 +26,8 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 from gen_sf import gen  # noqa: E402
-from pairminer_sf10_check import fast_oracle_sql  # noqa: E402
+
+from tests.scale_oracles import fast_oracle_sql
 
 
 @pytest.fixture(scope="module")

@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from muurschilderingendatabase_etl_spark.queries.streaming_windows import (
+    stream_late_data_drop,
     stream_session_window,
     stream_tumbling_window,
 )
@@ -122,21 +123,24 @@ def test_processing_time_soak_bounded_state(spark, tmp_path):
 
 
 def test_replay_leaves_no_scratch_dirs(spark):
-    """run_to_memory must delete its per-execution checkpoint dir once
-    the availableNow replay terminates (r7: a long-lived session leaked
-    one dir per streaming execution — 318 MB each at sf10, 13 per bench
-    run, hundreds per driver round). Session-scoped staging dirs may
-    exist (removed at interpreter exit); per-RUN checkpoints may not
+    """run_to_memory, and stream_late_data_drop with its own two-run
+    file sink, must delete their per-execution checkpoint dirs once the
+    availableNow replay terminates (a long-lived session would otherwise
+    keep one dir per streaming execution — 318 MB each at sf10, 13 per
+    bench run, hundreds per driver round). Session-scoped staging dirs
+    may exist (removed at interpreter exit); per-RUN checkpoints may not
     outlive the call."""
     import glob
 
-    before = set(glob.glob("/tmp/msdb_ckpt_*")) | set(
-        glob.glob("/tmp/msdb_feb_ckpt_*")
-    )
+    def ckpts() -> set[str]:
+        return set(glob.glob("/tmp/msdb_ckpt_*")) | set(
+            glob.glob("/tmp/msdb_late_*/ckpt")
+        )
+
+    before = ckpts()
     stream_tumbling_window(spark, SF_DIR).collect()
-    after = set(glob.glob("/tmp/msdb_ckpt_*")) | set(
-        glob.glob("/tmp/msdb_feb_ckpt_*")
-    )
+    stream_late_data_drop(spark, SF_DIR).collect()
+    after = ckpts()
     assert after - before == set(), (
         f"streaming replay leaked checkpoint dirs: {sorted(after - before)}"
     )
@@ -150,7 +154,9 @@ def test_staging_fallback_matches_symlink_path(spark, tmp_path, monkeypatch):
     from muurschilderingendatabase_etl_spark.streaming import replay
 
     def staged_by_write(sf_dir: str) -> bool:
-        staged = replay._STAGED[(spark.sparkContext.applicationId, sf_dir)]
+        staged, _bytes = replay._STAGED[
+            (spark.sparkContext.applicationId, sf_dir, "events")
+        ]
         return not os.path.islink(os.path.join(staged, "events.parquet"))
 
     expected = _sorted_rows(stream_tumbling_window(spark, SF_DIR))
@@ -172,6 +178,36 @@ def test_staging_fallback_matches_symlink_path(spark, tmp_path, monkeypatch):
     shutil.copy(src, file_sf / "events.parquet")
     assert _sorted_rows(stream_tumbling_window(spark, str(file_sf))) == expected
     assert staged_by_write(str(file_sf))
+
+
+def test_state_partitions_follow_each_streams_source(spark, monkeypatch):
+    """stream_state_partitions sizes each stream from the staged source
+    in its own plan, not from whichever source was staged last: with
+    both forms staged, a stream over the events staging and one over the
+    two-phase staging get different counts, and the old value is back
+    after each start."""
+    from pyspark import SparkContext
+
+    from muurschilderingendatabase_etl_spark.streaming import replay
+
+    events = replay.read_events_stream(spark, SF_DIR)
+    bulk_dir, _parked = replay.stage_events_two_phase(spark, SF_DIR)
+    two_phase = spark.readStream.schema(
+        spark.read.parquet(bulk_dir).schema
+    ).parquet(bulk_dir)
+    app = spark.sparkContext.applicationId
+    for form, size in (("events", 1 << 30), ("two_phase", 512 << 20)):
+        root, _bytes = replay._STAGED[(app, SF_DIR, form)]
+        monkeypatch.setitem(replay._STAGED, (app, SF_DIR, form), (root, size))
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: 64)
+    )
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    # one state partition per 64 MiB of source, under the 64-core cap
+    for stream, want in ((events, "16"), (two_phase, "8")):
+        with replay.stream_state_partitions(stream):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == want
+        assert spark.conf.get("spark.sql.shuffle.partitions") == old
 
 
 def test_batch_sink_idempotent_under_redelivery(spark):
@@ -259,7 +295,7 @@ def test_parquet_sink_reproduces_memory_sink(spark, output_mode):
     name = f"ab_mem_{uuid.uuid4().hex[:10]}"
     ckpt = tempfile.mkdtemp(prefix="msdb_abmem_ckpt_")
     try:
-        with stream_state_partitions(spark):
+        with stream_state_partitions(agg):
             q = (
                 agg.writeStream.format("memory")
                 .queryName(name)
