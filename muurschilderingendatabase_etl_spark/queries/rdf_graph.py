@@ -223,19 +223,14 @@ def rdf_rest_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle regenerates the expected 300 triples relationally —
     the page loop, early stop, and Turtle parse all sit under the
     DuckDB hash gate instead of a rows-only count."""
-    from muurschilderingendatabase_etl_spark.rdf.source import scan_paginated
+    from muurschilderingendatabase_etl_spark.rdf.source import (
+        PER_PAGE,
+        scan_paginated,
+        stub_page,
+    )
 
-    def fetcher(page: int) -> str:
-        if page > 3:
-            return ""  # empty page -> early stop (export:43-47)
-        lines = [
-            f'<https://muurschilderingendatabase.nl/item/{(page - 1) * 100 + i}> '
-            f'<http://purl.org/dc/terms/title> "item {(page - 1) * 100 + i}" .'
-            for i in range(100)
-        ]
-        return "\n".join(lines)
-
-    parsed = scan_paginated(spark, fetcher)
+    # Page 4 is empty -> early stop (export:43-47).
+    parsed = scan_paginated(spark, lambda page: stub_page(page, 3, PER_PAGE))
     return triples_only(parsed).select("s", "p", "o").orderBy("s", "p", "o")
 
 

@@ -30,6 +30,8 @@ query.
 
 from __future__ import annotations
 
+import importlib.util
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -484,6 +486,17 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _has_protobuf() -> bool:
+    """Whether ``google.protobuf`` is importable: the gate between the
+    two paths of stream_transform_with_state."""
+    try:
+        # find_spec raises for a missing PARENT package ('google'), so
+        # probe rather than test for None.
+        return importlib.util.find_spec("google.protobuf") is not None
+    except ModuleNotFoundError:
+        return False
+
+
 @query(
     "stream_transform_with_state",
     oracle="""
@@ -515,9 +528,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState — identical semantics and state shape, so the
     oracle contract holds either way. Only the path the host supports
     runs: images without protobuf oracle-check the fallback, and the TWS
-    path runs wherever protobuf is installed."""
-    import importlib.util
-
+    path runs wherever protobuf is installed. The gate, _has_protobuf,
+    is unit-tested in tests/test_streaming.py."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
@@ -565,13 +577,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_schema = (
         "user_id long, n_purchases long, purchase_value double, n_events long"
     )
-    try:
-        # find_spec raises for a missing PARENT package ('google'), so
-        # probe rather than test for None.
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if has_protobuf:
+    if _has_protobuf():
         out = ev.groupBy("user_id").transformWithStateInPandas(
             PurchaseStats(),
             outputStructType=out_schema,

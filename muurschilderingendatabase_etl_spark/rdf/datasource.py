@@ -26,23 +26,13 @@ from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-MAX_PAGES = 99  # range(1, 100), export_from_omeka_s.py:38
-EMPTY_PAGE_THRESHOLD = 2  # body length <= 2 bytes = empty page (export:43)
-HTTP_TIMEOUT_S = 200  # export:40
-
-
-def _stub_page(page: int, pages: int, per_page: int) -> str:
-    """Deterministic synthetic Turtle page (tests / driver harness —
-    no network). Mirrors the stub in queries/rdf_graph.py so both scan
-    paths produce identical corpora."""
-    if page > pages:
-        return ""
-    lines = [
-        f"<https://muurschilderingendatabase.nl/item/{(page - 1) * per_page + i}> "
-        f'<http://purl.org/dc/terms/title> "item {(page - 1) * per_page + i}" .'
-        for i in range(per_page)
-    ]
-    return "\n".join(lines)
+from muurschilderingendatabase_etl_spark.rdf.source import (
+    EMPTY_PAGE_THRESHOLD,
+    MAX_PAGES,
+    PER_PAGE,
+    http_page_fetcher,
+    stub_page,
+)
 
 
 class OmekaRestReader(DataSourceReader):
@@ -50,7 +40,6 @@ class OmekaRestReader(DataSourceReader):
         self.mode = options.get("mode", "stub")
         self.base_url = options.get("base_url", "")
         self.pages = int(options.get("pages", 3))
-        self.per_page = int(options.get("per_page", 100))
         self.max_pages = int(options.get("max_pages", MAX_PAGES))
         if self.mode == "live" and not self.base_url:
             raise ValueError("mode=live requires option base_url")
@@ -64,20 +53,10 @@ class OmekaRestReader(DataSourceReader):
     def read(self, partition):
         page = partition.value
         if self.mode == "stub":
-            body = _stub_page(page, self.pages, self.per_page)
+            body = stub_page(page, self.pages, PER_PAGE)
         else:
-            from urllib.request import urlopen
-
-            # rstrip-normalized so a base_url without a trailing slash
-            # doesn't silently produce a malformed URL (which the tolerant
-            # OSError policy below would mask as an empty scan).
-            url = (
-                f"{self.base_url.rstrip('/')}/api/items?format=turtle"
-                f"&page={page}&per_page={self.per_page}"
-            )
             try:
-                with urlopen(url, timeout=HTTP_TIMEOUT_S) as resp:
-                    body = resp.read().decode("utf-8")
+                body = http_page_fetcher(self.base_url)(page)
             except OSError:
                 # O8 tolerant policy (export:29,86-89): a failed page
                 # yields no rows rather than failing the scan.

@@ -29,21 +29,41 @@ log = logging.getLogger(__name__)
 PageFetcher = Callable[[int], str]
 
 MAX_PAGES = 99  # range(1, 100), export_from_omeka_s.py:38
+PER_PAGE = 100  # export:38
 EMPTY_PAGE_THRESHOLD = 2  # body length <= 2 bytes means empty (export:43)
 HTTP_TIMEOUT_S = 200  # export:40,74; transform:98
 
 
 def http_page_fetcher(base_url: str) -> PageFetcher:
-    """Live fetcher for the Omeka S items endpoint. SSL errors are
-    caught by the caller per the reference's tolerant policy (O8)."""
+    """Live fetcher for the Omeka S items endpoint. ``base_url`` may or
+    may not end in a slash; either way page N is requested from
+    ``{base}/api/items``. SSL errors are caught by the caller per the
+    reference's tolerant policy (O8)."""
     from urllib.request import urlopen
 
+    base = base_url.rstrip("/")
+
     def fetch(page: int) -> str:
-        url = f"{base_url}api/items?format=turtle&page={page}&per_page=100"
+        url = f"{base}/api/items?format=turtle&page={page}&per_page={PER_PAGE}"
         with urlopen(url, timeout=HTTP_TIMEOUT_S) as resp:
             return resp.read().decode("utf-8")
 
     return fetch
+
+
+def stub_page(page: int, pages: int, per_page: int) -> str:
+    """Deterministic synthetic Turtle page: ``per_page`` titled items on
+    each of pages 1..``pages``, then empty pages. No network: both
+    registered REST scan queries read it, and their oracle regenerates
+    it in SQL."""
+    if page > pages:
+        return ""
+    first = (page - 1) * per_page
+    return "\n".join(
+        f"<https://muurschilderingendatabase.nl/item/{i}> "
+        f'<http://purl.org/dc/terms/title> "item {i}" .'
+        for i in range(first, first + per_page)
+    )
 
 
 def scan_paginated(spark: SparkSession, fetcher: PageFetcher) -> DataFrame:

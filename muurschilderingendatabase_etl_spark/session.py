@@ -1,10 +1,11 @@
 """SparkSession factory.
 
-Defaults are chosen for the driver environment (local[32], 128 GiB) but the
-knobs are the ones that matter on a real cluster too: AQE for runtime
-re-planning (coalesce post-shuffle partitions, skew-join splitting), Arrow
-for any Python<->JVM exchange, UTC session time zone for deterministic
-timestamp semantics against the DuckDB oracle.
+The master defaults to local[*] (all cores, or SPARK_GRAFT_CPUS) and the
+driver heap to 8g (SPARK_GRAFT_DRIVER_MEM), but the knobs are the ones
+that matter on a real cluster too: AQE for runtime re-planning (coalesce
+post-shuffle partitions, skew-join splitting), Arrow for any Python<->JVM
+exchange, UTC session time zone for deterministic timestamp semantics
+against the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -17,14 +18,12 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "muurschilderingendatabase-etl-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -46,10 +45,7 @@ def get_spark(
         # tiny shuffles back to a handful of partitions. Stateful
         # streaming is untouched (no AQE there; stream_state_partitions
         # owns that knob via spark.sql.shuffle.partitions).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "512"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
         # Arrow batches for pandas UDFs / toPandas — the only acceptable
         # Python exchange path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -46,13 +46,6 @@ HEADLINERS = [
     "heavy_hitters_two_pass",
     "stats_histogram_bins",
     "geo_distance_join_grid",
-    # NOTE: graph_pagerank_fixed runs eager Spark jobs at DataFrame-
-    # construction time (localCheckpoint + 8 checkpointed iterations),
-    # so auditing it pays the full execution cost and the printed plan
-    # reflects only the FINAL iteration (earlier rounds are behind the
-    # checkpoint cut). Kept in the audit deliberately — the final-round
-    # plan is the repeated shape — but don't expect it to be cheap.
-    "graph_pagerank_fixed",
     "skyline_pareto_frontier",
     "sink_zorder_2d_skipping",
     "text_lang_id",

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 
 from muurschilderingendatabase_etl_spark import registry
@@ -397,37 +398,50 @@ def test_span_dedup_semi_join(spark):
     assert "LeftSemi" in p
 
 
-def test_pagerank_broadcasts_ranks(spark, monkeypatch):
-    """Each PageRank iteration must broadcast the node-cardinality rank
-    table — the cached edge table is never re-shuffled for the join.
-    The r13 small-graph path persists its edge cache (dst-partitioned,
-    zero-exchange contribution agg) and therefore checkpoints the
-    returned frame before releasing it; introspect the lazy plan by
-    keeping the cache alive for this run (same device as the
-    nonbroadcast-path test). Also pin the zero-exchange property: no
-    shuffle may sit between the cache scan and the final aggregate."""
+def _executed_pagerank(spark, sf_dir=SF_DIR):
+    """Run PageRank and return (frame, executed plan of its final
+    localCheckpoint). The returned frame is a checkpoint, so the plan
+    over the edge cache is read from the SQL status store; that store
+    is filled by an asynchronous listener, hence the drain."""
     from muurschilderingendatabase_etl_spark.queries import graph
 
-    monkeypatch.setattr(graph, "_RELEASE_FALLBACK_CACHE", False)
-    try:
-        p = _plan(spark, "graph_pagerank_fixed")
-        assert "BroadcastHashJoin" in p
-        assert "InMemoryTableScan" in p
-        # dst-partitioned cache feeds groupBy(dst): the contribution
-        # aggregation runs with NO exchange. Its shuffle — present in
-        # the r12 coalesce-pinned shape — is the planner-inserted
-        # "hashpartitioning(dst#NNL, <n>), ENSURE_REQUIREMENTS"
-        # exchange (exactly 1 match in the committed before plan,
-        # plans/r13, and 0 in the after plan). The dst exchanges that
-        # remain are the ONE-TIME cache build (REPARTITION_BY_NUM
-        # inside the InMemoryRelation lineage), not per-iteration work.
-        import re
+    df = graph.graph_pagerank_fixed(spark, sf_dir)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return df, executions.last().physicalPlanDescription()
 
-        assert not re.search(
-            r"hashpartitioning\(dst#\d+L, \d+\), ENSURE_REQUIREMENTS", p
-        )
-    finally:
-        spark.catalog.clearCache()
+
+# The per-iteration contribution aggregation's shuffle, had the edge
+# cache not been partitioned on dst: the planner-inserted exchange (1
+# match in plans/r13/graph_pagerank_fixed_before.txt, 0 after). At
+# sf0.01 and below the cache is a single partition, which satisfies any
+# clustering, so the check only bites on multi-partition caches.
+_DST_AGG_EXCHANGE = re.compile(
+    r"hashpartitioning\(dst#\d+L, \d+\), ENSURE_REQUIREMENTS"
+)
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _disk_only_rdds(spark) -> set[int]:
+    """Ids of the persisted RDDs held only on disk. The rank checkpoints
+    are memory-and-disk; other queries' DISK_ONLY checkpoints may still
+    be held by the shared session, so compare before and after."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {i for i, rdd in rdds.items() if not rdd.getStorageLevel().useMemory()}
+
+
+def test_pagerank_broadcasts_ranks(spark):
+    """Each PageRank iteration must broadcast the node-cardinality rank
+    table — the cached edge table is never re-shuffled for the join —
+    and the dst-partitioned cache feeds groupBy(dst), so no shuffle may
+    sit between the cache scan and the final aggregate."""
+    _, p = _executed_pagerank(spark)
+    assert "BroadcastHashJoin" in p
+    assert "InMemoryTableScan" in p
+    assert not _DST_AGG_EXCHANGE.search(p)
 
 
 def test_pagerank_nonbroadcast_path_same_ranks(spark, monkeypatch):
@@ -440,6 +454,7 @@ def test_pagerank_nonbroadcast_path_same_ranks(spark, monkeypatch):
     the plan (InMemoryTableScan feeding the join, no hint)."""
     from muurschilderingendatabase_etl_spark.queries import graph
 
+    spark.catalog.clearCache()
     base = {
         (r.node, r.pr)
         for r in graph.graph_pagerank_fixed(spark, SF_DIR).collect()
@@ -448,30 +463,42 @@ def test_pagerank_nonbroadcast_path_same_ranks(spark, monkeypatch):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        # Plan introspection needs the lazy frame: keep the edge cache
-        # alive for this first run only.
-        monkeypatch.setattr(graph, "_RELEASE_FALLBACK_CACHE", False)
-        df = graph.graph_pagerank_fixed(spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        p = buf.getvalue()
+        df, p = _executed_pagerank(spark)
         assert "InMemoryTableScan" in p
         assert "BroadcastHashJoin" not in p
         got = {(r.node, r.pr) for r in df.collect()}
-        spark.catalog.clearCache()  # drop the deliberately-kept cache
-        # Production default releases the edge cache before returning
-        # (r5 ADVICE): same ranks, and no persisted RDD left behind.
-        monkeypatch.setattr(graph, "_RELEASE_FALLBACK_CACHE", True)
-        df2 = graph.graph_pagerank_fixed(spark, SF_DIR)
-        got2 = {(r.node, r.pr) for r in df2.collect()}
-        assert got2 == base
         # the returned frame is checkpointed, so it no longer depends on
         # the (now released) edge cache
-        assert "ExistingRDD" in df2._jdf.queryExecution().simpleString()
+        assert "ExistingRDD" in df._jdf.queryExecution().simpleString()
+        assert _cache_empty(spark)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert got == base
+
+
+def test_pagerank_disk_cache_same_ranks(spark, monkeypatch):
+    """Above DISK_CACHE_MIN_BYTES both caches are sorted and kept
+    DISK_ONLY. Forcing that regime at sf0.01 must give the in-memory
+    regime's ranks, keep the zero-exchange contribution aggregation,
+    and release the disk caches before returning."""
+    from muurschilderingendatabase_etl_spark.queries import graph
+
+    sf_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
+    spark.catalog.clearCache()
+    base = {
+        (r.node, r.pr)
+        for r in graph.graph_pagerank_fixed(spark, sf_dir).collect()
+    }
+    monkeypatch.setattr(graph, "DISK_CACHE_MIN_BYTES", 0)
+    disk_before = _disk_only_rdds(spark)
+    df, p = _executed_pagerank(spark, sf_dir)
+    assert "StorageLevel(disk, 1 replicas)" in p
+    assert "StorageLevel(disk, memory" not in p
+    assert not _DST_AGG_EXCHANGE.search(p)
+    assert "ExistingRDD" in df._jdf.queryExecution().simpleString()
+    assert _cache_empty(spark)
+    assert not _disk_only_rdds(spark) - disk_before
+    assert {(r.node, r.pr) for r in df.collect()} == base
 
 
 def test_geo_grid_join_no_cartesian(spark):

@@ -315,6 +315,52 @@ def test_paginated_source_ssl_tolerance(spark):
     assert triples_only(parsed).count() == 1
 
 
+def _live_reader_page(base_url: str, page: int) -> list:
+    """Rows the omeka_rest DataSource reader yields for one page,
+    read in the driver."""
+    from pyspark.sql.datasource import InputPartition
+
+    from muurschilderingendatabase_etl_spark.rdf.datasource import OmekaRestReader
+
+    reader = OmekaRestReader({"mode": "live", "base_url": base_url})
+    return list(reader.read(InputPartition(page)))
+
+
+@pytest.mark.parametrize(
+    "base_url", ["https://example.org/omeka", "https://example.org/omeka/"]
+)
+def test_rest_reader_and_fetcher_request_same_url(monkeypatch, base_url):
+    """The serial fetcher and the DataSource reader build one URL, with
+    or without a trailing slash on the base."""
+    import io
+    import urllib.request
+
+    from muurschilderingendatabase_etl_spark.rdf.source import http_page_fetcher
+
+    body = f'<{ITEM}1> <{DCTERMS}title> "a" .'
+    urls: list[str] = []
+
+    def fake_urlopen(url, timeout):
+        urls.append(url)
+        return io.BytesIO(body.encode())
+
+    monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
+    assert http_page_fetcher(base_url)(2) == body
+    assert _live_reader_page(base_url, 2) == [(2, body)]
+    want = "https://example.org/omeka/api/items?format=turtle&page=2&per_page=100"
+    assert urls == [want, want]
+
+
+def test_rest_reader_failed_page_yields_no_rows(monkeypatch):
+    import urllib.request
+
+    def fake_urlopen(url, timeout):
+        raise OSError("connection refused")
+
+    monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
+    assert _live_reader_page("https://example.org/omeka/", 1) == []
+
+
 def test_prefix_bindings_backslash_strip():
     body = '{"@context": {"dcterms": "http:\\\\//purl.org/dc/terms/", "n": 3}}'
     assert fetch_prefix_bindings(body) == {"dcterms": "http://purl.org/dc/terms/"}

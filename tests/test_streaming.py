@@ -309,3 +309,31 @@ def test_parquet_sink_reproduces_memory_sink(spark, output_mode):
         assert _sorted_rows(got) == _sorted_rows(want)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "find_spec, expected",
+    [
+        ("missing_parent", False),
+        ("none", False),
+        ("spec", True),
+    ],
+)
+def test_protobuf_gate(monkeypatch, find_spec, expected):
+    """stream_transform_with_state takes the transformWithStateInPandas
+    path only when google.protobuf is importable. find_spec raises for
+    a missing parent package and returns None for a missing leaf."""
+    import importlib.machinery
+    import importlib.util
+
+    from muurschilderingendatabase_etl_spark.queries import streaming_windows
+
+    def fake_find_spec(name):
+        if find_spec == "missing_parent":
+            raise ModuleNotFoundError("No module named 'google'")
+        if find_spec == "none":
+            return None
+        return importlib.machinery.ModuleSpec(name, None)
+
+    monkeypatch.setattr(importlib.util, "find_spec", fake_find_spec)
+    assert streaming_windows._has_protobuf() is expected
