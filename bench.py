@@ -3,6 +3,10 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and print ONE JSON line with per-query wall-clock seconds.
 
+Usage: python bench.py [name ...]
+       (names restrict the timed loop to those queries, in the order given;
+       an unknown name exits non-zero and lists it)
+
 Each query is materialized with the noop sink (full execution, no driver
 collect overhead). One warm-up run of the flagship query amortizes JVM/
 codegen startup out of the numbers.
@@ -15,6 +19,7 @@ import os
 import re
 import sys
 import time
+from collections.abc import Sequence
 
 from muurschilderingendatabase_etl_spark import registry
 from muurschilderingendatabase_etl_spark.session import get_spark
@@ -75,14 +80,18 @@ def _cpu_snapshot():
         return None
 
 
-def main() -> None:
+def main(names: Sequence[str] = ()) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
+    queries = registry.all_queries()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        sys.exit(f"unknown query names: {unknown}")
+
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = registry.all_queries()
 
     # Warm-up: JVM JIT, codegen, parquet footer caches.
     materialize(queries["flagship_revenue_by_nation"](spark, sf_dir))
@@ -95,7 +104,7 @@ def main() -> None:
         load_start = None
 
     timings: dict[str, float] = {}
-    for name in sorted(queries):
+    for name in names or sorted(queries):
         t0 = time.perf_counter()
         try:
             materialize(queries[name](spark, sf_dir))
@@ -162,4 +171,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -153,7 +153,7 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("pr")
     )
-    for _ in range(N_ITER):
+    for i in range(N_ITER):
         # Pre-scale ranks by 1/deg at node cardinality, then join the
         # bare edges.
         scaled = ranks.join(deg, ranks.node == deg.src).select(
@@ -167,13 +167,18 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Checkpointed so that iteration i does not re-execute 1..i-1,
         # and so that the result outlives the caches released below.
-        ranks = contrib.select(
+        prev, ranks = ranks, contrib.select(
             F.col("dst").alias("node"),
             (
                 F.lit((1 - DAMPING) / n_nodes)
                 + F.lit(DAMPING) * F.col("c")
             ).alias("pr"),
         ).localCheckpoint()
+        if i:
+            # The eager checkpoint cut the lineage, so the previous one
+            # is never read again. Its blocks belong to the RDD under its
+            # LogicalRDD, which DataFrame.unpersist() does not reach.
+            prev._jdf.queryExecution().analyzed().rdd().unpersist(False)
     # Release the executor storage: in a long-lived session the caches
     # would otherwise outlive the query.
     e.unpersist()

@@ -30,7 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from muurschilderingendatabase_etl_spark.registry import query
-from muurschilderingendatabase_etl_spark.tables import t
+from muurschilderingendatabase_etl_spark.tables import rm_at_exit, t
 
 
 def _media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,10 +131,9 @@ def _ppm_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     if sf_dir not in _PPM_CACHE:
-        from muurschilderingendatabase_etl_spark.queries.scans import _rm_at_exit
         import tempfile
 
-        path = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_ppm_"))
+        path = rm_at_exit(tempfile.mkdtemp(prefix="msdb_ppm_"))
         docs = t(spark, sf_dir, "documents").select("doc_id")
 
         def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

@@ -13,7 +13,6 @@ not single files.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 import tempfile
@@ -23,24 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from muurschilderingendatabase_etl_spark.registry import query
 from muurschilderingendatabase_etl_spark.queries import money
-from muurschilderingendatabase_etl_spark.tables import t
+from muurschilderingendatabase_etl_spark.tables import disk_bytes, rm_at_exit, t
 
 
 # Output dir of the most recent sink_compact_small_files run in this
 # process — lets tests assert file counts without mtime-glob guessing.
 LAST_COMPACT_DIR: str | None = None
-
-
-def _rm_at_exit(path: str) -> str:
-    """Delete a scratch dir when the interpreter exits.
-
-    Deferred (not eager) because every sink query returns a LAZY read
-    over the path it just wrote — the caller collects after we return.
-    By interpreter exit all Spark jobs are done, so the delete is safe,
-    and tmp no longer accumulates one directory per session.
-    """
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
 
 
 def _write_partitions(spark: SparkSession, sf_dir: str, table: str) -> int:
@@ -50,24 +37,7 @@ def _write_partitions(spark: SparkSession, sf_dir: str, table: str) -> int:
     a 60 MB fixture), and the fan-out still reaches every core once the
     table is ≥ 64 MB × cores (sf10+), preserving the r7 lesson that a
     constant small fan-out is the one true scale killer here."""
-    # os.walk handles both single-file fixtures and directory-style
-    # parquet datasets (r12 ADVICE: getsize on a directory returns the
-    # ~4 KB inode size, silently collapsing the write to 1 partition —
-    # the exact r7 scale-killer this function exists to prevent).
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(src):
-        nbytes = 0
-        for root, _dirs, files in os.walk(src):
-            for f in files:
-                try:
-                    nbytes += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    else:
-        try:
-            nbytes = os.path.getsize(src)
-        except OSError:
-            nbytes = 0
+    nbytes = disk_bytes(os.path.join(sf_dir, f"{table}.parquet"))
     par = spark.sparkContext.defaultParallelism
     return max(1, min(par, nbytes // (64 << 20) + 1))
 
@@ -104,7 +74,7 @@ def scan_parquet_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Distributed CSV write + schema-explicit read back (header mode).
     # Session-scoped path: fixed paths race under concurrent sessions.
-    path = _rm_at_exit(os.path.join(
+    path = rm_at_exit(os.path.join(
         tempfile.gettempdir(),
         f"msdb_spark_csv_nation_{spark.sparkContext.applicationId}",
     ))
@@ -121,7 +91,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JSON-lines write + explicit-schema read (inference would also work but
     # is a full extra pass at scale). Session-scoped path (see CSV note).
-    path = _rm_at_exit(os.path.join(
+    path = rm_at_exit(os.path.join(
         tempfile.gettempdir(),
         f"msdb_spark_json_customer_{spark.sparkContext.applicationId}",
     ))
@@ -146,7 +116,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Write an aggregate to parquet and read it back — sink + source parity.
     # Path is session-scoped: a FIXED path raced when two sessions (e.g.
     # the driver check and a concurrent test run) overwrote it mid-read.
-    path = _rm_at_exit(os.path.join(
+    path = rm_at_exit(os.path.join(
         tempfile.gettempdir(),
         f"msdb_spark_parquet_sink_{spark.sparkContext.applicationId}",
     ))
@@ -187,7 +157,7 @@ def scan_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagging under the DuckDB hash gate."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    tmp = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_corrupt_json_"))
+    tmp = rm_at_exit(tempfile.mkdtemp(prefix="msdb_corrupt_json_"))
     path = os.path.join(tmp, "part-0.json")
     with open(path, "w", encoding="utf-8") as f:
         f.write(
@@ -230,7 +200,7 @@ def scan_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC write + read round-trip (Spark's second columnar format);
     aggregation over the re-read copy must match the original."""
-    tmp = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_orc_"))
+    tmp = rm_at_exit(tempfile.mkdtemp(prefix="msdb_orc_"))
     t(spark, sf_dir, "orders").write.mode("overwrite").orc(tmp)
     return (
         spark.read.orc(tmp)
@@ -259,7 +229,7 @@ def sink_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     — directories for other years are never opened. THE layout lever at
     100 TB: time-partitioned facts make every time-bounded query touch
     only its slice."""
-    tmp = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_part_"))
+    tmp = rm_at_exit(tempfile.mkdtemp(prefix="msdb_part_"))
     staged = t(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate")
     )
@@ -311,7 +281,7 @@ def sink_managed_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared warehouse forever (one per applicationId); reclaim it when
     # this interpreter exits (the returned frame is collected well before
     # then, and the catalog entry dies with the session anyway).
-    _rm_at_exit(f"{warehouse}/{table}")
+    rm_at_exit(f"{warehouse}/{table}")
     (
         t(spark, sf_dir, "nation")
         .select("n_nationkey", "n_regionkey", F.lit(False).alias("is_extra"))
@@ -352,7 +322,7 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML write + read round-trip (Spark 4 native XML source) with an
     explicit schema on the read-back — the config/feed interchange format
     the reference world (Omeka/RDF tooling) still speaks."""
-    tmp = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_xml_"))
+    tmp = rm_at_exit(tempfile.mkdtemp(prefix="msdb_xml_"))
     (
         t(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
@@ -393,7 +363,7 @@ def sink_sorted_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     for high-cardinality sort keys; the same layout lever as Z-ordering
     on a single dimension). At 100 TB: range-partition by date, sort
     within, and time-bounded scans touch only their row groups."""
-    tmp = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_sorted_"))
+    tmp = rm_at_exit(tempfile.mkdtemp(prefix="msdb_sorted_"))
     # Partition count is BYTE-sized and capped at cluster fan-out, never
     # a constant (r12, guide §6 output file sizing + §2.2): one range
     # partition per ~64 MB of source parquet keeps output files in the
@@ -452,7 +422,7 @@ def sink_zorder_2d_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     write; the re-read is oracle-checked, proving layout never changes
     results. At 100 TB: pick the 2-4 most-filtered columns, normalize
     each to ~16 bits (rank or epoch-day), interleave, sort-write."""
-    tmp = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_zorder_"))
+    tmp = rm_at_exit(tempfile.mkdtemp(prefix="msdb_zorder_"))
     ck = F.col("o_custkey").cast("long")
     dy = F.datediff(
         "o_orderdate", F.lit("1992-01-01").cast("date")
@@ -522,8 +492,8 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     128 MB-1 GB per file (`maxRecordsPerFile` / AQE advisory size);
     the file-count collapse is asserted in tests/test_invariants.py."""
     global LAST_COMPACT_DIR
-    frag = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_frag_"))
-    compact = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_compact_"))
+    frag = rm_at_exit(tempfile.mkdtemp(prefix="msdb_frag_"))
+    compact = rm_at_exit(tempfile.mkdtemp(prefix="msdb_compact_"))
     LAST_COMPACT_DIR = compact  # tests assert file-count on THIS run's dir
     docs = t(spark, sf_dir, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(frag)
@@ -565,7 +535,7 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     and prunes fact partitions (2 of 7 years here) before the scan. At 100 TB this is THE
     mechanism that keeps star-schema joins from reading every
     partition when the filter lives on the dimension."""
-    tmp = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_dpp_"))
+    tmp = rm_at_exit(tempfile.mkdtemp(prefix="msdb_dpp_"))
     staged = t(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
@@ -655,7 +625,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     global LAST_MERGE_DIR
     import json as _json
 
-    root = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_merge_"))
+    root = rm_at_exit(tempfile.mkdtemp(prefix="msdb_merge_"))
     LAST_MERGE_DIR = root
     v0, v1 = os.path.join(root, "v0"), os.path.join(root, "v1")
 

@@ -358,11 +358,11 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_state_partitions,
     )
 
-    from muurschilderingendatabase_etl_spark.queries.scans import _rm_at_exit
+    from muurschilderingendatabase_etl_spark.tables import rm_at_exit
 
     srcdir, parked = stage_events_two_phase(spark, sf_dir)
     # atexit (not eager): the returned frame reads outdir lazily
-    work = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_late_"))
+    work = rm_at_exit(tempfile.mkdtemp(prefix="msdb_late_"))
     ckpt = os.path.join(work, "ckpt")
     outdir = os.path.join(work, "out")
 

@@ -13,8 +13,6 @@ staged runs sharing a Turtle or parquet artifact.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, SparkSession
 
 from muurschilderingendatabase_etl_spark.rdf import cleanup, transform
@@ -28,13 +26,6 @@ from muurschilderingendatabase_etl_spark.rdf.turtle import (
     serialize_turtle,
     triples_only,
 )
-
-
-@dataclass
-class ExportConfig:
-    """Mirrors the export script's env surface (export:13-21)."""
-
-    prefixes: dict[str, str] = field(default_factory=dict)
 
 
 def run_export(

@@ -483,7 +483,7 @@ def _format_term(value: str, kind: str, lang: str | None, dtype: str | None,
 def _serializable(triples: DataFrame) -> DataFrame:
     """Drop rows no Turtle document can represent: an RDF triple has no
     NULL terms (RDF 1.1 abstract syntax), so a null s/p/o — e.g. a
-    literal built from a NULL source column — is not a triple. All three
+    literal built from a NULL source column — is not a triple. Both
     writers skip such rows, mirroring the reference's garbage-triple
     cleanup (export_from_omeka_s.py:53-59), instead of crashing the
     formatter on None. Keeps only the triple columns."""
@@ -498,7 +498,7 @@ def _writer_core(
     auto_compact: bool,
     reused: bool,
 ) -> tuple[DataFrame, list[str], Callable[[Row], str]]:
-    """The three writers' shared setup → (rows, header lines, formatter).
+    """The two writers' shared setup → (rows, header lines, formatter).
 
     ``rows`` are the serializable triples. With ``reused`` (more than one
     action follows: ``auto_prefixes``, or a range partitioning whose
@@ -527,23 +527,6 @@ def _writer_core(
     return rows, header, line
 
 
-def _save_documents(
-    ordered: DataFrame, header: list[str], line: Callable[[Row], str], path: str
-) -> None:
-    """Save ``ordered`` as text, one part file per partition; a
-    non-empty part is the header, then one line per triple."""
-
-    def format_partition(rows: Iterable[Row]) -> Iterator[str]:
-        first = True
-        for r in rows:
-            if first:
-                yield from header
-                first = False
-            yield line(r)
-
-    ordered.rdd.mapPartitions(format_partition).saveAsTextFile(path)
-
-
 def write_turtle(
     triples: DataFrame,
     path: str,
@@ -559,45 +542,22 @@ def write_turtle(
     on (SURVEY O21). coalesce(1) matches the reference's single-artifact
     handoff — documented scale ceiling, use parquet for the at-scale
     representation. The sort's range sampling and the write (plus
-    ``auto_prefixes``) read one materialization of ``triples``.
+    ``auto_prefixes``) read one materialization of ``triples``. The
+    part file is the header, then one line per triple; an empty graph
+    leaves it empty.
     """
     rows, header, line = _writer_core(triples, prefixes, auto_compact, reused=True)
-    _save_documents(rows.orderBy("s", "p", "o").coalesce(1), header, line, path)
 
+    def format_partition(part: Iterable[Row]) -> Iterator[str]:
+        first = True
+        for r in part:
+            if first:
+                yield from header
+                first = False
+            yield line(r)
 
-def write_turtle_sharded(
-    triples: DataFrame,
-    path: str,
-    prefixes: dict[str, str] | None = None,
-    auto_compact: bool = False,
-    num_shards: int | None = None,
-) -> None:
-    """The 100 TB form of the Turtle sink: N part files instead of one.
-
-    ``write_turtle``'s global orderBy + coalesce(1) funnels the whole
-    graph through ONE task — correct for the reference's single-artifact
-    handoff (workflows:33-39), a wall at scale. Here the graph is
-    range-partitioned on (s, p, o) and sorted WITHIN each shard, so:
-
-      * every shard writes in parallel (no single-task stage);
-      * shards are globally ordered end-to-end — concatenating the part
-        files in filename order yields exactly the single-file writer's
-        triple order (range boundaries only decide WHERE the cuts fall,
-        which the boundary-sampling job makes run-dependent — the
-        determinism contract is the concatenated triple sequence, not
-        per-shard bytes);
-      * every shard repeats the @prefix header, so each part file is a
-        self-contained valid Turtle document (re-declaring a prefix is
-        legal Turtle) — downstream consumers can parse shards
-        independently, and read_turtle(path) reassembles the graph.
-
-    ``num_shards`` defaults to the session's shuffle parallelism."""
-    rows, header, line = _writer_core(triples, prefixes, auto_compact, reused=True)
-    n = num_shards or rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    ordered = rows.repartitionByRange(int(n), "s", "p", "o").sortWithinPartitions(
-        "s", "p", "o"
-    )
-    _save_documents(ordered, header, line, path)
+    ordered = rows.orderBy("s", "p", "o").coalesce(1)
+    ordered.rdd.mapPartitions(format_partition).saveAsTextFile(path)
 
 
 _SERIALIZE_MAX_TRIPLES = 1_000_000  # ~100 MB of driver strings; override per call

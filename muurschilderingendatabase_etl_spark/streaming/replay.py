@@ -13,7 +13,6 @@ and state management are already in place.
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import os
 import shutil
@@ -34,17 +33,6 @@ from muurschilderingendatabase_etl_spark import tables
 _STAGED: dict[tuple[str, str, str], tuple[str, int]] = {}
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
 def _staged(
     spark: SparkSession, sf_dir: str, form: str, build: Callable[[str], None]
 ) -> str:
@@ -54,10 +42,9 @@ def _staged(
     read it lazily, so it must outlive every query over it."""
     key = (spark.sparkContext.applicationId, sf_dir, form)
     if key not in _STAGED:
-        root = tempfile.mkdtemp(prefix=f"msdb_{form}_stage_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        root = tables.rm_at_exit(tempfile.mkdtemp(prefix=f"msdb_{form}_stage_"))
         build(root)
-        _STAGED[key] = (root, _dir_bytes(root))
+        _STAGED[key] = (root, tables.disk_bytes(root))
     return _STAGED[key][0]
 
 
@@ -203,8 +190,7 @@ def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame
     # The returned DataFrame reads from this dir lazily, so it must
     # outlive the call — session-scoped like the staging dirs (removed at
     # interpreter exit), NOT per-run like the checkpoint.
-    outdir = tempfile.mkdtemp(prefix="msdb_sink_")
-    atexit.register(shutil.rmtree, outdir, ignore_errors=True)
+    outdir = tables.rm_at_exit(tempfile.mkdtemp(prefix="msdb_sink_"))
     try:
         with stream_state_partitions(result):
             query = (

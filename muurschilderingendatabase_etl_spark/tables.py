@@ -3,11 +3,16 @@
 All loads go through ``spark.read.parquet`` so Catalyst gets predicate
 pushdown / column pruning for free. The dimension tables (region, nation,
 supplier at low SF) are tiny — query code broadcast-hints them explicitly
-where it matters.
+where it matters. The module also holds the two filesystem helpers the
+query and streaming modules share: ``disk_bytes`` sizes a fixture or a
+staged copy, and ``rm_at_exit`` reclaims a scratch dir.
 """
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
 from typing import Callable
 
 import pyspark.sql.functions as F
@@ -93,6 +98,38 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
     _DF_CACHE[key] = df
     return df
+
+
+def disk_bytes(path: str) -> int:
+    """Bytes on disk under ``path``: a file's size, or the sum over a
+    directory tree (a directory-style parquet dataset; getsize on the
+    directory itself returns only its ~4 KB inode). Unreadable entries
+    count 0."""
+    if not os.path.isdir(path):
+        try:
+            return os.path.getsize(path)
+        except OSError:
+            return 0
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    return total
+
+
+def rm_at_exit(path: str) -> str:
+    """Delete a scratch dir when the interpreter exits; returns ``path``.
+
+    Deferred (not eager) because the callers return LAZY reads over the
+    path they just wrote — the caller collects after they return.
+    By interpreter exit all Spark jobs are done, so the delete is safe,
+    and tmp no longer accumulates one directory per session.
+    """
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

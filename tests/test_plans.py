@@ -411,18 +411,36 @@ def _executed_pagerank(spark, sf_dir=SF_DIR):
     return df, executions.last().physicalPlanDescription()
 
 
+def _sibling_sf(name: str) -> str:
+    """The fixture directory ``name`` next to SF_DIR."""
+    return os.path.join(os.path.dirname(SF_DIR.rstrip("/")), name)
+
+
 # The per-iteration contribution aggregation's shuffle, had the edge
 # cache not been partitioned on dst: the planner-inserted exchange (1
-# match in plans/r13/graph_pagerank_fixed_before.txt, 0 after). At
-# sf0.01 and below the cache is a single partition, which satisfies any
-# clustering, so the check only bites on multi-partition caches.
+# match in plans/r13/graph_pagerank_fixed_before.txt, 0 after). A
+# single-partition cache satisfies any clustering, so the check can
+# only fail where the edge cache's own repartition (_CACHE_EXCHANGE) has
+# at least 2 partitions: sf0.1 (3 on 4 cores), not sf0.01 or below.
 _DST_AGG_EXCHANGE = re.compile(
     r"hashpartitioning\(dst#\d+L, \d+\), ENSURE_REQUIREMENTS"
 )
+_CACHE_EXCHANGE = re.compile(
+    r"hashpartitioning\(\w+#\d+L, (\d+)\), REPARTITION_BY_NUM"
+)
+
+
+def _assert_no_dst_agg_exchange(plan: str) -> None:
+    assert min(int(n) for n in _CACHE_EXCHANGE.findall(plan)) >= 2
+    assert not _DST_AGG_EXCHANGE.search(plan)
 
 
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def _disk_only_rdds(spark) -> set[int]:
@@ -437,11 +455,24 @@ def test_pagerank_broadcasts_ranks(spark):
     """Each PageRank iteration must broadcast the node-cardinality rank
     table — the cached edge table is never re-shuffled for the join —
     and the dst-partitioned cache feeds groupBy(dst), so no shuffle may
-    sit between the cache scan and the final aggregate."""
-    _, p = _executed_pagerank(spark)
+    sit between the cache scan and the final aggregate. Run at sf0.1,
+    where the cache has more than one partition."""
+    _, p = _executed_pagerank(spark, _sibling_sf("sf0.1"))
     assert "BroadcastHashJoin" in p
     assert "InMemoryTableScan" in p
-    assert not _DST_AGG_EXCHANGE.search(p)
+    _assert_no_dst_agg_exchange(p)
+
+
+def test_pagerank_keeps_only_last_checkpoint(spark):
+    """Each iteration's rank checkpoint is released once the next one
+    is materialized: one run leaves exactly one more persisted RDD, the
+    last checkpoint, which backs the returned frame."""
+    from muurschilderingendatabase_etl_spark.queries import graph
+
+    before = _persistent_rdds(spark)
+    df = graph.graph_pagerank_fixed(spark, SF_DIR)
+    assert len(_persistent_rdds(spark) - before) == 1
+    assert df.count() > 0
 
 
 def test_pagerank_nonbroadcast_path_same_ranks(spark, monkeypatch):
@@ -478,12 +509,12 @@ def test_pagerank_nonbroadcast_path_same_ranks(spark, monkeypatch):
 
 def test_pagerank_disk_cache_same_ranks(spark, monkeypatch):
     """Above DISK_CACHE_MIN_BYTES both caches are sorted and kept
-    DISK_ONLY. Forcing that regime at sf0.01 must give the in-memory
+    DISK_ONLY. Forcing that regime at sf0.1 must give the in-memory
     regime's ranks, keep the zero-exchange contribution aggregation,
     and release the disk caches before returning."""
     from muurschilderingendatabase_etl_spark.queries import graph
 
-    sf_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
+    sf_dir = _sibling_sf("sf0.1")
     spark.catalog.clearCache()
     base = {
         (r.node, r.pr)
@@ -494,7 +525,7 @@ def test_pagerank_disk_cache_same_ranks(spark, monkeypatch):
     df, p = _executed_pagerank(spark, sf_dir)
     assert "StorageLevel(disk, 1 replicas)" in p
     assert "StorageLevel(disk, memory" not in p
-    assert not _DST_AGG_EXCHANGE.search(p)
+    _assert_no_dst_agg_exchange(p)
     assert "ExistingRDD" in df._jdf.queryExecution().simpleString()
     assert _cache_empty(spark)
     assert not _disk_only_rdds(spark) - disk_before

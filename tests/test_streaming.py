@@ -223,13 +223,13 @@ def test_batch_sink_idempotent_under_redelivery(spark):
         read_sink,
     )
 
-    from muurschilderingendatabase_etl_spark.queries.scans import _rm_at_exit
+    from muurschilderingendatabase_etl_spark.tables import rm_at_exit
 
     b0 = spark.range(0, 5).withColumnRenamed("id", "k")
     b1 = spark.range(5, 8).withColumnRenamed("id", "k")
 
     # exact retry: batch 0 delivered twice
-    out = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_idem_a_"))
+    out = rm_at_exit(tempfile.mkdtemp(prefix="msdb_idem_a_"))
     sink = batch_sink(out)
     sink(b0, 0)
     sink(b0, 0)  # redelivery
@@ -238,7 +238,7 @@ def test_batch_sink_idempotent_under_redelivery(spark):
     assert got == list(range(8)), f"redelivered batch duplicated rows: {got}"
 
     # partial first write, full on retry: retry must REPLACE, not append
-    out2 = _rm_at_exit(tempfile.mkdtemp(prefix="msdb_idem_b_"))
+    out2 = rm_at_exit(tempfile.mkdtemp(prefix="msdb_idem_b_"))
     sink2 = batch_sink(out2)
     sink2(b0.limit(2), 0)  # partial write before the failure
     sink2(b0, 0)  # retry with the full batch
