@@ -31,7 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from muurschilderingendatabase_etl_spark.registry import query
-from muurschilderingendatabase_etl_spark.tables import t
+from muurschilderingendatabase_etl_spark.tables import release_checkpoint, t
 
 
 @query(
@@ -868,6 +868,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(local_uf, schema="node long, label long")
         .localCheckpoint()
     )
+    # Each (eager) checkpoint below releases the one it read, so a run
+    # leaves only the labels checkpoint behind the returned frame.
 
     # Convergence certification (r13, guide §1.2 — don't run a full
     # edges⋈labels round to prove what one node-cardinality aggregate
@@ -896,6 +898,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("node"), F.count_distinct("node")
     ).first()
     if n_rows == n_nodes:
+        release_checkpoint(pairs)
         return labels.select(
             F.col("node").alias("doc_id"), F.col("label").alias("component")
         )
@@ -908,10 +911,13 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build the symmetric edge list (only needed on this branch — r13
     # moved it out of the certified fast path) and run the generic
     # pointer-jumping min-label loop.
-    labels = labels.groupBy("node").agg(F.min("label").alias("label")).localCheckpoint()
+    merged = labels.groupBy("node").agg(F.min("label").alias("label")).localCheckpoint()
+    release_checkpoint(labels)
+    labels = merged
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     ).localCheckpoint()
+    release_checkpoint(pairs)
 
     for i in range(32):  # ≥ log2(diameter) thanks to pointer jumping
         nbr_min = (
@@ -952,9 +958,11 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("node", "label")
             .localCheckpoint()  # eager: runs the round AND fires the observation
         )
+        release_checkpoint(labels)
         labels = new_labels
         if obs.get["changed"] == 0:
             break
+    release_checkpoint(edges)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
 
 

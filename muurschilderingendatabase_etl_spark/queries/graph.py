@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from muurschilderingendatabase_etl_spark.registry import query
-from muurschilderingendatabase_etl_spark.tables import t
+from muurschilderingendatabase_etl_spark.tables import release_checkpoint, t
 
 PART_OFFSET = 10_000_000
 DAMPING = 0.85
@@ -176,9 +176,8 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
         if i:
             # The eager checkpoint cut the lineage, so the previous one
-            # is never read again. Its blocks belong to the RDD under its
-            # LogicalRDD, which DataFrame.unpersist() does not reach.
-            prev._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            # is never read again.
+            release_checkpoint(prev)
     # Release the executor storage: in a long-lived session the caches
     # would otherwise outlive the query.
     e.unpersist()

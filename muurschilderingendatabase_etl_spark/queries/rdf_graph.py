@@ -8,10 +8,11 @@ against the equivalent relational SQL. This puts the reference's core
 transform semantics (O13/O14/O15, transform_datamodel.py:102-127) under
 the DuckDB differential gate even though triples aren't a fixture table.
 
-``rdf_turtle_roundtrip`` is value-checked too (upgraded in round 6):
-demo Turtle text + the nation graph -> parse -> clean -> serialize ->
-reparse, diffed against a relational reconstruction of the same triple
-set — the writer/parser pair sits under the DuckDB gate.
+``rdf_turtle_roundtrip`` is value-checked too: demo Turtle text + the
+nation graph -> parse -> clean -> serialize -> reparse, diffed against a
+relational reconstruction of the same triple set — the writer/parser
+pair sits under the DuckDB gate. Every query here has a value oracle;
+none is rows-only.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from muurschilderingendatabase_etl_spark.rdf.schema import (
     OMEKA,
     RDF_TYPE,
     SDO_SAME_AS,
+    TRIPLES_SCHEMA,
     WELL_KNOWN_NAMESPACES,
 )
 from muurschilderingendatabase_etl_spark.rdf.turtle import (
@@ -131,13 +133,12 @@ _DEMO_TTL = """\
 
 @query(
     "rdf_turtle_roundtrip",
-    # Upgraded from rows-only to a full value oracle (r5 VERDICT item 6):
-    # the roundtripped graph is the union of (a) the fixed demo document
-    # — its cleaned triples are a known constant, enumerated as VALUES —
-    # and (b) the deterministic nation-derived graph, reconstructed here
-    # relationally. Any serializer or parser defect (lost lang tag,
-    # broken escaping, prefix mis-expansion, dropped triple) breaks the
-    # driver's value hash.
+    # A full value oracle: the roundtripped graph is the union of (a) the
+    # fixed demo document — its cleaned triples are a known constant,
+    # enumerated as VALUES — and (b) the deterministic nation-derived
+    # graph, reconstructed here relationally. Any serializer or parser
+    # defect (lost lang tag, broken escaping, prefix mis-expansion,
+    # dropped triple) breaks the driver's value hash.
     oracle=f"""
     WITH demo(s, p, o, o_kind, o_lang) AS (VALUES
       ('https://muurschilderingendatabase.nl/item/1',
@@ -173,13 +174,9 @@ def rdf_turtle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (prefix compaction) -> reparse -> canonical (s, p, o, o_kind,
     o_lang) projection. o_lang is coalesced to '' on both sides (the
     driver canonicalizer sorts on every column)."""
-    from muurschilderingendatabase_etl_spark.rdf.schema import TRIPLES_SCHEMA
-
-    rows = [
-        (r["s"], r["s_kind"], r["p"], r["o"], r["o_kind"], r["o_lang"], r["o_datatype"])
-        for r in parse_turtle_text(_DEMO_TTL)
-    ]
-    demo = cleanup.clean(spark.createDataFrame(rows, TRIPLES_SCHEMA))
+    demo = cleanup.clean(
+        spark.createDataFrame(parse_turtle_text(_DEMO_TTL), TRIPLES_SCHEMA)
+    )
     graph = transform.graph_union(demo, _nation_graph(spark, sf_dir))
     text = serialize_turtle(
         graph,
@@ -188,12 +185,8 @@ def rdf_turtle_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ceo": "https://linkeddata.cultureelerfgoed.nl/def/ceo#",
         },
     )
-    reparsed = [
-        (r["s"], r["s_kind"], r["p"], r["o"], r["o_kind"], r["o_lang"], r["o_datatype"])
-        for r in parse_turtle_text(text)
-    ]
     return (
-        spark.createDataFrame(reparsed, TRIPLES_SCHEMA)
+        spark.createDataFrame(parse_turtle_text(text), TRIPLES_SCHEMA)
         .select(
             "s", "p", "o", "o_kind",
             F.coalesce(F.col("o_lang"), F.lit("")).alias("o_lang"),
@@ -219,10 +212,9 @@ def rdf_rest_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan machinery (page loop, stop condition, SSL tolerance, quarantine
     column) is the real engine code from rdf/source.py.
 
-    Value-checked (upgraded round 6): the stub corpus is deterministic,
-    so the oracle regenerates the expected 300 triples relationally —
-    the page loop, early stop, and Turtle parse all sit under the
-    DuckDB hash gate instead of a rows-only count."""
+    Value-checked: the stub corpus is deterministic, so the oracle
+    regenerates the expected 300 triples relationally — the page loop,
+    early stop, and Turtle parse all sit under the DuckDB hash gate."""
     from muurschilderingendatabase_etl_spark.rdf.source import (
         PER_PAGE,
         scan_paginated,
@@ -242,9 +234,9 @@ def rdf_rest_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's serial page loop. Parse goes through the shared
     parse_bodies kernel, so both scan paths yield identical triples.
 
-    Value-checked (upgraded round 6) against the same relational
-    regeneration as the serial path — the executor-side fetch and the
-    partition-per-page planner sit under the DuckDB hash gate."""
+    Value-checked against the same relational regeneration as the
+    serial path — the executor-side fetch and the partition-per-page
+    planner sit under the DuckDB hash gate."""
     from muurschilderingendatabase_etl_spark.rdf.datasource import (
         OmekaRestDataSource,
     )
@@ -258,7 +250,7 @@ def rdf_rest_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("max_pages", 6)
         .load()
     )
-    parsed = parse_bodies(pages.select("value"))
+    parsed = parse_bodies(pages.rdd.map(lambda r: r.value))
     return triples_only(parsed).select("s", "p", "o").orderBy("s", "p", "o")
 
 
@@ -311,12 +303,12 @@ def rdf_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same code path), Turtle-parse of the responses, set-semantics
     union, and the type-gated sameAs semi-join.
 
-    Value-checked (upgraded round 6): every stage is deterministic given
-    the stub, so the oracle rebuilds the full expected graph — base
-    nation graph + one enrichment triple per distinct key + the sameAs
-    inserts for regionkey-0 subjects — relationally from the nation
-    table. Key extraction, per-key fetch/parse, set-union dedup, and the
-    semi-join all sit under the DuckDB hash gate."""
+    Value-checked: every stage is deterministic given the stub, so the
+    oracle rebuilds the full expected graph — base nation graph + one
+    enrichment triple per distinct key + the sameAs inserts for
+    regionkey-0 subjects — relationally from the nation table. Key
+    extraction, per-key fetch/parse, set-union dedup, and the semi-join
+    all sit under the DuckDB hash gate."""
     graph = _nation_graph(spark, sf_dir)
 
     def stub_fetcher(key: str) -> str:

@@ -162,10 +162,10 @@ _PROBE_RADIUS = 3  # probe all buckets within this hamming distance
 _DIM = 64
 
 
-def _hyperplanes(seed: int = 42, n_planes: int = _N_PLANES) -> list[list[float]]:
+def _hyperplanes(seed: int) -> list[list[float]]:
     rng = random.Random(seed)
     return [
-        [rng.gauss(0.0, 1.0) for _ in range(_DIM)] for _ in range(n_planes)
+        [rng.gauss(0.0, 1.0) for _ in range(_DIM)] for _ in range(_N_PLANES)
     ]
 
 
@@ -257,15 +257,8 @@ def similarity_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_ann(
-    spark: SparkSession,
-    sf_dir: str,
-    seeds: tuple[int, ...] = _LSH_SEEDS,
-    n_planes: int = _N_PLANES,
-    radius: int = _PROBE_RADIUS,
-) -> DataFrame:
-    tables = [_hyperplanes(seed, n_planes) for seed in seeds]
-    n_tables = len(tables)
+def _lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    tables = [_hyperplanes(seed) for seed in _LSH_SEEDS]
     emb = t(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
@@ -311,7 +304,7 @@ def _lsh_ann(
     table_buckets = F.array(
         *[
             F.struct(F.lit(tid).alias("tid"), F.col(f"b{tid}").alias("bucket"))
-            for tid in range(n_tables)
+            for tid in range(_N_TABLES)
         ]
     )
     corpus = with_buckets.select(
@@ -330,7 +323,8 @@ def _lsh_ann(
         # single mask-array Literal replaces 93 py4j-built XOR columns
         # per table (same values, same ascending mask order).
         masks = [
-            m for m in range(1 << n_planes) if bin(m).count("1") <= radius
+            m for m in range(1 << _N_PLANES)
+            if bin(m).count("1") <= _PROBE_RADIUS
         ]
         return F.transform(
             _ilit_arr(masks), lambda m: bucket_col.bitwiseXOR(m)
@@ -345,7 +339,7 @@ def _lsh_ann(
         F.array(
             *[
                 F.transform(probes_of(F.col(f"b{tid}")), _tag(tid))
-                for tid in range(n_tables)
+                for tid in range(_N_TABLES)
             ]
         )
     )

@@ -19,7 +19,7 @@ Usage::
     spark.dataSource.register(OmekaRestDataSource)
     df = (spark.read.format("omeka_rest")
           .option("mode", "stub").option("pages", 3).load())
-    triples = parse_bodies(df.select("value"))
+    triples = parse_bodies(df.rdd.map(lambda r: r.value))
 """
 
 from __future__ import annotations
@@ -67,7 +67,8 @@ class OmekaRestReader(DataSourceReader):
 
 class OmekaRestDataSource(DataSource):
     """format("omeka_rest"): schema `page int, value string` — raw page
-    bodies; compose with rdf.turtle.parse_bodies for the triples view."""
+    bodies; hand the ``value`` strings to rdf.turtle.parse_bodies for the
+    triples view."""
 
     @classmethod
     def name(cls) -> str:

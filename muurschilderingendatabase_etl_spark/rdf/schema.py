@@ -26,7 +26,8 @@ TRIPLES_SCHEMA = T.StructType(
     ]
 )
 
-TRIPLE_COLS = ["s", "s_kind", "p", "o", "o_kind", "o_lang", "o_datatype"]
+# Column order of every triples frame and of the parser's triple tuples.
+TRIPLE_COLS = TRIPLES_SCHEMA.fieldNames()
 
 # Well-known vocabulary IRIs. The reference resolves namespaces
 # dynamically via getattr(rdflib.namespace, name) validated by the _NS

@@ -9,8 +9,8 @@ reference's 200 s timeout.
 
 Scale note: pagination is inherently serial on the source side (page N
 existence gates N+1), so the scan runs driver-side and the *parse*
-parallelizes (each page body is one row → the executor-side Turtle
-parser). The source caps at ~9,900 items per run, matching the
+parallelizes (the page bodies are the executor-side Turtle parser's
+input RDD). The source caps at ~9,900 items per run, matching the
 reference's capacity envelope (SURVEY §6).
 """
 
@@ -22,7 +22,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from muurschilderingendatabase_etl_spark.rdf.turtle import PARSED_SCHEMA, parse_bodies
+from muurschilderingendatabase_etl_spark.rdf.turtle import parse_bodies
 
 log = logging.getLogger(__name__)
 
@@ -72,29 +72,25 @@ def scan_paginated(spark: SparkSession, fetcher: PageFetcher) -> DataFrame:
 
     SSL/connection failures follow O8 (export:29,86-89): log, return the pages
     fetched so far — an empty DataFrame when nothing was fetched, never
-    an exception out of the source.
+    an exception out of the source. ``OSError`` covers ``ssl.SSLError``
+    (a subclass) and the connection errors alike.
     """
-    import ssl
-
     pages: list[str] = []
     for page_no in range(1, MAX_PAGES + 1):
         try:
             body = fetcher(page_no)
-        except (ssl.SSLError, OSError) as exc:
+        except OSError as exc:
             log.warning("page fetch failed at page %d: %s", page_no, exc)
             break
         if len(body) <= EMPTY_PAGE_THRESHOLD:
             break
         pages.append(body)
 
-    if not pages:
-        return spark.createDataFrame([], PARSED_SCHEMA)
-    # Fetch is serial (page N gates N+1) but the parse parallelizes: one
-    # page body per row, one partition per page (≤99), executor-side parse
-    # via the same kernel as file input (rdf/turtle.py parse_bodies).
-    bodies = spark.createDataFrame([(b,) for b in pages], "value string")
-    n_parts = min(len(pages), spark.sparkContext.defaultParallelism)
-    return parse_bodies(bodies.repartition(n_parts))
+    # Fetch is serial (page N gates N+1) but the parse parallelizes: the
+    # bodies are sliced over at most one partition per core.
+    sc = spark.sparkContext
+    n_parts = min(len(pages), sc.defaultParallelism) or 1
+    return parse_bodies(sc.parallelize(pages, n_parts))
 
 
 def fetch_prefix_bindings(context_body: str) -> dict[str, str]:

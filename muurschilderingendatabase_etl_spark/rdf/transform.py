@@ -4,9 +4,10 @@ rijksmonument enrichment join.
 
 The reference runs six eager full-graph passes
 (transform_datamodel.py:140-165). Every function here is a lazy
-DataFrame transformation; ``fetch_enrichments`` also checkpoints its
-result (lazily), so the external fetch runs once per distinct key per
-run however many actions read it.
+DataFrame transformation; ``fetch_enrichments`` parses its responses
+through ``turtle.parse_bodies``, whose lazy checkpoint makes the
+external fetch run once per distinct key per run however many actions
+read it.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from muurschilderingendatabase_etl_spark.rdf.schema import (
     SDO_SAME_AS,
     TRIPLE_COLS,
 )
-from muurschilderingendatabase_etl_spark.rdf.turtle import parse_turtle_text
+from muurschilderingendatabase_etl_spark.rdf.turtle import parse_bodies, triples_only
 
 Fetcher = Callable[[str], str]
 
@@ -98,36 +99,29 @@ def fetch_enrichments(keys: DataFrame, fetcher: Fetcher) -> DataFrame:
     """O12 fetch: per-key lookup against an external service, executed
     with ``mapPartitions`` so each task holds one connection/session and
     failures are isolated per key (transform:100-101 semantics: a failed
-    key contributes nothing).
+    key contributes nothing). A fetch that raises yields no body; a
+    malformed body is quarantined by ``parse_bodies`` and dropped by
+    ``triples_only``.
 
     At 100 TB the key set is still small (distinct monument numbers), so
     this stage is narrow; the expensive side never moves.
 
-    The result is a lazy local checkpoint, so each distinct key is
-    fetched once per run however many actions (the union's broadcast
+    The bodies go straight into ``parse_bodies``, so fetch and parse run
+    in one Python pass, and its lazy local checkpoint makes each distinct
+    key fetched once per run however many actions (the union's broadcast
     and shuffle stages, ``auto_prefixes``, the writer's sort sampling)
     read the enrichments.
     """
-    schema = "s string, s_kind string, p string, o string, o_kind string, o_lang string, o_datatype string"
 
-    def fetch_partition(rows: Iterable[Row]) -> Iterator[tuple]:
+    def fetch(rows: Iterable[Row]) -> Iterator[str]:
         for row in rows:
             try:
                 body = fetcher(row.key)
-                for tr in parse_turtle_text(body):
-                    yield (
-                        tr["s"], tr["s_kind"], tr["p"],
-                        tr["o"], tr["o_kind"], tr["o_lang"], tr["o_datatype"],
-                    )
             except Exception:
-                # per-key failure tolerance (transform:100-101)
-                continue
+                continue  # per-key failure tolerance (transform:100-101)
+            yield body
 
-    return (
-        keys.rdd.mapPartitions(fetch_partition)
-        .toDF(schema)
-        .localCheckpoint(eager=False)
-    )
+    return triples_only(parse_bodies(keys.rdd.mapPartitions(fetch)))
 
 
 def add_same_as(triples: DataFrame) -> DataFrame:

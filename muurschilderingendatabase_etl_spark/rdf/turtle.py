@@ -4,8 +4,9 @@ The reference round-trips between Turtle text and an rdflib Graph
 (graph.parse — export_from_omeka_s.py:50, transform_datamodel.py:84,102;
 graph.serialize — export:84, transform:131-137). Here:
 
-- **parse**: ``spark.read.text(paths, wholetext=True)`` (one file per
-  row) → ``mapPartitions`` running a small Turtle tokenizer → triples
+- **parse**: an RDD of document bodies (one file per element for
+  ``read_turtle``) → ``mapPartitions`` running a small Turtle parser
+  whose triples are already tuples in ``TRIPLE_COLS`` order → triples
   rows. Prefix directives are file-scoped, so parsing whole files per
   task is the correct unit of parallelism (SURVEY §7 watch-list); many
   files parallelize across tasks. Malformed statements go to a
@@ -38,6 +39,7 @@ import re
 from collections.abc import Callable, Iterable, Iterator
 
 import pyspark.sql.functions as F
+from pyspark import RDD
 from pyspark.sql import DataFrame, Row, SparkSession
 
 from muurschilderingendatabase_etl_spark.rdf.schema import (
@@ -48,10 +50,9 @@ from muurschilderingendatabase_etl_spark.rdf.schema import (
     WELL_KNOWN_NAMESPACES,
 )
 
-PARSED_SCHEMA = (
-    "s string, s_kind string, p string, o string, o_kind string,"
-    " o_lang string, o_datatype string, _corrupt string"
-)
+# The triple columns plus the quarantine column, all nullable: a corrupt
+# document's row has only ``_corrupt`` set.
+PARSED_SCHEMA = ", ".join(f"{c} string" for c in (*TRIPLE_COLS, "_corrupt"))
 
 _XSD = WELL_KNOWN_NAMESPACES["XSD"]
 
@@ -135,7 +136,8 @@ def _expect(tokens: list, i: int, kind: str) -> str:
 
 
 class _Parser:
-    """Statement-at-a-time Turtle parser over a token stream."""
+    """Statement-at-a-time Turtle parser over a token stream. Each
+    triple is a tuple in ``TRIPLE_COLS`` order, ready to be a row."""
 
     def __init__(self) -> None:
         self.prefixes: dict[str, str] = {}
@@ -147,7 +149,7 @@ class _Parser:
         self._anon_n += 1
         return f"_:{self._anon_prefix}{self._anon_n}"
 
-    def parse(self, text: str) -> Iterator[dict]:
+    def parse(self, text: str) -> Iterator[tuple]:
         tokens = list(_tokenize(text))
         # Deterministic anonymous-node labels that can never collide
         # with the document's explicit `_:` labels: lengthen the prefix
@@ -180,8 +182,8 @@ class _Parser:
                 continue
             i = yield from self._statement(tokens, i)
 
-    def _statement(self, tokens: list, i: int) -> Iterator[dict]:
-        out: list[dict] = []
+    def _statement(self, tokens: list, i: int) -> Iterator[tuple]:
+        out: list[tuple] = []
         kind, val = tokens[i]
         had_anon_props = False
         if kind == "bracket" and val == "[":
@@ -204,7 +206,7 @@ class _Parser:
         return i
 
     def _predicate_object_list(
-        self, tokens: list, i: int, subj: str, s_kind: str, out: list[dict]
+        self, tokens: list, i: int, subj: str, s_kind: str, out: list[tuple]
     ) -> int:
         """Parse ``p o (, o)* (; p o …)*`` for ``subj``, appending triples
         to ``out``. Leaves the terminator ('.' or ']') unconsumed."""
@@ -213,7 +215,7 @@ class _Parser:
             i += 1
             while True:
                 i, obj = self._object(tokens, i, out)
-                out.append({"s": subj, "s_kind": s_kind, "p": pred, **obj})
+                out.append((subj, s_kind, pred, *obj))
                 if i < len(tokens) and tokens[i] == ("punct", ","):
                     i += 1
                     continue
@@ -236,7 +238,7 @@ class _Parser:
             )
 
     def _anon_property_list(
-        self, tokens: list, i: int, out: list[dict]
+        self, tokens: list, i: int, out: list[tuple]
     ) -> tuple[int, str]:
         """``[ p o ; … ]`` (or bare ``[]``) → fresh blank node; nested
         triples go to ``out``. Returns (next index, bnode label)."""
@@ -250,13 +252,13 @@ class _Parser:
         raise ValueError(f"unterminated '[' near token {i}: {tokens[i:i+3]}")
 
     def _collection(
-        self, tokens: list, i: int, out: list[dict]
+        self, tokens: list, i: int, out: list[tuple]
     ) -> tuple[int, str, str]:
         """``( o1 o2 … )`` → rdf:first/rdf:rest chain of fresh blank
         nodes (``()`` → rdf:nil). Returns (next index, head, kind)."""
         rdf_ns = WELL_KNOWN_NAMESPACES["RDF"]
         i += 1  # consume '('
-        items: list[dict] = []
+        items: list[tuple] = []
         while True:
             if i >= len(tokens):
                 raise ValueError("unterminated '(' at end of input")
@@ -268,17 +270,10 @@ class _Parser:
         if not items:
             return i, rdf_ns + "nil", IRI
         nodes = [self._fresh_bnode() for _ in items]
-        for j, (node, obj) in enumerate(zip(nodes, items)):
-            out.append({"s": node, "s_kind": BNODE, "p": rdf_ns + "first", **obj})
-            rest = (
-                {"o": nodes[j + 1], "o_kind": BNODE}
-                if j + 1 < len(nodes)
-                else {"o": rdf_ns + "nil", "o_kind": IRI}
-            )
-            out.append({
-                "s": node, "s_kind": BNODE, "p": rdf_ns + "rest",
-                "o_lang": None, "o_datatype": None, **rest,
-            })
+        tails = [(n, BNODE) for n in nodes[1:]] + [(rdf_ns + "nil", IRI)]
+        for node, obj, tail in zip(nodes, items, tails):
+            out.append((node, BNODE, rdf_ns + "first", *obj))
+            out.append((node, BNODE, rdf_ns + "rest", *tail, None, None))
         return i, nodes[0], BNODE
 
     def _expand_pname(self, pname: str) -> str:
@@ -309,17 +304,18 @@ class _Parser:
             raise ValueError(f"predicate must be an IRI: {token}")
         return term
 
-    def _object(self, tokens: list, i: int, out: list[dict]) -> tuple[int, dict]:
+    def _object(self, tokens: list, i: int, out: list[tuple]) -> tuple[int, tuple]:
+        """One object term → (next index, (o, o_kind, o_lang, o_datatype))."""
         kind, val = _at(tokens, i)
         if kind == "bracket" and val == "[":
             i, node = self._anon_property_list(tokens, i, out)
-            return i, {"o": node, "o_kind": BNODE, "o_lang": None, "o_datatype": None}
+            return i, (node, BNODE, None, None)
         if kind == "bracket" and val == "(":
             i, head, h_kind = self._collection(tokens, i, out)
-            return i, {"o": head, "o_kind": h_kind, "o_lang": None, "o_datatype": None}
+            return i, (head, h_kind, None, None)
         if kind in ("iri", "pname", "bnode"):
             term, t_kind = self._term(tokens[i])
-            return i + 1, {"o": term, "o_kind": t_kind, "o_lang": None, "o_datatype": None}
+            return i + 1, (term, t_kind, None, None)
         if kind in ("quote", "triple_quote"):
             raw = val[3:-3] if kind == "triple_quote" else val[1:-1]
             text = _unescape(raw)
@@ -331,55 +327,54 @@ class _Parser:
             elif i < len(tokens) and tokens[i][0] == "dtype_marker":
                 dtype, _ = self._term(_at(tokens, i + 1))
                 i += 2
-            return i, {"o": text, "o_kind": LITERAL, "o_lang": lang, "o_datatype": dtype}
+            return i, (text, LITERAL, lang, dtype)
         if kind == "number":
             dtype = _XSD + (
                 "integer" if re.fullmatch(r"[+-]?\d+", val)
                 else "double" if "e" in val.lower()
                 else "decimal"
             )
-            return i + 1, {"o": val, "o_kind": LITERAL, "o_lang": None, "o_datatype": dtype}
+            return i + 1, (val, LITERAL, None, dtype)
         if kind == "keyword" and val in ("true", "false"):
-            return i + 1, {"o": val, "o_kind": LITERAL, "o_lang": None,
-                           "o_datatype": _XSD + "boolean"}
+            return i + 1, (val, LITERAL, None, _XSD + "boolean")
         raise ValueError(f"invalid object token: {tokens[i]}")
 
 
-def parse_turtle_text(text: str) -> list[dict]:
-    """Parse one Turtle document (driver-side helper, also the executor
-    kernel). Raises ValueError on malformed input."""
+def parse_turtle_text(text: str) -> list[tuple]:
+    """Parse one Turtle document into ``TRIPLE_COLS``-ordered tuples
+    (driver-side helper, also the executor kernel). Raises ValueError on
+    malformed input."""
     return list(_Parser().parse(text))
 
 
-def parse_bodies(bodies: DataFrame, column: str = "value") -> DataFrame:
-    """Executor-side Turtle parse: one document body per row (in
-    ``column``) → triples DataFrame (+ ``_corrupt`` quarantine column —
-    PERMISSIVE mode, SURVEY O20). The shared kernel for file input
-    (``read_turtle``) and the paginated REST source (``rdf/source.py``).
+def parse_bodies(bodies: RDD) -> DataFrame:
+    """Executor-side Turtle parse: an RDD of document bodies → triples
+    DataFrame (+ ``_corrupt`` quarantine column — PERMISSIVE mode,
+    SURVEY O20). The one place a Turtle body becomes rows: file input
+    (``read_turtle``), both REST scans and the enrichment fetch
+    (``transform.fetch_enrichments``) all hand it their bodies, so a
+    fetch that produces them runs in the same Python pass as the parse.
 
     The result is a lazy local checkpoint: the first action that reads
     it runs the Python parse (and whatever fetch feeds ``bodies``) once,
     and every later action — the quarantine split, ``auto_prefixes``, a
     sort's range sampling, the write — reads that materialization.
     """
+    corrupt = (None,) * len(TRIPLE_COLS)
 
-    def parse_partition(rows: Iterable[Row]) -> Iterator[tuple]:
-        for row in rows:
-            body = row[column]
+    def parse_partition(docs: Iterable[str]) -> Iterator[tuple]:
+        for body in docs:
             try:
-                for tr in parse_turtle_text(body):
-                    yield (
-                        tr["s"], tr["s_kind"], tr["p"],
-                        tr["o"], tr["o_kind"], tr["o_lang"], tr["o_datatype"],
-                        None,
-                    )
+                triples = parse_turtle_text(body)
             except ValueError as exc:
                 # quarantine the document, don't fail the job
-                yield (None, None, None, None, None, None, None,
-                       f"{exc}: {body[:200]}")
+                yield (*corrupt, f"{exc}: {body[:200]}")
+                continue
+            for tr in triples:
+                yield (*tr, None)
 
     return (
-        bodies.rdd.mapPartitions(parse_partition)
+        bodies.mapPartitions(parse_partition)
         .toDF(PARSED_SCHEMA)
         .localCheckpoint(eager=False)
     )
@@ -388,10 +383,11 @@ def parse_bodies(bodies: DataFrame, column: str = "value") -> DataFrame:
 def read_turtle(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """Turtle files → triples DataFrame (+ ``_corrupt`` column).
 
-    One file per row via wholetext (prefix directives are file-scoped);
+    One file per body via wholetext (prefix directives are file-scoped);
     files parallelize across tasks.
     """
-    return parse_bodies(spark.read.text(paths, wholetext=True))
+    text = spark.read.text(paths, wholetext=True)
+    return parse_bodies(text.rdd.map(lambda r: r.value))
 
 
 def triples_only(parsed: DataFrame) -> DataFrame:
@@ -411,11 +407,11 @@ def corrupt_records(parsed: DataFrame) -> DataFrame:
 # compute_qname uses when auto_compact invents prefixes.
 _NS_SPLIT = r"^(.*[#/])[A-Za-z0-9_.-]+$"
 
+MAX_AUTO_NAMESPACES = 1000  # bound on the namespaces auto_prefixes collects
+
 
 def auto_prefixes(
-    triples: DataFrame,
-    provided: dict[str, str] | None = None,
-    max_namespaces: int = 1000,
+    triples: DataFrame, provided: dict[str, str] | None = None
 ) -> dict[str, str]:
     """Synthesize ``ns1, ns2, …`` bindings for namespaces that occur in
     the graph but are not covered by ``provided`` — the rdflib
@@ -423,7 +419,7 @@ def auto_prefixes(
     (transform_datamodel.py:135). Deterministic: candidate namespaces
     are sorted before numbering, so the same graph always gets the same
     bindings (byte-stable golden output). One small aggregation job over
-    the triples (distinct namespaces, capped at ``max_namespaces``)."""
+    the triples (distinct namespaces, capped at ``MAX_AUTO_NAMESPACES``)."""
     out = dict(provided or {})
     bound = set(out.values())
 
@@ -444,7 +440,7 @@ def auto_prefixes(
         .where(F.col("ns").isNotNull() & (F.col("ns") != ""))
         .distinct()
         .sort("ns")
-        .limit(max_namespaces)
+        .limit(MAX_AUTO_NAMESPACES)
         .collect()
     )
     i = 1
@@ -560,13 +556,12 @@ def write_turtle(
     ordered.rdd.mapPartitions(format_partition).saveAsTextFile(path)
 
 
-_SERIALIZE_MAX_TRIPLES = 1_000_000  # ~100 MB of driver strings; override per call
+SERIALIZE_MAX_TRIPLES = 1_000_000  # ~100 MB of driver strings
 
 
 def serialize_turtle(
     triples: DataFrame,
     prefixes: dict[str, str] | None = None,
-    max_triples: int = _SERIALIZE_MAX_TRIPLES,
     auto_compact: bool = False,
 ) -> str:
     """Driver-side serialization to a single string (golden tests /
@@ -574,21 +569,22 @@ def serialize_turtle(
     workflows:33-39 single-file handoff).
 
     Guarded: this path collects to the driver, so a graph above
-    `max_triples` raises instead of silently OOM-ing the driver at 100x
-    scale — callers with big graphs belong on the distributed
-    `write_turtle` sink. The guard is folded into the collect itself:
+    `SERIALIZE_MAX_TRIPLES` (read at call time) raises instead of
+    silently OOM-ing the driver at 100x scale — callers with big graphs
+    belong on the distributed `write_turtle` sink. The guard is folded into the collect itself:
     `orderBy.limit(n+1)` is a TakeOrdered (per-partition top-k + driver
-    merge), so the driver receives at most max_triples+1 rows, the raise
+    merge), so the driver receives at most that many + 1 rows, the raise
     fires from the collected length, and the upstream plan runs in one
     action (no checkpoint unless ``auto_compact`` adds a second). An
     oversized graph pays auto_prefixes' distributed scan before raising;
     the driver-memory bound is unchanged."""
     rows, header, line = _writer_core(triples, prefixes, auto_compact, reused=auto_compact)
-    collected = rows.orderBy("s", "p", "o").limit(max_triples + 1).collect()
-    if len(collected) > max_triples:
+    cap = SERIALIZE_MAX_TRIPLES
+    collected = rows.orderBy("s", "p", "o").limit(cap + 1).collect()
+    if len(collected) > cap:
         raise ValueError(
             f"serialize_turtle collects to the driver and the graph exceeds "
-            f"max_triples={max_triples}; use write_turtle(df, path) for the "
+            f"SERIALIZE_MAX_TRIPLES={cap}; use write_turtle(df, path) for the "
             f"distributed single-artifact sink instead"
         )
     return "\n".join(header + [line(r) for r in collected]) + "\n"

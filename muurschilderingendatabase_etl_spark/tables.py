@@ -5,7 +5,8 @@ pushdown / column pruning for free. The dimension tables (region, nation,
 supplier at low SF) are tiny — query code broadcast-hints them explicitly
 where it matters. The module also holds the two filesystem helpers the
 query and streaming modules share: ``disk_bytes`` sizes a fixture or a
-staged copy, and ``rm_at_exit`` reclaims a scratch dir.
+staged copy, ``rm_at_exit`` reclaims a scratch dir, and
+``release_checkpoint`` frees a superseded ``localCheckpoint``.
 """
 
 from __future__ import annotations
@@ -130,6 +131,14 @@ def rm_at_exit(path: str) -> str:
     """
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of an eager ``localCheckpoint`` that nothing reads
+    any more (a later checkpoint cut the lineage to it). They belong to
+    the RDD under its LogicalRDD, which ``DataFrame.unpersist()`` (the
+    cache manager only) does not reach."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

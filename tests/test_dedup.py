@@ -189,10 +189,33 @@ def test_cc_cross_partition_fallback(spark, monkeypatch):
     monkeypatch.setattr(dd, "_ngram_jaccard_pairs", lambda s, d: pairs)
 
     try:
+        before = _persistent_rdds(spark)
         out = dd.dedup_connected_components(spark, "/ignored")
+        added = len(_persistent_rdds(spark) - before)
         rows = [(r.doc_id, r.component) for r in out.collect()]
     finally:
         spark.conf.set(coalesce_key, old_coalesce)
         spark.conf.set(shuffle_key, old_shuffle)
     assert sorted(rows) == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
     assert len(rows) == len(set(r[0] for r in rows)), "duplicate doc_id rows"
+    # the loop releases pairs, edges and every superseded labels checkpoint
+    assert added == 1
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_cc_keeps_only_labels_checkpoint(spark):
+    """The certified branch releases the pairs checkpoint once labels is
+    materialized: one run leaves exactly one more persisted RDD, the
+    labels checkpoint, which backs the returned frame."""
+    from muurschilderingendatabase_etl_spark.queries.dedup import (
+        dedup_connected_components,
+    )
+    from tests.conftest import SF_DIR
+
+    before = _persistent_rdds(spark)
+    df = dedup_connected_components(spark, SF_DIR)
+    assert len(_persistent_rdds(spark) - before) == 1
+    assert df.count() > 0

@@ -12,6 +12,7 @@ from muurschilderingendatabase_etl_spark.rdf.schema import (
     CEO_RIJKSMONUMENT,
     CEO_RIJKSMONUMENTNUMMER,
     RDF_TYPE,
+    SDO_SAME_AS,
     WELL_KNOWN_NAMESPACES,
 )
 from muurschilderingendatabase_etl_spark.rdf.turtle import (
@@ -58,7 +59,7 @@ def test_full_pipeline_golden(spark):
     )
     text = serialize_turtle(result, {"sdo": SDO, "dcterms": DCTERMS})
 
-    rows = {(r["s"], r["p"], r["o"]) for r in parse_turtle_text(text)}
+    rows = {(s, p, o) for s, _, p, o, *_ in parse_turtle_text(text)}
     # cleanup dropped the invalid-URI subject
     assert not any(s == "notascheme" for s, _, _ in rows)
     # rename applied (dcterms:title -> sdo:name), original gone
@@ -85,7 +86,7 @@ def test_file_pipeline_matches_run_transform(spark, tmp_path):
         mapping={DCTERMS + "title": SDO + "name"},
         filterlist=[OMEKA + "is_public"],
     )
-    rows = {(r["s"], r["p"], r["o"]) for r in parse_turtle_text(text)}
+    rows = {(s, p, o) for s, _, p, o, *_ in parse_turtle_text(text)}
     assert (ITEM + "1", SDO + "name", "Sint Joris") in rows
     # no fetcher -> sameAs still derived for typed monuments (add_same_as)
     assert (ITEM + "1", SDO + "sameAs", "RM12345") in rows
@@ -145,3 +146,48 @@ def test_file_chain_fetches_each_key_once(spark, tmp_path):
     )
     assert "dcterms:identifier \"777\" ." in golden
     assert _read_parts(final_dir) == golden
+
+
+def test_enrichment_fetch_failures_drop_only_their_key(spark):
+    """The enrichment fetch's error policy: of three monument keys, one
+    answers valid Turtle, one raises and one answers a malformed body
+    that starts with a valid statement. The job does not fail, only the
+    valid key's triples (and the sameAs derived from them) are added to
+    the graph, no triple of the malformed body leaks in, and each key
+    is fetched exactly once."""
+    ceo = "https://linkeddata.cultureelerfgoed.nl/def/ceo#"
+    monument = "https://monuments.example/"
+
+    def page(n: int) -> str:
+        if n > 1:
+            return ""
+        return f"@prefix ceo: <{ceo}> .\n" + "".join(
+            f'<{ITEM}{k}> a ceo:Rijksmonument ; ceo:rijksmonumentnummer "RM{k}" .\n'
+            for k in (1, 2, 3)
+        )
+
+    calls = {k: spark.sparkContext.accumulator(0) for k in ("1", "2", "3")}
+
+    def fetcher(key: str) -> str:
+        calls[key].add(1)
+        if key == "2":
+            raise OSError("HTTP 503")
+        if key == "3":
+            return (f'<{monument}3> <{DCTERMS}identifier> "3" .\n'
+                    f"<{monument}3> ;;; not turtle")
+        return (f"@prefix ceo: <{ceo}> .\n"
+                f'<{monument}1> a ceo:Rijksmonument ; ceo:rijksmonumentnummer "1" .')
+
+    cleaned = pipeline.run_export(spark, page)
+    base = pipeline.run_transform(cleaned, {}, [])
+    result = pipeline.run_transform(cleaned, {}, [], fetcher)
+    base_rows = {tuple(r) for r in base.select("s", "p", "o").collect()}
+    rows = {tuple(r) for r in result.select("s", "p", "o").collect()}
+
+    assert base_rows <= rows
+    assert rows - base_rows == {
+        (monument + "1", RDF_TYPE, CEO_RIJKSMONUMENT),
+        (monument + "1", CEO_RIJKSMONUMENTNUMMER, "1"),
+        (monument + "1", SDO_SAME_AS, "1"),
+    }
+    assert {k: acc.value for k, acc in calls.items()} == {"1": 1, "2": 1, "3": 1}

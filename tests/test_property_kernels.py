@@ -17,6 +17,7 @@ from muurschilderingendatabase_etl_spark.queries.dedup import (
     SIMHASH_CUTS,
     SIMHASH_MAX_HAMMING,
 )
+from muurschilderingendatabase_etl_spark.rdf.schema import TRIPLE_COLS
 from muurschilderingendatabase_etl_spark.rdf.turtle import (
     _format_term,
     parse_turtle_text,
@@ -40,7 +41,7 @@ def _roundtrip_object(value: str, lang: str | None = None,
     doc = f"<urn:s> <urn:p> {term} .\n"
     triples = parse_turtle_text(doc)
     assert len(triples) == 1, f"expected 1 triple from {doc!r}"
-    return triples[0]
+    return dict(zip(TRIPLE_COLS, triples[0]))
 
 
 @settings(max_examples=300, deadline=None)

@@ -16,6 +16,7 @@ from muurschilderingendatabase_etl_spark.rdf.schema import (
     CEO_RIJKSMONUMENTNUMMER,
     RDF_TYPE,
     SDO_SAME_AS,
+    TRIPLE_COLS,
     TRIPLES_SCHEMA,
     import_namespace_by_name,
 )
@@ -34,6 +35,12 @@ DCTERMS = "http://purl.org/dc/terms/"
 SDO = "https://schema.org/"
 OMEKA = "http://omeka.org/s/vocabs/o#"
 ITEM = "https://muurschilderingendatabase.nl/item/"
+
+
+def _parse(text: str) -> list[dict]:
+    """parse_turtle_text's triples keyed by column name."""
+    return [dict(zip(TRIPLE_COLS, t)) for t in parse_turtle_text(text)]
+
 
 FIXTURE_TTL = textwrap.dedent(
     f"""\
@@ -58,7 +65,7 @@ FIXTURE_TTL = textwrap.dedent(
 def _fixture_triples(spark):
     """FIXTURES.md §B row classes, built directly (garbage rows are not
     expressible as well-formed Turtle)."""
-    rows = parse_turtle_text(FIXTURE_TTL)
+    rows = _parse(FIXTURE_TTL)
     extra = [
         # @context garbage (row class 2)
         {"s": "@context", "s_kind": "literal", "p": DCTERMS + "title",
@@ -92,7 +99,7 @@ def _fixture_triples(spark):
 
 
 def test_parse_turtle_basics():
-    triples = parse_turtle_text(FIXTURE_TTL)
+    triples = _parse(FIXTURE_TTL)
     assert {"s": ITEM + "1", "s_kind": "iri", "p": RDF_TYPE,
             "o": CEO_RIJKSMONUMENT, "o_kind": "iri", "o_lang": None,
             "o_datatype": None} in triples
@@ -115,11 +122,11 @@ def test_turtle_round_trip(spark, tmp_path):
     text = serialize_turtle(triples, {"dcterms": DCTERMS})
     reparsed = sorted(
         (t["s"], t["p"], t["o"], t["o_lang"], t["o_datatype"])
-        for t in parse_turtle_text(text)
+        for t in _parse(text)
     )
     original = sorted(
         (t["s"], t["p"], t["o"], t["o_lang"], t["o_datatype"])
-        for t in parse_turtle_text(FIXTURE_TTL)
+        for t in _parse(FIXTURE_TTL)
     )
     assert reparsed == original
     # determinism: serializing twice is byte-identical (golden contract)
@@ -128,17 +135,19 @@ def test_turtle_round_trip(spark, tmp_path):
     assert "dcterms:title" in text
 
 
-def test_serialize_turtle_size_guard(spark, tmp_path):
-    import pytest
+def test_serialize_turtle_size_guard(spark, tmp_path, monkeypatch):
+    from muurschilderingendatabase_etl_spark.rdf import turtle
 
     path = tmp_path / "fixture.ttl"
     path.write_text(FIXTURE_TTL, encoding="utf-8")
     triples = triples_only(read_turtle(spark, str(path)))
+    monkeypatch.setattr(turtle, "SERIALIZE_MAX_TRIPLES", 2)
     with pytest.raises(ValueError, match="write_turtle"):
-        serialize_turtle(triples, {"dcterms": DCTERMS}, max_triples=2)
+        serialize_turtle(triples, {"dcterms": DCTERMS})
     # At/under the ceiling still serializes.
     n = triples.count()
-    assert serialize_turtle(triples, {"dcterms": DCTERMS}, max_triples=n)
+    monkeypatch.setattr(turtle, "SERIALIZE_MAX_TRIPLES", n)
+    assert serialize_turtle(triples, {"dcterms": DCTERMS})
 
 
 def test_corrupt_quarantine(spark, tmp_path):
@@ -456,7 +465,7 @@ def test_parse_anonymous_property_lists():
     """`[ … ]` as object, subject, bare statement, empty, and nested —
     the one parser gap a live Omeka S export could hit (r4 verdict
     item 4; reference parse sites export_from_omeka_s.py:50)."""
-    triples = parse_turtle_text(ANON_TTL)
+    triples = _parse(ANON_TTL)
     ex = "http://ex.org/"
     knows = [t for t in triples if t["p"] == ex + "knows"]
     # object position: ex:a knows a bnode that has name=Bob, age=42
@@ -477,7 +486,7 @@ def test_parse_anonymous_property_lists():
 
 
 def test_parse_collections_first_rest_nil():
-    triples = parse_turtle_text(COLL_TTL)
+    triples = _parse(COLL_TTL)
     ex = "http://ex.org/"
     head = next(t["o"] for t in triples if t["p"] == ex + "list")
     items = []
@@ -500,7 +509,7 @@ def test_anon_label_never_collides_with_explicit():
     ttl = """@prefix ex: <http://ex.org/> .
 _:anon-1 ex:p [ ex:q "v" ] .
 """
-    triples = parse_turtle_text(ttl)
+    triples = _parse(ttl)
     labels = {t["s"] for t in triples} | {
         t["o"] for t in triples if t["o_kind"] == "bnode"
     }
@@ -521,11 +530,11 @@ def test_anon_round_trip(spark, tmp_path):
         text = serialize_turtle(triples, {"ex": "http://ex.org/"})
         reparsed = sorted(
             (t["s"], t["p"], t["o"], t["o_lang"], t["o_datatype"])
-            for t in parse_turtle_text(text)
+            for t in _parse(text)
         )
         original = sorted(
             (t["s"], t["p"], t["o"], t["o_lang"], t["o_datatype"])
-            for t in parse_turtle_text(fixture)
+            for t in _parse(fixture)
         )
         assert reparsed == original
 
@@ -558,10 +567,10 @@ ex:a ex:val "3.5"^^<http://www.w3.org/2001/XMLSchema#decimal> .
     # round-trips to the same graph
     reparsed = sorted(
         (t["s"], t["p"], t["o"], t["o_lang"], t["o_datatype"])
-        for t in parse_turtle_text(text)
+        for t in _parse(text)
     )
     original = sorted(
         (t["s"], t["p"], t["o"], t["o_lang"], t["o_datatype"])
-        for t in parse_turtle_text(ttl)
+        for t in _parse(ttl)
     )
     assert reparsed == original
