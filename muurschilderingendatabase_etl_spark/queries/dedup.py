@@ -30,6 +30,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from muurschilderingendatabase_etl_spark.queries.textutil import gram_rows, word_ngrams
 from muurschilderingendatabase_etl_spark.registry import query
 from muurschilderingendatabase_etl_spark.tables import release_checkpoint, t
 
@@ -103,9 +104,9 @@ def _ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Candidate generation is PARTITION-BASED (the pigeonhole scheme of
     partition-based set-similarity joins, cf. PassJoin / Deng et al.
-    VLDB'15), not a block-nested pair join — the r3 sf1 probe showed the
-    (source, size-bucket) pair join going 57× on 10× data because every
-    block grows linearly with the corpus:
+    VLDB'15), not a block-nested (source, size-bucket) pair join: every
+    block grows linearly with the corpus, so that join measured 57× the
+    time on 10× the data at sf1:
 
     1. Words are 64-bit-hashed and sorted (jaccard over hashed sets
        equals jaccard over word sets up to 64-bit collisions,
@@ -298,8 +299,6 @@ def _shingles(wcol):
     on documents shorter than 3 words) disappears because slice length
     is clamped at 0. Output arrays are element-for-element identical
     (equivalence-pinned in tests/test_dedup.py)."""
-    from muurschilderingendatabase_etl_spark.queries.textutil import word_ngrams
-
     return F.array_distinct(word_ngrams(wcol, 3))
 
 
@@ -349,12 +348,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(F.col("sh"), lambda h: F.xxhash64(h, F.lit(i)))
         )
 
-    # r12 note: a single-expression form — transform(sequence(0,15),
-    # i -> array_min(transform(sh, h -> xxhash64(h, i)))) — produces
-    # identical signatures and saves ~0.2 s of py4j build, but executes
-    # 4-5× SLOWER (1.4 s → 6.5 s at sf0.1): the outer nested lambda
-    # forces the whole fold through interpreted NamedLambdaVariable
-    # binding per element. Sixteen flat columns stay the fast form.
+    # Sixteen flat minhash columns: the nested-lambda form
+    # transform(sequence(0,15), i -> array_min(transform(sh, h ->
+    # xxhash64(h, i)))) gives identical signatures and ~0.2 s less py4j
+    # build, but runs interpreted (NamedLambdaVariable binding per
+    # element), 4-5× slower: 1.4 s → 6.5 s at sf0.1.
     mh = docs.select(
         "doc_id",
         F.array(*[_minhash(i) for i in range(_N_MINHASH)]).alias("sig"),
@@ -442,8 +440,8 @@ _SIMHASH_SLICE_N = 1500
     """,
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup mining, value-checked IN-BAND (the r6-HLL/r8-ANN
-    contract pattern): the simhashes are xxhash64-derived so no external
+    """SimHash near-dup mining, value-checked IN-BAND (as the HLL sketch
+    and ANN queries are): the simhashes are xxhash64-derived so no external
     engine can recompute the pair set, but the LOSSLESSNESS of the
     C(5,2) pigeonhole miner is checkable inside the query — a
     brute-force all-pairs hamming scan over the doc_id < 1500 slice
@@ -451,12 +449,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pairwise predicate ⇒ restriction commutes with mining). The driver
     hash-compares the emitted boolean against the oracle's declared
     TRUE. The hamming-radius bound itself is enforced by construction
-    (the miner's final filter), so a max(hamming)<=3 column over the
-    miner's output would be tautological (r8 ADVICE); the radius IS
+    (the miner's final filter), so a max(hamming) column over the
+    miner's output would be tautological; the radius IS
     value-checked on the slice regardless, because slice_lossless's
     intersection join keys on (doc_a, doc_b, hamming) — the brute side's
     independently computed hamming must equal the miner's for every
-    slice pair. The pair miner itself is _simhash_pairs (tested
+    slice pair. The pair miner itself is _simhash_pairs_from (tested
     wholesale in tests/test_dedup.py); the slice check is constant work
     (~1.1M xor+bit_count) at any corpus size.
 
@@ -468,8 +466,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _simhash_pairs_from(sims)
     sl = sims.where(F.col("doc_id") < _SIMHASH_SLICE_N)
     a, b = sl.alias("a"), sl.alias("b")
-    # Explicit broadcast hint on the bounded slice (r11 VERDICT item 3:
-    # the similarity_label_cohesion lesson) — without it this non-equi
+    # Explicit broadcast hint on the bounded slice: without it this non-equi
     # self-join is BNLJ only by lineage accident (the localCheckpoint
     # feeds usable stats today); a stats or lineage change could
     # silently resurrect a CartesianProduct that re-partitions constant
@@ -485,14 +482,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
             ).alias("hamming"),
         )
-        .where(F.col("hamming") <= 3)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
     mined_slice = pairs.where(
         (F.col("doc_a") < _SIMHASH_SLICE_N) & (F.col("doc_b") < _SIMHASH_SLICE_N)
     ).select("doc_a", "doc_b", "hamming")
     # Set equality via three counts (both sides are key-distinct by
-    # construction): |brute| == |mined∩slice| == |inner join|. exceptAll
-    # was the first spelling, but its replicate-and-sum rewrite trips an
+    # construction): |brute| == |mined∩slice| == |inner join|, not
+    # exceptAll: its replicate-and-sum rewrite trips an
     # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND bind bug when both inputs share
     # the self-joined sims lineage (Spark 4.1.2).
     nb = brute.agg(F.count(F.lit(1)).alias("nb"))
@@ -531,16 +528,13 @@ def _simhash_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    # r12 perf (guide §1.2 per-task work + §7.3 driver cost): the
-    # signature is ONE SQL-text expression — a single fold over the
-    # token hashes carrying a 64-wide bit-count array — instead of 64
-    # separately constructed aggregate() columns. The old form cost
-    # ~4 s of pure driver-side build per run (64 HOF lambdas × py4j
-    # round-trips; cProfile: 5.7 s of 6.9 s build in socket reads) and
-    # re-walked the hashes array 64 times per row executor-side. Bit
-    # semantics are unchanged: bit i of h tested via h & (1<<i) ≡ the
-    # old shiftright(h,i)&1 (incl. bit 63, where the mask is the sign
-    # bit), +1/-1 integer counts, bit set iff count > 0, OR-folded.
+    # The signature is ONE SQL-text expression, a single fold over the
+    # token hashes carrying a 64-wide bit-count array: 64 separately
+    # built aggregate() columns cost ~4 s of driver-side build per run
+    # (64 HOF lambdas × py4j round-trips) and walk the hashes array 64
+    # times per row. Bit i of h is tested via h & (1<<i) (bit 63's mask
+    # is the sign bit); +1/-1 integer counts, bit set iff count > 0,
+    # OR-folded.
     masks = "transform(sequence(0, 63), i -> shiftleft(1L, i))"
     simhash = F.expr(
         f"""
@@ -557,8 +551,9 @@ def _simhash_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", simhash.alias("simhash"))
 
 
-def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash near-dup pairs (hamming ≤ 3).
+def _simhash_pairs_from(sims: DataFrame) -> DataFrame:
+    """64-bit SimHash near-dup pairs (hamming ≤ SIMHASH_MAX_HAMMING) over
+    the (doc_id, simhash) rows of ``_simhash_sims``.
 
     Token hashes fold into a 64-dim sign vector with aggregate (no
     explode — one row per doc throughout). Candidates via the
@@ -568,10 +563,10 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     C(5,2)=10 combos — matches exactly on both sides. The join key is
     (combo_id, chunk_i, chunk_j): ~26 key bits instead of the 16 bits a
     single-chunk scheme gives, which cuts spurious candidates by ~2¹⁰
-    for 2.5× the signature replication — this is what the r3 sf1 probe
-    bought down from 71.6 s (4×16-bit single-chunk keys collapse when
-    simhashes cluster, as real corpora and the 31-word fixture vocab
-    both make them). Exact verify with xor + bit_count.
+    for 2.5× the signature replication (4×16-bit single-chunk keys
+    collapse when simhashes cluster, as real corpora and the 31-word
+    fixture vocab both make them: 71.6 s at sf1). Exact verify with
+    xor + bit_count.
 
     The repartition inside _simhash_sims runs AFTER projecting the hash
     array: 64 aggregate() folds per row is the CPU hot spot (and the
@@ -582,10 +577,6 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pathology as textutil's module docstring). Bit positions are
     unrolled statically because shiftright takes a literal shift.
     """
-    return _simhash_pairs_from(_simhash_sims(spark, sf_dir))
-
-
-def _simhash_pairs_from(sims: DataFrame) -> DataFrame:
     cuts = SIMHASH_CUTS
 
     def chunk(c: int):
@@ -629,7 +620,7 @@ def _simhash_pairs_from(sims: DataFrame) -> DataFrame:
             hamming.alias("hamming"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
-        .where(F.col("hamming") <= 3)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .orderBy("doc_a", "doc_b")
     )
 
@@ -669,8 +660,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     At τ=0.35 over 64-dim near-orthogonal vectors no lossless geometric
     pruning exists (the threshold sits ~2.8σ into the random-cosine
     distribution, so every same-label pair must genuinely be examined);
-    the r3 sf1 probe showed the per-pair zip_with fold going 62× on 10×
-    data. Exact all-pairs is inherently O(block²) COMPARISONS — the fix
+    a per-pair zip_with fold measured 62× the time on 10× the data at
+    sf1. Exact all-pairs is inherently O(block²) COMPARISONS — the fix
     is to make each comparison a BLAS flop instead of a codegen'd
     64-step fold, and to bound task memory:
 
@@ -871,27 +862,25 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each (eager) checkpoint below releases the one it read, so a run
     # leaves only the labels checkpoint behind the returned frame.
 
-    # Convergence certification (r13, guide §1.2 — don't run a full
-    # edges⋈labels round to prove what one node-cardinality aggregate
-    # proves). local_uf emits each node once per PARTITION it appears
-    # in, so `labels` is duplicate-free  ⟺  every node's incident
-    # edges live in a single partition (a pair row mentioning node d
-    # lands in the partition of its block, so d shows up in exactly
-    # the partitions its blocks hash to). If that holds, every
-    # CONNECTED COMPONENT is wholly contained in one partition — walk
-    # any path: each edge keeps both endpoints in the same partition,
-    # and no node bridges two — and the per-partition min-root
-    # union-find is therefore the exact global answer: nothing to
-    # reconcile. The r12 shape proved the same fact by running one
-    # full pointer-jumping round (edges join + groupBy + two label
-    # joins + checkpoint, ~1.1 s at sf0.1) and observing zero label
-    # changes; this count ⟂ countDistinct certificate is implied by
-    # it and costs one small job over the node-cardinality labels.
-    # On block = source data the certificate always passes (each doc
-    # has ONE source, so all its pairs carry one block value); the
-    # generic loop below stays as the 100 TB safety net for any
-    # cross-partition graph — and the certificate, not an assumption
-    # about the miner, is what gates skipping it.
+    # Convergence certification: one node-cardinality aggregate proves
+    # what a full edges⋈labels round would. local_uf emits each node
+    # once per PARTITION it appears in, so `labels` is duplicate-free ⟺
+    # every node's incident edges live in a single partition (a pair row
+    # mentioning node d lands in the partition of its block, so d shows
+    # up in exactly the partitions its blocks hash to). If that holds,
+    # every CONNECTED COMPONENT is wholly contained in one partition —
+    # walk any path: each edge keeps both endpoints in the same
+    # partition, and no node bridges two — and the per-partition
+    # min-root union-find is therefore the exact global answer: nothing
+    # to reconcile. A full pointer-jumping round (edges join + groupBy +
+    # two label joins + checkpoint, ~1.1 s at sf0.1) observing zero
+    # label changes proves the same fact; this count vs countDistinct
+    # certificate costs one small job over the node-cardinality labels.
+    # On block = source data the certificate always passes (each doc has
+    # ONE source, so all its pairs carry one block value); the generic
+    # loop below stays as the 100 TB safety net for any cross-partition
+    # graph — and the certificate, not an assumption about the miner, is
+    # what gates skipping it.
     # tests/test_dedup.py::test_cc_cross_partition_fallback forces a
     # failing certificate and checks the loop reconciles exactly.
     n_rows, n_nodes = labels.agg(
@@ -906,11 +895,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cross-partition components exist: merge the per-partition label
     # rows to ONE row per node (min label — exactly the min-root
     # invariant the local phase maintains) so the loop iterates over
-    # node-cardinality state; the r12 loop ran straight over the
-    # duplicated rows, which the hop self-join would multiply. Then
-    # build the symmetric edge list (only needed on this branch — r13
-    # moved it out of the certified fast path) and run the generic
-    # pointer-jumping min-label loop.
+    # node-cardinality state (the hop self-join would multiply
+    # duplicated rows). Then build the symmetric edge list (only this
+    # branch needs it) and run the generic pointer-jumping min-label
+    # loop.
     merged = labels.groupBy("node").agg(F.min("label").alias("label")).localCheckpoint()
     release_checkpoint(labels)
     labels = merged
@@ -1206,24 +1194,11 @@ def dedup_shared_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram->docs index is the same frame a span-REMOVAL pass would use to
     cut the span out of all-but-one owner."""
     docs = t(spark, sf_dir, "documents")
-    w = F.split("text", " ")
-    d = docs.select(
-        "doc_id", w.alias("w"), F.size(w).alias("nw")
-    ).where(F.col("nw") >= SPAN_N)
-    # Explode the span INDEX and slice after the Generate: the exploded
-    # stream is the fastest gram form because Generate is itself a
-    # projection-collapse barrier (the textutil O(n²) pathology cannot
-    # reach through it) and each gram string is built exactly once.
-    # Measured at sf1 vs building the gram array pre-explode with
-    # word_ngrams: 2.0 s vs 7.1 s for the explode phase (see
-    # textutil.word_ngrams docstring for when the array form wins).
-    g = d.select(
-        "doc_id",
-        "w",
-        F.explode(F.sequence(F.lit(0), F.col("nw") - SPAN_N)).alias("i"),
-    ).select(
-        "doc_id",
-        F.array_join(F.slice(F.col("w"), F.col("i") + 1, SPAN_N), " ").alias("gram"),
+    # The gram stream (textutil decision rule 2) is the fastest span
+    # form: measured at sf1 vs building the gram array pre-explode with
+    # word_ngrams, 2.0 s vs 7.1 s for the explode phase.
+    g = gram_rows(
+        docs.select("doc_id", F.split("text", " ").alias("w")), "w", SPAN_N, "doc_id"
     )
     dup = (
         g.groupBy("gram")

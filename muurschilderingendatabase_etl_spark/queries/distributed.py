@@ -15,9 +15,9 @@ no driver-side counts pass:
    partitions, so identical partition assignment is guaranteed by
    construction — it does NOT depend on ``spark.sql.exchange.reuse``
    or on RangePartitioner's boundary sampling being deterministic
-   across two executions (r5 ADVICE: with reuse disabled and a
-   nondeterministic upstream, two independent exchanges could sample
-   different boundaries and silently mis-number rows). The partition
+   across two executions (with reuse disabled and a nondeterministic
+   upstream, two independent exchanges could sample different
+   boundaries and silently mis-number rows). The partition
    count is passed explicitly so AQE never re-plans it.
 2. Main branch: ``sortWithinPartitions`` + ``monotonically_increasing_
    id`` assign each row ``pid * 2^33 + local_index`` in sort order —
@@ -45,6 +45,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from muurschilderingendatabase_etl_spark.tables import byte_partitions
+
 # monotonically_increasing_id() = partition_id * 2^33 + row_index
 _MID_PARTITION_SHIFT = 33
 
@@ -65,23 +67,20 @@ def with_global_row_number(
     """
     from pyspark.storagelevel import StorageLevel
 
-    spark = df.sparkSession
     if num_partitions is None:
-        # r12 (guide §2.2 fewer-larger partitions): byte-sized range
-        # partitions from Catalyst's column-pruning-aware size estimate
-        # — one per ~64 MB, floored at 8 (the measured-optimal count at
+        # Byte-sized range partitions from Catalyst's column-pruning-aware
+        # size estimate, floored at 8 (the measured-optimal count at
         # bench SF: 32→8 saved ~0.25 s/run on the 600k-row sort, 8→2
-        # regressed), capped at the core count. At sf100 the estimate
-        # (~3.3 GB projected) reaches the cap, so big sorts keep full
-        # fan-out with bounded per-task sort volume.
-        par = spark.sparkContext.defaultParallelism
+        # regressed). At sf100 the estimate (~3.3 GB projected) reaches
+        # the core cap, so big sorts keep full fan-out with bounded
+        # per-task sort volume.
         try:
             est = int(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
         except Exception:
             est = 0
-        n_parts = min(par, max(8, est // (64 << 20)))
+        n_parts = byte_partitions(df.sparkSession, est, 8)
     else:
         n_parts = num_partitions
     # Lazy localCheckpoint: the range shuffle's output is materialized
@@ -140,18 +139,14 @@ def with_global_row_number(
 
 
 def exact_group_percentiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ps: list[float],
-    num_partitions: int | None = None,
+    df: DataFrame, group_col: str, value_col: str, ps: list[float]
 ) -> DataFrame:
     """Exact PERCENTILE_CONT per group WITHOUT per-task value buffering.
 
     Spark's builtin ``percentile()`` aggregates through a per-task
     value->count hashmap (TypedAggregateWithHashMapAsBuffer) whose
     serialized partial state is O(distinct values per partition) — an
-    r7 sf10 probe OOMed a 8 GiB heap on exactly that buffer with 32
+    sf10 probe OOMed a 8 GiB heap on exactly that buffer with 32
     concurrent tasks over ~60M prices. This is the scale-safe form:
 
     1. one distributed range-shuffle sort ranks every row globally by
@@ -178,12 +173,7 @@ def exact_group_percentiles(
     base = df.select(
         F.col(group_col).alias("_g"), F.col(value_col).cast("double").alias("_v")
     )
-    ranked = with_global_row_number(
-        base,
-        [F.col("_g"), F.col("_v")],
-        out_col="_grn",
-        num_partitions=num_partitions,
-    )
+    ranked = with_global_row_number(base, [F.col("_g"), F.col("_v")], out_col="_grn")
 
     counts = base.groupBy("_g").agg(F.count(F.lit(1)).alias("_n"))
     w_prev = Window.orderBy("_g").rowsBetween(Window.unboundedPreceding, -1)

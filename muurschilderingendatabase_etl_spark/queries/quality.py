@@ -14,6 +14,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from muurschilderingendatabase_etl_spark.queries.textutil import gram_rows
 from muurschilderingendatabase_etl_spark.registry import query
 from muurschilderingendatabase_etl_spark.tables import t
 
@@ -201,28 +202,17 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     The digest is md5 here because the DuckDB oracle must compute the
     identical value — at 100 TB you'd swap in xxhash64 (8-byte keys,
     same plan)."""
-    words = F.split("text", " ")
-    docs = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "source", words.alias("w"))
-        .where(F.size("w") >= 5)
+    docs = t(spark, sf_dir, "documents").select(
+        "doc_id", "source", F.split("text", " ").alias("w")
     )
-    # Explode the gram INDEX, then slice + md5 after the Generate: the
-    # Generate node is a projection-collapse barrier (textutil
-    # docstring), each gram + digest is built exactly once, and nothing
+    # Gram stream (textutil decision rule 2), digested after the
+    # Generate: each gram + digest is built exactly once, and nothing
     # is materialized per-doc. Measured at sf1: 5.9 s vs 10.8 s for the
     # digest-in-array form.
-    shingles_raw = docs.select(
-        "doc_id",
-        "source",
-        "w",
-        F.explode(F.sequence(F.lit(0), F.size("w") - 5)).alias("i"),
-    ).select(
-        "doc_id",
-        "source",
-        F.md5(F.array_join(F.slice(F.col("w"), F.col("i") + 1, 5), " ")).alias("sh"),
+    shingles_raw = gram_rows(docs, "w", 5, "doc_id", "source").select(
+        "doc_id", "source", F.md5("gram").alias("sh")
     )
-    # Per-branch dedup (r12, guide §2.4 remove shuffles): the candidate
+    # Per-branch dedup (one shuffle fewer): the candidate
     # side keeps the (doc, sh) dedup — insurance against repeated-gram
     # join blowup at scale — but the bench side only ever needs the
     # DISTINCT sh set, so running it through the (doc_id, sh) dedup
@@ -340,10 +330,8 @@ def contamination_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     batch. FP budget: m=2^16, k=3 at the fixture's ~10³ benchmark grams
     → ~1e-4 per probe; FPs only cost verify work.
     """
-    docs = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "source", F.split("text", " ").alias("w"))
-        .where(F.size("w") >= 5)
+    docs = t(spark, sf_dir, "documents").select(
+        "doc_id", "source", F.split("text", " ").alias("w")
     )
 
     def probe_positions(gram, j):
@@ -352,18 +340,11 @@ def contamination_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     bench_docs = docs.where(
         (F.col("source") == "src0") & (F.col("doc_id") < 1000)
     )
-    bench_grams = bench_docs.select(
-        "doc_id",
-        "source",
-        "w",
-        F.explode(F.sequence(F.lit(0), F.size("w") - 5)).alias("i"),
-    ).select(
-        F.array_join(F.slice(F.col("w"), F.col("i") + 1, 5), " ").alias("g")
-    )
+    bench_grams = gram_rows(bench_docs, "w", 5)
     words = (
         bench_grams.select(
             F.explode(
-                F.array(*[probe_positions(F.col("g"), j) for j in range(_BLOOM_K)])
+                F.array(*[probe_positions(F.col("gram"), j) for j in range(_BLOOM_K)])
             ).alias("pos")
         )
         .groupBy((F.col("pos") / 64).cast("int").alias("wi"))
@@ -398,8 +379,7 @@ def contamination_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
             hit = h if hit is None else (hit & h)
         return hit
 
-    # Gram-level screen in the stream form (explode the index, build
-    # each gram once after the Generate — textutil decision rule 2):
+    # Gram-level screen in the stream form (textutil decision rule 2):
     # the bloom predicate sits BETWEEN the Generate and the md5 +
     # dedup + shuffle, so pruned grams never get digested, deduplicated
     # or moved. 3 xxhash64 probes per gram replace an md5 + exchange
@@ -410,32 +390,12 @@ def contamination_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     # the explode, and the only thing saved — the Generate itself —
     # is cheaper than the rebuild. The screen lives at gram level only.
     surv_shingles = (
-        docs.where(F.col("source") != "src0")
-        .select(
-            "doc_id",
-            "source",
-            "w",
-            F.explode(F.sequence(F.lit(0), F.size("w") - 5)).alias("i"),
-        )
-        .select(
-            "doc_id",
-            "source",
-            F.array_join(F.slice(F.col("w"), F.col("i") + 1, 5), " ").alias("g"),
-        )
-        .where(might_contain(F.col("g")))
-        .select("doc_id", "source", F.md5("g").alias("sh"))
+        gram_rows(docs.where(F.col("source") != "src0"), "w", 5, "doc_id", "source")
+        .where(might_contain(F.col("gram")))
+        .select("doc_id", "source", F.md5("gram").alias("sh"))
         .dropDuplicates(["doc_id", "sh"])
     )
-    bench = (
-        bench_docs
-        .select(
-            "w", F.explode(F.sequence(F.lit(0), F.size("w") - 5)).alias("i")
-        )
-        .select(
-            F.md5(F.array_join(F.slice(F.col("w"), F.col("i") + 1, 5), " ")).alias("sh")
-        )
-        .distinct()
-    )
+    bench = bench_grams.select(F.md5("gram").alias("sh")).distinct()
     return (
         surv_shingles.join(bench, "sh")
         .groupBy("source")

@@ -6,15 +6,15 @@ explicit StructType is the production path).
 
 Scale notes: the parquet scan query is written so both the filter and the
 3-column projection reach the scan node (`PushedFilters`, `ReadSchema` in
-explain). CSV/JSON round-trips write to a session-scoped temp dir with
-Spark's distributed writer — at 100 TB these are partitioned directories,
-not single files.
+explain). Every query that writes scratch output writes it to a fresh
+``rm_at_exit(tempfile.mkdtemp(...))`` dir with Spark's distributed writer
+(at 100 TB these are partitioned directories, not single files): a frame
+returned by one call keeps reading its own files after the next call.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 import pyspark.sql.functions as F
@@ -22,24 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from muurschilderingendatabase_etl_spark.registry import query
 from muurschilderingendatabase_etl_spark.queries import money
-from muurschilderingendatabase_etl_spark.tables import disk_bytes, rm_at_exit, t
-
-
-# Output dir of the most recent sink_compact_small_files run in this
-# process — lets tests assert file counts without mtime-glob guessing.
-LAST_COMPACT_DIR: str | None = None
-
-
-def _write_partitions(spark: SparkSession, sf_dir: str, table: str) -> int:
-    """Byte-sized write fan-out (r12, guide §6): one write partition per
-    ~64 MB of source parquet, capped at the core count — output files
-    land in the size band readers want (not 32 few-hundred-KB shards of
-    a 60 MB fixture), and the fan-out still reaches every core once the
-    table is ≥ 64 MB × cores (sf10+), preserving the r7 lesson that a
-    constant small fan-out is the one true scale killer here."""
-    nbytes = disk_bytes(os.path.join(sf_dir, f"{table}.parquet"))
-    par = spark.sparkContext.defaultParallelism
-    return max(1, min(par, nbytes // (64 << 20) + 1))
+from muurschilderingendatabase_etl_spark.tables import (
+    byte_partitions,
+    disk_bytes,
+    rm_at_exit,
+    t,
+)
 
 
 @query(
@@ -73,11 +61,7 @@ def scan_parquet_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Distributed CSV write + schema-explicit read back (header mode).
-    # Session-scoped path: fixed paths race under concurrent sessions.
-    path = rm_at_exit(os.path.join(
-        tempfile.gettempdir(),
-        f"msdb_spark_csv_nation_{spark.sparkContext.applicationId}",
-    ))
+    path = rm_at_exit(tempfile.mkdtemp(prefix="msdb_csv_"))
     t(spark, sf_dir, "nation").write.mode("overwrite").option("header", True).csv(path)
     return spark.read.schema(
         "n_nationkey int, n_name string, n_regionkey int"
@@ -90,11 +74,8 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JSON-lines write + explicit-schema read (inference would also work but
-    # is a full extra pass at scale). Session-scoped path (see CSV note).
-    path = rm_at_exit(os.path.join(
-        tempfile.gettempdir(),
-        f"msdb_spark_json_customer_{spark.sparkContext.applicationId}",
-    ))
+    # is a full extra pass at scale).
+    path = rm_at_exit(tempfile.mkdtemp(prefix="msdb_json_"))
     t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     ).write.mode("overwrite").json(path)
@@ -114,12 +95,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Write an aggregate to parquet and read it back — sink + source parity.
-    # Path is session-scoped: a FIXED path raced when two sessions (e.g.
-    # the driver check and a concurrent test run) overwrote it mid-read.
-    path = rm_at_exit(os.path.join(
-        tempfile.gettempdir(),
-        f"msdb_spark_parquet_sink_{spark.sparkContext.applicationId}",
-    ))
+    path = rm_at_exit(tempfile.mkdtemp(prefix="msdb_parquet_sink_"))
     agg = (
         t(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
@@ -263,24 +239,15 @@ def sink_managed_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog surface: saveAsTable into the managed warehouse, extend it
     with SQL INSERT INTO, read back through the catalog — the DDL/DML
     path alongside the file-path reads used elsewhere."""
-    import re
-    import shutil
+    import uuid
 
-    # Session-scoped table name: the warehouse dir is shared across
-    # builder sessions, and a fixed name races when two sessions (driver
-    # check + tests) drop/recreate it concurrently.
-    app = re.sub(r"[^A-Za-z0-9]", "_", spark.sparkContext.applicationId)
-    table = f"msdb_nations_rt_{app}"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # The managed location outlives the in-memory catalog across
-    # sessions; clear any stale directory or saveAsTable refuses with
-    # LOCATION_ALREADY_EXISTS.
+    # A fresh table per call, like the scratch dirs: the frame an earlier
+    # call returned keeps reading its own table files, and sessions that
+    # share the warehouse never collide. The table dir would otherwise
+    # accumulate in the shared warehouse; reclaim it when this
+    # interpreter exits (the catalog entry dies with the session).
+    table = f"msdb_nations_rt_{uuid.uuid4().hex}"
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
-    # The session-scoped table dir would otherwise accumulate in the
-    # shared warehouse forever (one per applicationId); reclaim it when
-    # this interpreter exits (the returned frame is collected well before
-    # then, and the catalog entry dies with the session anyway).
     rm_at_exit(f"{warehouse}/{table}")
     (
         t(spark, sf_dir, "nation")
@@ -365,21 +332,19 @@ def sink_sorted_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     within, and time-bounded scans touch only their row groups."""
     tmp = rm_at_exit(tempfile.mkdtemp(prefix="msdb_sorted_"))
     # Partition count is BYTE-sized and capped at cluster fan-out, never
-    # a constant (r12, guide §6 output file sizing + §2.2): one range
-    # partition per ~64 MB of source parquet keeps output files in the
-    # size band readers want, uses every core once the table is ≥
-    # 64 MB × cores, and never writes 32 few-hundred-KB shards of a
-    # 60 MB fixture. The r7 lesson stands — a FIXED 8-way write sorted
-    # n/8 rows per task at sf10 (18.8×, 8 of 32 cores busy) — and this
-    # formula reproduces full fan-out there (sf10 lineitem ≈ several GB
-    # → capped at defaultParallelism); file SIZE within a task is the
-    # knob a 100 TB deployment adds via maxRecordsPerFile.
+    # a constant: one range partition per 64 MB of source parquet keeps
+    # output files in the size band readers want, uses every core once
+    # the table is ≥ 64 MB × cores, and never writes 32 few-hundred-KB
+    # shards of a 60 MB fixture. A FIXED 8-way write sorted n/8 rows per
+    # task at sf10 (18.8×, 8 of 32 cores busy); this count reaches full
+    # fan-out there (sf10 lineitem ≈ several GB → capped at
+    # defaultParallelism). File SIZE within a task is the knob a 100 TB
+    # deployment adds via maxRecordsPerFile.
+    n_parts = byte_partitions(spark, disk_bytes(f"{sf_dir}/lineitem.parquet"), 1)
     (
         t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_shipdate", "l_extendedprice")
-        .repartitionByRange(
-            _write_partitions(spark, sf_dir, "lineitem"), "l_shipdate"
-        )
+        .repartitionByRange(n_parts, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
         .write.mode("overwrite")
         .parquet(tmp)
@@ -444,15 +409,14 @@ def sink_zorder_2d_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(16)
         )
     )
+    # byte-sized fan-out, same rationale as the sorted sink
+    n_parts = byte_partitions(spark, disk_bytes(f"{sf_dir}/orders.parquet"), 1)
     (
         t(spark, sf_dir, "orders")
         .select("o_custkey", "o_orderdate", "o_totalprice",
                 ck.alias("ck"), dy.alias("dy"))
         .select("o_custkey", "o_orderdate", "o_totalprice", z.alias("zv"))
-        # byte-sized fan-out, same rationale as the sorted sink (§6)
-        .repartitionByRange(
-            _write_partitions(spark, sf_dir, "orders"), "zv"
-        )
+        .repartitionByRange(n_parts, "zv")
         .sortWithinPartitions("zv")
         .drop("zv")
         .write.mode("overwrite")
@@ -491,10 +455,8 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. At 100 TB this runs per-partition with a target of
     128 MB-1 GB per file (`maxRecordsPerFile` / AQE advisory size);
     the file-count collapse is asserted in tests/test_invariants.py."""
-    global LAST_COMPACT_DIR
     frag = rm_at_exit(tempfile.mkdtemp(prefix="msdb_frag_"))
     compact = rm_at_exit(tempfile.mkdtemp(prefix="msdb_compact_"))
-    LAST_COMPACT_DIR = compact  # tests assert file-count on THIS run's dir
     docs = t(spark, sf_dir, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(frag)
     (
@@ -558,9 +520,6 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-LAST_MERGE_DIR: str | None = None
-
-
 def _merge_frames(base: DataFrame, chg: DataFrame) -> DataFrame:
     """MERGE semantics on DataFrames (matched delete / matched update /
     unmatched insert): untouched base rows via one left_anti join on the
@@ -622,11 +581,9 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-wins) — no window, no global sort; both sides shuffle once
     on event_id. At 100 TB the anti-join prunes with a changelog-key
     bloom filter and the rewrite touches only affected partitions."""
-    global LAST_MERGE_DIR
     import json as _json
 
     root = rm_at_exit(tempfile.mkdtemp(prefix="msdb_merge_"))
-    LAST_MERGE_DIR = root
     v0, v1 = os.path.join(root, "v0"), os.path.join(root, "v1")
 
     ev = t(spark, sf_dir, "events").select(

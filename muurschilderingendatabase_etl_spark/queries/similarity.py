@@ -36,8 +36,8 @@ _N_QUERIES = 10  # vec_id < 10 are the query vectors
 
 
 def _dlit_arr(vals) -> "F.Column":
-    """Constant array<double> literal in ONE py4j call (guide §7.3
-    driver cost): ``F.lit(ndarray)`` transfers element-by-element
+    """Constant array<double> literal in ONE py4j call (driver-side
+    build cost): ``F.lit(ndarray)`` transfers element-by-element
     through py4j's ListConverter (measured ~0.55 s for the 32 plane
     rows of the LSH build) and ``F.array(*[F.lit(x)...])`` is worse
     (one round-trip per element). A SQL-text array parses JVM-side in
@@ -129,15 +129,16 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("q_id") != F.col("vec_id"))
         .select("q_id", "vec_id", cosine.alias("cosine"))
     )
-    # Two-stage top-k (r9 sf100 12.5x/decade tail): the single global
-    # window hash-partitions the FULL score relation on q_id — with
-    # |Q|=10 queries that is 10 tasks each sorting |corpus| rows (2M at
-    # sf100) while the other cores idle. Stage 1 ranks within
-    # (q_id, input partition) — 32x|Q| balanced groups — and keeps k
-    # rows per group, so the q_id-only window sees <= k x partitions
-    # rows per query instead of the corpus. Both stages rank by the
-    # SAME total order (cosine desc, vec_id), so the local top-k is a
-    # superset of the global top-k and the result is bit-identical.
+    # Two-stage top-k (a single window measured 12.5x per decade of
+    # corpus at sf100): the single global window hash-partitions the
+    # FULL score relation on q_id — with |Q|=10 queries that is 10 tasks
+    # each sorting |corpus| rows (2M at sf100) while the other cores
+    # idle. Stage 1 ranks within (q_id, input partition) — 32x|Q|
+    # balanced groups — and keeps k rows per group, so the q_id-only
+    # window sees <= k x partitions rows per query instead of the
+    # corpus. Both stages rank by the SAME total order (cosine desc,
+    # vec_id), so the local top-k is a superset of the global top-k and
+    # the result is bit-identical.
     w_local = Window.partitionBy("q_id", "pid").orderBy(
         F.desc("cosine"), "vec_id"
     )
@@ -179,8 +180,8 @@ def _recall_summary(
     approx: DataFrame,
     floor: float,
 ) -> DataFrame:
-    """In-band value-check for an ANN probe (r7 verdict item 4, the same
-    contract upgrade the r6 HLL sketches got): compute the EXACT top-k
+    """In-band value-check for an ANN probe (the same in-query contract
+    as the HLL sketch queries): compute the EXACT top-k
     alongside the index probe, measure recall@k, and emit a single row
     whose floor boolean the driver hash-compares — the oracle declares
     TRUE. The neighbor IDs themselves stay out of the hashed output
@@ -264,16 +265,12 @@ def _lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def bucket_of(vcol, planes):
-        # r12 perf (guide §1.2 / §7.3 planning cost): the signature is
-        # built as ONE expression — a transform over the plane matrix
-        # (8 single-Literal ndarray rows), dot-folded and bit-weighted
-        # with a zip_with — instead of 8 separately constructed
-        # F.when(_dot(...)) columns per table. The old form cost ~2.6 s
-        # of pure driver-side build per run (hundreds of py4j Column
-        # round-trips × 4 tables; measured build=2.6 s vs exec=1.4 s),
-        # plus the CreateArray literal bloat the bloom fix documented.
-        # Per-plane fold order and bit weights are unchanged ⇒ identical
-        # bucket values.
+        # The signature is ONE expression — a transform over the plane
+        # matrix (8 single-Literal ndarray rows), dot-folded and
+        # bit-weighted with a zip_with: 8 separately built
+        # F.when(_dot(...)) columns per table cost ~2.6 s of driver-side
+        # build per run (hundreds of py4j Column round-trips × 4 tables;
+        # build 2.6 s vs exec 1.4 s) plus CreateArray literal bloat.
         pmat = F.array(*[_dlit_arr(p) for p in planes])
         weights = _ilit_arr([1 << i for i in range(len(planes))])
         dots = F.transform(pmat, lambda p: _dot(vcol, p))
@@ -319,9 +316,9 @@ def _lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def probes_of(bucket_col):
         # all masks with popcount <= radius; radius 3 over 8 planes =
-        # 1 + 8 + 28 + 56 = 93 of 256. r12 perf: one transform over a
-        # single mask-array Literal replaces 93 py4j-built XOR columns
-        # per table (same values, same ascending mask order).
+        # 1 + 8 + 28 + 56 = 93 of 256, as one transform over a single
+        # mask-array Literal (not 93 py4j-built XOR columns per table),
+        # in ascending mask order.
         masks = [
             m for m in range(1 << _N_PLANES)
             if bin(m).count("1") <= _PROBE_RADIUS
@@ -404,9 +401,9 @@ def similarity_label_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filtered scan at the FULL file size (no per-filter selectivity
     estimate on parquet), refuses to broadcast either side of the
     non-equi condition, and falls back to CartesianProduct — 32x32 =
-    1024 tasks each re-opening the source (the r11 sf100 tail sweep
-    read 22.8x/decade on what is constant work; with the hint the plan
-    is a 32-task BroadcastNestedLoopJoin at any corpus size)."""
+    1024 tasks each re-opening the source (measured 22.8x per decade of
+    corpus at sf100 on what is constant work; with the hint the plan is
+    a 32-task BroadcastNestedLoopJoin at any corpus size)."""
     emb = (
         t(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") < 60)
@@ -440,17 +437,17 @@ def _ivf_nprobe(n: int) -> int:
     """Corpus-adaptive probe count, tuned against TWO measured recall
     sweeps on isotropic (worst-case, no cluster structure) vectors:
 
-      200k (r6 sf10 probe): nprobe 4/6/8/10 -> 0.62/0.76/0.88/0.96
-      50k  (r7 in-test sweep, tests/test_ivf_midscale_recall.py):
+      200k (sf10): nprobe 4/6/8/10 -> 0.62/0.76/0.88/0.96
+      50k  (tests/test_ivf_midscale_recall.py):
             nprobe 5/6/7/8  -> 0.70/0.76/0.82/0.86
 
     Reading the two together: for UNstructured embeddings recall@5 is
     essentially a function of the probed fraction nprobe/k, nearly flat
-    in corpus size — the r6 exponent-only curve (4*(n/20k)^0.3) was
-    tuned at the 200k point and silently undershot the 0.8 floor in the
-    20k–130k window (nprobe 5 at 50k measures 0.70). So above the
+    in corpus size — an exponent-only curve (4*(n/20k)^0.3) tuned at
+    the 200k point undershoots the 0.8 floor in the 20k–130k window
+    (nprobe 5 at 50k measures 0.70). So above the
     clustered-fixture regime (the sf* testdata has 10-cluster structure;
-    nprobe 4 measures 0.88–0.92 there) the curve now floors at 7 — the
+    nprobe 4 measures 0.88–0.92 there) the curve floors at 7 — the
     smallest probe count that held >= 0.8 at every measured scale — and
     caps at 10 (0.96 at 200k; flat-in-n means more cells buy little but
     cost linearly). The honest 100 TB posture is different knobs
@@ -486,11 +483,10 @@ def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd's iterations run driver-side in NumPy in microseconds. The
     full corpus is then assigned in ONE map-side pass: k distance folds
     over a centroid LITERAL matrix + an array_min argmin — no shuffle
-    ever touches the vectors. This replaced r4/r5's full-corpus
-    distributed Lloyd (one assignment job + one k×dim-combining update
-    shuffle PER iteration — correct shape but 5 cluster jobs whose
-    fixed latency dominated at bench SF, 6.6 s in BENCH_r05, and pure
-    overkill: quantizer quality needs a sample, not the corpus). The
+    ever touches the vectors. A full-corpus distributed Lloyd would run
+    one assignment job + one k×dim-combining update shuffle PER
+    iteration, whose fixed job latency dominates at bench SF (6.6 s),
+    and quantizer quality needs a sample, not the corpus. The
     literal matrix form also keeps the generated code size independent
     of k (a transform loop over an array-of-arrays literal, not k
     unrolled folds). Search probes only nprobe cells per query with an
@@ -525,11 +521,10 @@ def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Deterministic bounded sample: top-N by xxhash64(vec_id) order —
     # a distributed TakeOrdered, O(corpus) scan with per-partition
     # top-N, driver receives ≤ _IVF_TRAIN_SAMPLE rows regardless of
-    # corpus size. r12 perf (guide §1.2, one pass not two): the corpus
-    # count for the adaptive nprobe rides THIS scan as an observe()
-    # metric — TakeOrderedAndProject evaluates every partition, so the
-    # observation is complete once the collect returns — instead of a
-    # separate count job over the cache.
+    # corpus size. The corpus count for the adaptive nprobe rides THIS
+    # scan as an observe() metric instead of a separate count job over
+    # the cache: TakeOrderedAndProject evaluates every partition, so the
+    # observation is complete once the collect returns.
     from pyspark.sql import Observation
 
     obs = Observation("ivf_corpus_n")
@@ -582,10 +577,9 @@ def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         loop over the centroid literal matrix (generated-code size is
         O(1) in k) + array_min over (d2, cid) structs (lexicographic
         struct order = the (d2, cid) tie-break)."""
-        # r12 perf: one-py4j-call array literals (see _dlit_arr) — the
-        # nested F.array(*[F.lit(x)...]) form was k×dim+k ≈ 1040 py4j
-        # round-trips re-paid on every build. SQL int literals keep the
-        # cid element type int exactly as .cast("int") did.
+        # One-py4j-call array literals (see _dlit_arr): nested
+        # F.array(*[F.lit(x)...]) costs k×dim+k ≈ 1040 py4j round-trips
+        # on every build. SQL int literals keep the cid element type int.
         cid_arr = _ilit_arr([c for c, _ in cents])
         cmat = F.array(*[_dlit_arr(cv) for _, cv in cents])
         d2s = F.transform(
@@ -642,9 +636,8 @@ def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") <= _TOP_K)
         .select("q_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rk")
     )
-    # Release the pinned vectors before returning (r6 ADVICE: the cache
-    # otherwise outlives the query in a long-lived session — the same
-    # executor-storage leak class as pagerank's fallback persist). The
+    # Release the pinned vectors before returning: the cache otherwise
+    # outlives the query in a long-lived session. The
     # small top-k result (≤ n_queries·k rows) is checkpointed eagerly
     # first so the returned frame no longer depends on the cache.
     out = out.localCheckpoint()

@@ -21,8 +21,8 @@ from muurschilderingendatabase_etl_spark.tables import t
 _N_SALT = 16
 
 
-def _view(spark: SparkSession, sf_dir: str, name: str, view: str) -> None:
-    t(spark, sf_dir, name).createOrReplaceTempView(view)
+def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
+    t(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 @query(
@@ -52,7 +52,7 @@ def sql_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-ulp cent flip wouldn't just flip a cell, it could reorder the
     ORDER BY revenue LIMIT 10 answer SET."""
     for name in ("customer", "orders", "lineitem"):
-        _view(spark, sf_dir, name, name)
+        _view(spark, sf_dir, name)
     from muurschilderingendatabase_etl_spark.queries.money import (
         SQL_SUM_DISC_PRICE,
     )
@@ -101,7 +101,7 @@ def sql_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape (6-way join) as SQL text — Catalyst picks the join
     order and broadcasts the dims; no hand-scheduling."""
     for name in ("customer", "orders", "lineitem", "supplier", "nation", "region"):
-        _view(spark, sf_dir, name, name)
+        _view(spark, sf_dir, name)
     # Revenue sums exactly on the integer-cents path (see queries.money;
     # the oracle keeps the clearer all-DECIMAL spelling — same exact
     # rational on both sides).
@@ -211,7 +211,7 @@ def sql_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     deep graphs the DataFrame pointer-jumping in
     dedup_connected_components (O(log diameter) rounds) is the engine's
     preferred formulation — this query is the SQL-front-door twin."""
-    _view(spark, sf_dir, "supplier", "supplier")
+    _view(spark, sf_dir, "supplier")
     return spark.sql(
         """
         WITH RECURSIVE d(k, depth) AS (

@@ -2,11 +2,13 @@
 'Streaming'; reference has no streaming — this is north-star surface).
 
 Each query replays the events parquet through ``readStream`` with
-``trigger(availableNow=True)`` (streaming/replay.py) and materializes the
-result through ``run_to_memory``'s idempotent foreachBatch parquet sink,
-so the registered callable still returns a batch DataFrame for the driver
-to collect. The topology is the production one: swap the file source for
-Kafka and the same plan runs continuously.
+``trigger(availableNow=True)``. Every stream, the late-drop query
+included, runs through ``replay``'s one run loop, ``run_to_sink``, into
+its idempotent foreachBatch parquet sink, so the registered callable
+still returns a batch DataFrame for the driver to collect:
+``run_to_memory`` calls the loop once, and the late-drop query calls it
+twice on one checkpoint. The topology is the production one: swap the
+file source for Kafka and the same plan runs continuously.
 
 Oracle notes:
 - Tumbling/sliding/session windows are batch-equivalent, so they get full
@@ -31,6 +33,9 @@ query.
 from __future__ import annotations
 
 import importlib.util
+import os
+import shutil
+import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -39,8 +44,12 @@ from muurschilderingendatabase_etl_spark.queries import money
 from muurschilderingendatabase_etl_spark.registry import query
 from muurschilderingendatabase_etl_spark.streaming.replay import (
     read_events_stream,
+    read_sink,
     run_to_memory,
+    run_to_sink,
+    stage_events_two_phase,
 )
+from muurschilderingendatabase_etl_spark.tables import rm_at_exit
 
 
 @query(
@@ -349,62 +358,30 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     up front under the initial watermark.) The combined append output of
     both runs is deterministic, and the oracle reproduces the drop rule
     exactly in SQL."""
-    import os
-    import shutil
-    import tempfile
-
-    from muurschilderingendatabase_etl_spark.streaming.replay import (
-        stage_events_two_phase,
-        stream_state_partitions,
-    )
-
-    from muurschilderingendatabase_etl_spark.tables import rm_at_exit
-
     srcdir, parked = stage_events_two_phase(spark, sf_dir)
+    ckpt = tempfile.mkdtemp(prefix="msdb_late_ckpt_")
     # atexit (not eager): the returned frame reads outdir lazily
-    work = rm_at_exit(tempfile.mkdtemp(prefix="msdb_late_"))
-    ckpt = os.path.join(work, "ckpt")
-    outdir = os.path.join(work, "out")
-
-    def run_once() -> None:
-        # parquet sink (not memory): the file sink supports resuming from
-        # the shared checkpoint, which is the whole point here.
-        schema = spark.read.parquet(f"{srcdir}/a_bulk.parquet").schema
-        ev = (
-            spark.readStream.schema(schema).parquet(srcdir)
-        ).withWatermark("ts", "1 hour")
-        win = (
-            ev.groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "window_start"
-                ),
-                "n_events",
-            )
+    outdir = rm_at_exit(tempfile.mkdtemp(prefix="msdb_late_sink_"))
+    schema = spark.read.parquet(f"{srcdir}/a_bulk.parquet").schema
+    ev = spark.readStream.schema(schema).parquet(srcdir).withWatermark("ts", "1 hour")
+    win = (
+        ev.groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "n_events",
         )
-        with stream_state_partitions(win):
-            q = (
-                win.writeStream.format("parquet")
-                .option("path", outdir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    run_once()  # bulk only; persists watermark = max(bulk ts) - 1h
-    shutil.copy(parked, f"{srcdir}/b_stragglers.parquet")
+    )
     try:
-        run_once()  # resumes: late stragglers dropped against it
+        run_to_sink(win, "append", outdir, ckpt)  # bulk; persists its watermark
+        shutil.copy(parked, f"{srcdir}/b_stragglers.parquet")
+        run_to_sink(win, "append", outdir, ckpt)  # resumes: late stragglers dropped
     finally:
         # leave the source dir bulk-only for repeat in-session invocations
-        os.remove(f"{srcdir}/b_stragglers.parquet")
-        # the checkpoint is dead once run 2 ends: the file sink's own log
-        # (outdir/_spark_metadata) lists the output read below
+        if os.path.exists(f"{srcdir}/b_stragglers.parquet"):
+            os.remove(f"{srcdir}/b_stragglers.parquet")
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(outdir)
+    return read_sink(spark, outdir, "append", win.schema)
 
 
 @query(

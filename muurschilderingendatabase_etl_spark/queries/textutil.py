@@ -13,8 +13,8 @@ measured decision rules for WHERE each form wins (all timings sf1,
    dedupes repeated references to the same derived column — the blowup
    comes from the per-ELEMENT lambda references.)
 2. Gram STREAM consumed row-at-a-time (shared-span dedup,
-   contamination): explode the INDEX and build each gram after the
-   Generate — ``explode(sequence(0, size(w)-k))`` then
+   contamination): ``gram_rows`` explodes the INDEX and builds each gram
+   after the Generate — ``explode(sequence(0, size(w)-k))`` then
    ``array_join(slice(w, i+1, k))``. Generate is itself a
    projection-collapse barrier, each gram string is built exactly once,
    and nothing is materialized per doc: 2.0 s vs 7.1 s (spans, k=4)
@@ -22,12 +22,12 @@ measured decision rules for WHERE each form wins (all timings sf1,
    pre-built-array form.
 3. ``sequence(0, -1)`` counts DOWN — the textbook array form crashes
    on docs shorter than k words; the slice builders clamp at 0 and
-   return empty. Stream consumers filter ``size(w) >= k`` first.
+   return empty. ``gram_rows`` filters ``size(w) >= k`` first.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -63,3 +63,19 @@ def sliding_min(arr: Column | str, k: int) -> Column:
             acc, F.slice(a, j + 1, cnt), lambda x, y: F.least(x, y)
         )
     return acc
+
+
+def gram_rows(df: DataFrame, words: str, k: int, *keep: str) -> DataFrame:
+    """One row per word ``k``-gram of the ``words`` array column of
+    ``df`` (decision rule 2): the ``keep`` columns plus ``gram``, the
+    gram's words joined by a space. Rows with fewer than ``k`` words
+    yield no gram."""
+    return (
+        df.where(F.size(words) >= k)
+        .select(
+            *keep, words, F.explode(F.sequence(F.lit(0), F.size(words) - k)).alias("i")
+        )
+        .select(
+            *keep, F.array_join(F.slice(words, F.col("i") + 1, k), " ").alias("gram")
+        )
+    )

@@ -64,9 +64,8 @@ def stream_state_partitions(stream_df: DataFrame):
     floor). At scale the count goes UP with keyspace: ~one state
     partition per 64 MB of the stream's staged source, so at sf100
     (1.9 GB events) there is one state store per core rather than a few
-    fat single-threaded ones. The core-count cap DOMINATES the floor
-    (``min(cores, max(4, ...))``): with fewer cores than the floor the
-    extra state stores would only time-slice.
+    fat single-threaded ones (``tables.byte_partitions``, floor 4; the
+    core-count cap dominates the floor).
 
     The source is the staged root(s) whose path appears in the stream's
     ANALYZED plan; with none (e.g. a rate source) it falls back to the
@@ -82,8 +81,7 @@ def stream_state_partitions(stream_df: DataFrame):
     source_bytes = sum(b for root, b in staged if root in plan) or max(
         (b for _root, b in staged), default=0
     )
-    cores = spark.sparkContext.defaultParallelism
-    n = min(cores, max(4, source_bytes // (64 << 20)))
+    n = tables.byte_partitions(spark, source_bytes, 4)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -130,7 +128,7 @@ def batch_sink(outdir: str):
     subdirectory of ``outdir`` with mode=overwrite. Redelivering a batch
     (foreachBatch is at-least-once) rewrites that batch's directory with
     the same rows instead of appending duplicates — idempotent by
-    construction. Module-level (not a closure inside run_to_memory) so
+    construction. Module-level (not a closure inside run_to_sink) so
     tests can exercise the redelivery path directly."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -158,6 +156,25 @@ def read_sink(
     if output_mode == "complete":
         batch_dirs = batch_dirs[-1:]
     return spark.read.parquet(*(os.path.join(outdir, d) for d in batch_dirs))
+
+
+def run_to_sink(result: DataFrame, output_mode: str, outdir: str, ckpt: str) -> None:
+    """Run the streaming DataFrame ``result`` to the end of its source
+    (``trigger(availableNow=True)``) into ``batch_sink(outdir)`` with
+    checkpoint ``ckpt``, under ``stream_state_partitions``. This is the
+    one place a stream is started. A second call on the same ``ckpt``
+    resumes: it processes only the files added since, with the state and
+    watermark the first call left, and its batch ids continue the
+    first call's, so ``read_sink`` reads both calls' output."""
+    with stream_state_partitions(result):
+        (
+            result.writeStream.foreachBatch(batch_sink(outdir))
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
 
 def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame:
@@ -192,15 +209,7 @@ def run_to_memory(result: DataFrame, output_mode: str = "complete") -> DataFrame
     # interpreter exit), NOT per-run like the checkpoint.
     outdir = tables.rm_at_exit(tempfile.mkdtemp(prefix="msdb_sink_"))
     try:
-        with stream_state_partitions(result):
-            query = (
-                result.writeStream.foreachBatch(batch_sink(outdir))
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
+        run_to_sink(result, output_mode, outdir, ckpt)
     finally:
         # The checkpoint exists only for THIS availableNow run — the
         # parquet sink holds the materialized rows once the query

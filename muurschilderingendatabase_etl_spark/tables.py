@@ -3,10 +3,11 @@
 All loads go through ``spark.read.parquet`` so Catalyst gets predicate
 pushdown / column pruning for free. The dimension tables (region, nation,
 supplier at low SF) are tiny — query code broadcast-hints them explicitly
-where it matters. The module also holds the two filesystem helpers the
-query and streaming modules share: ``disk_bytes`` sizes a fixture or a
-staged copy, ``rm_at_exit`` reclaims a scratch dir, and
-``release_checkpoint`` frees a superseded ``localCheckpoint``.
+where it matters. The module also holds the helpers the query and
+streaming modules share: ``disk_bytes`` sizes a fixture or a staged
+copy, ``byte_partitions`` turns such a size into a partition count,
+``rm_at_exit`` reclaims a scratch dir, and ``release_checkpoint`` frees
+a superseded ``localCheckpoint``.
 """
 
 from __future__ import annotations
@@ -31,10 +32,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Dimensions small enough to broadcast at ANY scale factor (fixed-size in
-# TPC-H: region=5 rows, nation=25 rows always).
-ALWAYS_BROADCAST = frozenset({"region", "nation"})
 
 
 # Lazy-DataFrame memo, keyed by (applicationId, id(spark), sf_dir, table).
@@ -121,6 +118,16 @@ def disk_bytes(path: str) -> int:
     return total
 
 
+def byte_partitions(spark: SparkSession, nbytes: int, floor: int) -> int:
+    """Partition count for ``nbytes`` of data: one partition per 64 MB,
+    at least ``floor``, at most the core count (``defaultParallelism``).
+    The cap wins over the floor: with fewer cores than the floor, extra
+    partitions would only time-slice. Tiny inputs still fan out to the
+    floor, and big ones reach every core with bounded bytes per task."""
+    cores = spark.sparkContext.defaultParallelism
+    return min(cores, max(floor, nbytes // (64 << 20)))
+
+
 def rm_at_exit(path: str) -> str:
     """Delete a scratch dir when the interpreter exits; returns ``path``.
 
@@ -139,9 +146,3 @@ def release_checkpoint(df: DataFrame) -> None:
     the RDD under its LogicalRDD, which ``DataFrame.unpersist()`` (the
     cache manager only) does not reach."""
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql() use."""
-    for name in TABLES:
-        t(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from muurschilderingendatabase_etl_spark.queries.dedup import _SHINGLE_ORACLE
+from tests.conftest import SF_DIR
 
 
 def test_minhash_lsh_fixture_margin(ddb):
@@ -34,7 +35,10 @@ def test_simhash_multi_chunk_pigeonhole_lossless(spark):
 
     import pyspark.sql.functions as F
 
-    from muurschilderingendatabase_etl_spark.queries.dedup import _simhash_pairs
+    from muurschilderingendatabase_etl_spark.queries.dedup import (
+        _simhash_pairs_from,
+        _simhash_sims,
+    )
     from muurschilderingendatabase_etl_spark.tables import t
 
     sf = "/root/testdata/sf0.001"
@@ -74,9 +78,29 @@ def test_simhash_multi_chunk_pigeonhole_lossless(spark):
     )
     expected = {(r.doc_a, r.doc_b, r.hamming) for r in brute.collect()}
     got = {
-        (r.doc_a, r.doc_b, r.hamming) for r in _simhash_pairs(spark, sf).collect()
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in _simhash_pairs_from(_simhash_sims(spark, sf)).collect()
     }
     assert got == expected
+
+
+def test_simhash_miner_filters_on_the_declared_radius(spark, monkeypatch):
+    """The miner and the in-query slice check both filter on
+    SIMHASH_MAX_HAMMING, the radius the pigeonhole layout is checked
+    against: lowering it must drop every mined pair beyond it."""
+    from muurschilderingendatabase_etl_spark.queries import dedup
+
+    sims = dedup._simhash_sims(spark, SF_DIR).localCheckpoint()
+
+    def hammings() -> list[int]:
+        return [r.hamming for r in dedup._simhash_pairs_from(sims).collect()]
+
+    radius = 1
+    assert any(h > radius for h in hammings()), "fixture has no pair beyond 1"
+    monkeypatch.setattr(dedup, "SIMHASH_MAX_HAMMING", radius)
+    assert all(h <= radius for h in hammings())
+    row = dedup.dedup_simhash(spark, SF_DIR).first()
+    assert row.slice_lossless
 
 
 def test_jaccard_partition_signatures_match_naive_block_join(spark):

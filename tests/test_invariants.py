@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from muurschilderingendatabase_etl_spark import registry
 from muurschilderingendatabase_etl_spark.tables import t
@@ -295,16 +296,14 @@ def test_geo_distance_join_bounds(spark):
 def test_compaction_collapses_files(spark):
     """Compaction must actually reduce the file count (64 -> 4) while
     the row count survives exactly."""
-    import glob
-
     from muurschilderingendatabase_etl_spark.queries import scans
     from muurschilderingendatabase_etl_spark.tables import t
 
     out = scans.sink_compact_small_files(spark, SF_DIR)
     total = sum(r.n_docs for r in out.collect())
     assert total == t(spark, SF_DIR, "documents").count()
-    assert scans.LAST_COMPACT_DIR, "compacted output dir not recorded"
-    n_files = len(glob.glob(f"{scans.LAST_COMPACT_DIR}/part-*.parquet"))
+    # the returned frame reads exactly the compacted files
+    n_files = len(out.inputFiles())
     assert 0 < n_files <= 4, f"expected <=4 compacted files, found {n_files}"
 
 
@@ -354,13 +353,13 @@ def test_merge_upsert_cow_semantics(spark):
     (including keys absent from the base = inserts), and untouched base
     rows byte-identical; the manifest records the version lineage."""
     import json
-    import os
+    from urllib.parse import urlparse
 
-    from muurschilderingendatabase_etl_spark.queries import scans
-
-    registry.all_queries()["sink_merge_upsert"](spark, SF_DIR).collect()
-    root = scans.LAST_MERGE_DIR
-    assert root and os.path.exists(os.path.join(root, "manifest.json"))
+    out = registry.all_queries()["sink_merge_upsert"](spark, SF_DIR)
+    out.collect()
+    # the returned frame reads <root>/v1/part-*
+    root = os.path.dirname(os.path.dirname(urlparse(out.inputFiles()[0]).path))
+    assert os.path.exists(os.path.join(root, "manifest.json"))
     manifest = json.load(open(os.path.join(root, "manifest.json")))
     assert manifest["current_version"] == 1 and manifest["merge_key"] == "event_id"
 
@@ -498,3 +497,23 @@ def test_argmin_skips_null_price_like_arg_min(spark, tmp_path):
         for r in con.sql(mod.oracle_sql()["agg_min_by_max_by"]).fetchall()
     }
     assert got == want == {1: (10, 12), 2: (None, None)}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "scan_csv_roundtrip",
+        "scan_json_roundtrip",
+        "sink_parquet_roundtrip",
+        "sink_managed_table_roundtrip",
+    ],
+)
+def test_roundtrip_frame_survives_a_second_call(spark, name):
+    """A round-trip query's returned frame reads files the query wrote.
+    Calling the query again in the same session must leave them alone:
+    both frames collect, and to the same rows."""
+    fn = registry.all_queries()[name]
+    first = fn(spark, SF_DIR)
+    second = fn(spark, SF_DIR)
+    rows = sorted(map(tuple, first.collect()), key=repr)
+    assert rows and rows == sorted(map(tuple, second.collect()), key=repr)

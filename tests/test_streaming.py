@@ -123,8 +123,8 @@ def test_processing_time_soak_bounded_state(spark, tmp_path):
 
 
 def test_replay_leaves_no_scratch_dirs(spark):
-    """run_to_memory, and stream_late_data_drop with its own two-run
-    file sink, must delete their per-execution checkpoint dirs once the
+    """run_to_memory, and stream_late_data_drop with its two runs on one
+    checkpoint, must delete their per-execution checkpoint dirs once the
     availableNow replay terminates (a long-lived session would otherwise
     keep one dir per streaming execution — 318 MB each at sf10, 13 per
     bench run, hundreds per driver round). Session-scoped staging dirs
@@ -134,7 +134,7 @@ def test_replay_leaves_no_scratch_dirs(spark):
 
     def ckpts() -> set[str]:
         return set(glob.glob("/tmp/msdb_ckpt_*")) | set(
-            glob.glob("/tmp/msdb_late_*/ckpt")
+            glob.glob("/tmp/msdb_late_ckpt_*")
         )
 
     before = ckpts()
@@ -252,6 +252,49 @@ def test_batch_sink_idempotent_under_redelivery(spark):
         r["k"] for r in read_sink(spark, out, "complete", b0.schema).collect()
     )
     assert got3 == [5, 6, 7]
+
+
+@pytest.mark.parametrize("output_mode", ["append", "complete"])
+def test_resumed_stream_matches_one_run(spark, tmp_path, output_mode):
+    """run_to_sink on a checkpoint a first call left resumes the stream:
+    one run over the first file, then one more after the second file
+    lands in the source, must hold the rows of a single run over both
+    files. Append mode catches a restart (the first file's rows would
+    come twice); complete mode checks the carried-over state."""
+    from muurschilderingendatabase_etl_spark.streaming.replay import (
+        read_sink,
+        run_to_sink,
+        stage_events_two_phase,
+    )
+
+    bulk_dir, parked = stage_events_two_phase(spark, SF_DIR)
+    bulk = os.path.join(bulk_dir, "a_bulk.parquet")
+    schema = spark.read.parquet(bulk).schema
+
+    def run(name: str, src) -> str:
+        out = tmp_path / f"{name}_out"
+        out.mkdir(exist_ok=True)
+        ev = spark.readStream.schema(schema).parquet(str(src))
+        if output_mode == "append":
+            res = ev.select("event_id", "event_type", "value")
+        else:
+            res = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+        run_to_sink(res, output_mode, str(out), str(tmp_path / f"{name}_ckpt"))
+        return read_sink(spark, str(out), output_mode, res.schema)
+
+    split, whole = tmp_path / "split", tmp_path / "whole"
+    split.mkdir()
+    whole.mkdir()
+    shutil.copy(bulk, split / "a.parquet")
+    shutil.copy(bulk, whole / "a.parquet")
+    shutil.copy(parked, whole / "b.parquet")
+
+    first = _sorted_rows(run("resumed", split))
+    shutil.copy(parked, split / "b.parquet")
+    resumed = _sorted_rows(run("resumed", split))
+    assert first and resumed != first
+    assert len(os.listdir(tmp_path / "resumed_out")) >= 2
+    assert resumed == _sorted_rows(run("one_run", whole))
 
 
 @pytest.mark.parametrize("output_mode", ["complete", "append", "update"])
