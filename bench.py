@@ -138,10 +138,9 @@ def main(names: Sequence[str] = ()) -> None:
     total = round(sum(v for v in timings.values() if v >= 0), 3)
     # Full per-query detail goes to a sidecar file and an early stdout line;
     # the FINAL stdout line stays small (the driver parses the tail of the
-    # output, and a single ~4 KB line with 121 queries overflows its window —
-    # VERDICT.md round 1). The sidecar is GITIGNORED (r7 verdict item 3):
-    # official driver runs overwrite it in place, and a tracked copy left
-    # the tree dirty at every round boundary.
+    # output, and a single ~4 KB line with 121 queries overflows its
+    # window). The sidecar is GITIGNORED: every run overwrites it in
+    # place, so a tracked copy would leave the tree dirty after each run.
     detail = {
         "metric": "suite_wall_clock",
         "value": total,

@@ -13,10 +13,16 @@ the exact variant shuffles the distinct values.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from muurschilderingendatabase_etl_spark.registry import query
 from muurschilderingendatabase_etl_spark.tables import t
+
+
+def within(approx: Column, exact: Column, rel: float) -> Column:
+    """Accuracy band of a banded oracle: the estimate ``approx`` lies
+    within ``rel`` relative error of the ``exact`` value."""
+    return F.abs(approx - exact) <= rel * F.abs(exact)
 
 
 @query(
@@ -48,12 +54,12 @@ from muurschilderingendatabase_etl_spark.tables import t
 def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TPC-H Q1 shape: the canonical partial+final hash aggregation.
     #
-    # Money sums are EXACT and summation-order-independent: an r7 sf10
-    # parity probe caught sum_disc_price/sum_charge off by exactly one
-    # cent vs DuckDB — double summation of 10M inexact terms per group
-    # drifts ~1 ulp at 3.6e11 magnitude, and ROUND(x, 2) flips a cent
-    # whenever the true value sits near a boundary (the same
-    # cross-engine class as the r6 timeseries_resample_ffill fix). The
+    # Money sums are EXACT and summation-order-independent: at sf10,
+    # sum_disc_price/sum_charge in double came out one cent off DuckDB —
+    # double summation of 10M inexact terms per group drifts ~1 ulp at
+    # 3.6e11 magnitude, and ROUND(x, 2) flips a cent whenever the true
+    # value sits near a boundary (the same cross-engine class as the
+    # 1-ulp drift timeseries_resample_ffill guards against). The
     # queries.money helpers keep the per-row arithmetic on the
     # vectorized integer-cents path and pay DECIMAL only for the final
     # sum (see that module for the magnitude/overflow analysis); the
@@ -131,10 +137,9 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_approx_count_distinct",
-    # Banded oracle (r5 VERDICT item 6): raw sketch estimates differ per
-    # engine, so the externally-checked contract is (a) the exact value
-    # matches DuckDB and (b) the HLL++ estimate lands within the declared
-    # 5% band of it — Spark emits the band check as a boolean, the oracle
+    # Banded oracle: raw sketch estimates differ per engine, so the
+    # externally-checked contract is (a) the exact value matches DuckDB
+    # and (b) the HLL++ estimate lands within the declared 5% band of it — Spark emits the band check as a boolean, the oracle
     # emits TRUE, and the driver's value hash enforces both.
     oracle="""
     SELECT o_orderstatus,
@@ -164,19 +169,17 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_orderstatus",
             "exact_customers",
-            (
-                F.abs(F.col("approx_customers") - F.col("exact_customers"))
-                <= 0.05 * F.col("exact_customers")
-            ).alias("within_5pct"),
+            within(F.col("approx_customers"), F.col("exact_customers"), 0.05).alias(
+                "within_5pct"
+            ),
         )
     )
 
 
 @query(
     "agg_hll_sketch_mergeable",
-    # Banded oracle (r5 VERDICT item 6): Datasketches estimates are
-    # engine-specific, so the checked contract is the exact per-segment
-    # and merged-global distincts (vs DuckDB) plus a boolean asserting
+    # Banded oracle: Datasketches estimates are engine-specific, so the
+    # checked contract is the exact per-segment and merged-global distincts (vs DuckDB) plus a boolean asserting
     # every estimate lands within 5% of its exact value.
     oracle="""
     SELECT c_mktsegment AS segment,
@@ -226,10 +229,9 @@ def agg_hll_sketch_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "segment",
             "exact_customers",
-            (
-                F.abs(F.col("approx_customers") - F.col("exact_customers"))
-                <= 0.05 * F.col("exact_customers")
-            ).alias("within_5pct"),
+            within(F.col("approx_customers"), F.col("exact_customers"), 0.05).alias(
+                "within_5pct"
+            ),
         )
         .orderBy("segment")
     )
@@ -330,7 +332,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spend rides the exact integer-cents money path (queries/money.py):
     # the raw ROUND(SUM(double)) form sits one corpus decade from a
-    # 1-ulp cent flip (the class the r7 sf10 probe proved real). The
+    # 1-ulp cent flip (the class seen at sf10 in agg_pricing_summary). The
     # BOUNDED variant applies — per-customer groups: one customer's
     # lifetime spend in cents is structurally far below 2^63 — and its
     # LONG accumulator costs ~35% less than the decimal sum (measured
@@ -350,11 +352,10 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_approx_percentile",
-    # Banded oracle (r5 VERDICT item 6): sketch percentiles are engine-
-    # specific (the exact-percentile twin agg_percentiles carries the
-    # exact-value oracle), so the checked contract here is the group set
-    # plus booleans asserting each approx percentile lands within 1% of
-    # the group's exact percentile.
+    # Banded oracle: sketch percentiles are engine-specific (the exact
+    # twin agg_percentiles carries the exact-value oracle), so the
+    # checked contract here is the group set plus booleans asserting each
+    # approx percentile lands within 1% of the group's exact percentile.
     oracle="""
     SELECT l_returnflag, TRUE AS p50_within_1pct, TRUE AS p99_within_1pct
     FROM lineitem GROUP BY l_returnflag
@@ -365,25 +366,20 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no per-group sort or value buffering, partial aggregation merges
     sketches map-side). Accuracy set to 1/10000 relative error; the
     exact percentiles that make the band externally checkable come from
-    the rank-based distributed form (`exact_group_percentiles`) — the
-    builtin `percentile()` aggregate's per-task value hashmap OOMed an
-    r7 sf10 probe, and a verification side-car must not be the part
-    that falls over at scale."""
-    from muurschilderingendatabase_etl_spark.queries.distributed import (
-        exact_group_percentiles,
+    ``stats_profile.price_percentiles``, the rank-based distributed form:
+    the builtin `percentile()` aggregate's per-task value hashmap OOMed
+    at sf10, and a verification side-car must not be the part that
+    falls over at scale."""
+    from muurschilderingendatabase_etl_spark.queries.stats_profile import (
+        price_percentiles,
     )
 
-    li = t(spark, sf_dir, "lineitem")
-
-    def band(approx, exact):
-        return F.abs(approx - exact) <= 0.01 * F.abs(exact)
-
-    # r12 perf (guide §1.2: don't compute things twice): the two probes
-    # share ONE sketch via the array form — two scalar percentile_approx
-    # aggregates each built their own full QuantileSummaries over every
-    # row. Same accuracy, same deterministic buffer, same extraction ⇒
-    # bit-identical p50/p99 values, half the sketch work.
-    approx = li.groupBy("l_returnflag").agg(
+    # The two probes share ONE sketch via the array form: two scalar
+    # percentile_approx aggregates each built their own full
+    # QuantileSummaries over every row. Same accuracy, same
+    # deterministic buffer, same extraction, so the p50/p99 values are
+    # bit-identical for half the sketch work.
+    approx = t(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
         F.percentile_approx(
             "l_extendedprice", F.array(F.lit(0.5), F.lit(0.99)), F.lit(10000)
         ).alias("pq")
@@ -392,26 +388,25 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pq")[0].alias("p50_approx"),
         F.col("pq")[1].alias("p99_approx"),
     )
-    exact = exact_group_percentiles(
-        li, "l_returnflag", "l_extendedprice", [0.5, 0.99]
-    ).select(
-        "l_returnflag",
-        F.col("qs")[0].alias("p50_exact"),
-        F.col("qs")[1].alias("p99_exact"),
+    exact = price_percentiles(
+        spark, sf_dir, {"p50_exact": 0.5, "p99_exact": 0.99}
     )
     return approx.join(F.broadcast(exact), "l_returnflag").select(
         "l_returnflag",
-        band(F.col("p50_approx"), F.col("p50_exact")).alias("p50_within_1pct"),
-        band(F.col("p99_approx"), F.col("p99_exact")).alias("p99_within_1pct"),
+        within(F.col("p50_approx"), F.col("p50_exact"), 0.01).alias(
+            "p50_within_1pct"
+        ),
+        within(F.col("p99_approx"), F.col("p99_exact"), 0.01).alias(
+            "p99_within_1pct"
+        ),
     )
 
 
 @query(
     "agg_hll_rolling_uniques",
-    # Banded oracle (upgraded from rows-only in round 6): the checked
-    # contract is the exact trailing-3-day distinct per day (vs DuckDB's
-    # range-joined exact) plus a boolean asserting the merged-sketch
-    # estimate lands within 5% of it.
+    # Banded oracle: the checked contract is the exact trailing-3-day
+    # distinct per day (vs DuckDB's range-joined exact) plus a boolean
+    # asserting the merged-sketch estimate lands within 5% of it.
     oracle="""
     WITH daily AS (
       SELECT DISTINCT date_trunc('day', ts) AS day, user_id FROM events
@@ -455,7 +450,7 @@ def agg_hll_rolling_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
         # contract is "day - INTERVAL 2 DAY", i.e. calendar semantics.
         # A rowsBetween(-2, 0) frame over present day-ROWS agrees with
         # that only while every calendar day in the span has events; a
-        # corpus with a day gap would silently diverge (r6 ADVICE).
+        # corpus with a day gap would silently diverge.
         .withColumn(
             "dayn", (F.unix_timestamp("day") / F.lit(86400)).cast("long")
         )
@@ -474,9 +469,8 @@ def agg_hll_rolling_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "day",
             "exact_rolling_uniques",
-            (
-                F.abs(F.col("rolling_unique_users") - F.col("exact_rolling_uniques"))
-                <= 0.05 * F.col("exact_rolling_uniques")
+            within(
+                F.col("rolling_unique_users"), F.col("exact_rolling_uniques"), 0.05
             ).alias("within_5pct"),
         )
         .orderBy("day")
@@ -507,8 +501,8 @@ def agg_two_stage_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The partials carry exact integer cents (queries/money.py): summing
     raw doubles per salt bucket would make revenue depend on the salt
-    fan-out's summation order — the cent-flip class the r7 sf10 probe
-    proved real. The PER-SALT partial accumulates in LONG (the heavy
+    fan-out's summation order — the cent-flip class seen at sf10 in
+    agg_pricing_summary. The PER-SALT partial accumulates in LONG (the heavy
     per-row stage — an all-decimal partial measured 1.85x baseline at
     sf0.1): one bucket holds ~1/192 of the corpus, so its cent total
     reaches 2^63 only past a ~$10^17 corpus, and ANSI mode would fail

@@ -1050,22 +1050,15 @@ def pipeline_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     by key-hash and let AQE coalesce — no global sort anywhere. A real
     lakehouse deployment swaps this for Delta/Iceberg MERGE; the logical
     semantics (latest-wins per key) are identical. total_value rides
-    the exact integer-cents money path (queries/money.py)."""
-    from muurschilderingendatabase_etl_spark.queries import money
-
-    ev = t(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    base = ev.where(F.col("event_id") % 3 != 0)
-    delta = ev.where(F.col("event_id") % 5 == 0).select(
-        "event_id",
-        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
-        "user_id",
-        F.lit("corrected").alias("event_type"),
-        (F.col("value") * 2).alias("value"),
-    )
+    the exact integer-cents money path (queries/money.py). The snapshot
+    and delta come from ``scans.upsert_inputs``, shared with the
+    copy-on-write ``sink_merge_upsert``."""
     from pyspark.sql import Window
 
+    from muurschilderingendatabase_etl_spark.queries import money
+    from muurschilderingendatabase_etl_spark.queries.scans import upsert_inputs
+
+    _, base, delta = upsert_inputs(spark, sf_dir)
     w = Window.partitionBy("event_id").orderBy(F.desc("ts"), "event_type")
     return (
         base.unionByName(delta)

@@ -53,8 +53,8 @@ def flagship_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
 
     # Revenue sums exactly on the integer-cents path — order-independent
-    # at any corpus size (r7: sibling double sums flipped a cent at
-    # sf10; see queries.money and agg_pricing_summary).
+    # at any corpus size (sibling double sums flipped a cent at sf10;
+    # see queries.money and agg_pricing_summary).
     from muurschilderingendatabase_etl_spark.queries import money
 
     return (

@@ -42,7 +42,7 @@ def agg_min_by_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The ordering key is the STRUCT (price-in-cents, orderkey), NOT the
     raw price: min_by under a tie returns an engine-arbitrary row, and
-    an r7 sf10 parity probe caught exactly that — with 1.5M customers
+    an sf10 parity check caught exactly that — with 1.5M customers
     the cent-quantized price space collides within a customer a couple
     of times per corpus, and Spark and DuckDB picked different orders.
     The composite key is a total order, so the argmin is well-defined
@@ -59,7 +59,7 @@ def agg_min_by_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL prices: a struct with a NULL field still participates in
     Spark's MIN and sorts smallest, while arg_min skips NULL keys — so
     the key is NULLed wholesale when the price is NULL (MIN/MAX ignore
-    NULL inputs), matching arg_min's skip semantics exactly (r7 ADVICE)."""
+    NULL inputs), matching arg_min's skip semantics exactly."""
     key = F.when(
         F.col("o_totalprice").isNotNull(),
         F.struct(

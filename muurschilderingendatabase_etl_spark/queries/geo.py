@@ -159,7 +159,7 @@ def geo_distance_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs (cell blocking alone admits |dlat| up to 10 deg) for the
     # price of one subtract+compare each.
     lat_band = F.abs(F.col("c_lat") - F.col("lat")) <= F.lit(4.51)
-    # ZERO-TRIG prefilter (r8, the verdict's geo-tail item): the banded
+    # ZERO-TRIG prefilter: the banded
     # candidates still outnumber true answers ~3.5:1, and each used to
     # pay the full 2·sin + 2·pow + sqrt + asin haversine. The spherical
     # law of cosines — cosθ = sinφ1·sinφ2 + cosφ1·cosφ2·cos(Δλ), with

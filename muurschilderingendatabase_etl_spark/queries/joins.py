@@ -190,8 +190,8 @@ def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Explicit broadcast of the part dim: the fact side never shuffles.
-    # Revenue sums exactly on the integer-cents path (an r7 sf10 parity
-    # probe caught the double sum off by one cent vs the oracle — 1-ulp
+    # Revenue sums exactly on the integer-cents path (at sf10 the double
+    # sum came out one cent off the oracle — 1-ulp
     # drift at 1.4e11 magnitude landing on a ROUND boundary; see
     # queries.money for the mechanism and agg_pricing_summary for the
     # full account).
@@ -362,7 +362,7 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("c_custkey") < 6000)
         .select("c_custkey", "c_name", F.substring("c_name", 1, 16).alias("blk"))
     )
-    # r12 perf (guide §2.5/§2.6): synthetic names share ONE 16-char
+    # Parallelism: synthetic names share ONE 16-char
     # prefix block, so the broadcast join's pair generation runs
     # entirely inside however many tasks the probe-side SCAN has — one,
     # for a single small parquet file: 18M levenshtein evaluations on
@@ -377,7 +377,7 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     if a.rdd.getNumPartitions() < par:
         a = a.repartition(par)
     a, b = a.alias("a"), blocked.alias("b")
-    # Threshold levenshtein (guide §1.2 per-task work): the banded
+    # Threshold levenshtein (less per-pair work): the banded
     # O(len·k) form early-exits pairs whose distance exceeds 2 — the
     # overwhelming majority — instead of filling the full O(len²) DP
     # table and discarding the result. Returns -1 above the threshold,

@@ -3,8 +3,8 @@
 Money sums must be EXACT and summation-order-independent: double
 summation of 10M+ inexact terms drifts ~1 ulp at 1e11-1e12 magnitude,
 and ROUND(x, 2) flips a cent whenever the true value sits near a
-boundary (the r7 sf10 parity probe caught exactly this in
-agg_pricing_summary / join_broadcast_dim). The first fix typed the
+boundary (seen at sf10 in agg_pricing_summary and
+join_broadcast_dim). The first fix typed the
 whole expression DECIMAL end-to-end, which is exact but pays a 128-bit
 multiply chain per row (~2-3x on the cold query at sf0.1).
 
@@ -45,8 +45,8 @@ _SPLIT = 1 << _SPLIT_BITS
 
 def _exact_long_sum(col: Column) -> Column:
     """Exact SUM of a LONG column with the per-row work entirely on
-    codegen's vectorized long path (r12, guide §2.3 narrower types /
-    §1.2 per-task work): the per-row value is split into hi = x >> 20
+    codegen's vectorized long path (narrower types, less per-row
+    work): the per-row value is split into hi = x >> 20
     and lo = x & (2^20 - 1) (an identity for any two's-complement
     long), each half is summed in LONG, and the exact total
     hi·2^20 + lo is reconstructed in DECIMAL once per GROUP instead of
@@ -75,9 +75,9 @@ def sum_money_bounded(money: Column) -> Column:
     accumulate in LONG, so the aggregation state is 8 bytes instead of
     a boxed decimal. Use where the per-group cent total is structurally
     far below 2^63 — per-session / per-(user, window) streaming groups,
-    where the decimal state was measured to matter: the r8 sf10 probe
-    OOMed an 8 GB heap on stream_session_window's 9.5M decimal session
-    states where the long form fits like the r7 double did. Same
+    where the decimal state was measured to matter: at sf10,
+    stream_session_window's 9.5M decimal session states OOMed an 8 GB
+    heap where the long (and an earlier double) state fits. Same
     emitted double as sum_money: the long sum is exact, /100 is the
     nearest double of the exact rational, and ROUND(x, 2) of that is
     bit-equal to the oracle's CAST(exact DECIMAL AS DOUBLE)."""
@@ -101,9 +101,9 @@ def sum_charge(price: Column, discount: Column, tax: Column) -> Column:
 
 
 # SQL-text spelling of sum_disc_price, for the SQL front-door queries.
-# Same hi/lo long-split as _exact_long_sum (r13, VERDICT r12 item 3): the
-# DataFrame consumers got the 2x rewrite in r12 while this SQL twin still
-# paid the per-row DECIMAL accumulator. Identity: for any two's-complement
+# Same hi/lo long-split as _exact_long_sum, so the SQL twin does not pay
+# the per-row DECIMAL accumulator the DataFrame form avoids (2x on the Q1
+# shape at sf0.1). Identity: for any two's-complement
 # long e4, e4 == (e4 >> 20) * 2^20 + (e4 & (2^20 - 1)); both halves sum on
 # the vectorized LONG codegen path and the exact total is reconstructed in
 # DECIMAL once per group. Same ANSI overflow-loudness and ~1e13 rows/group

@@ -359,10 +359,10 @@ def contamination_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     # ONE array Literal node each (F.lit of an int64 ndarray), NOT
     # F.array(*[F.lit(v).cast("long") ...]): in classic PySpark 4
     # F.lit(list) is sugar for array(*[lit(item)...]), so a plain list
-    # still builds the 1024-child CreateArray — the r11 fix's real win
-    # was dropping the 1024 per-element Cast nodes (~6.5x repro:
-    # 2.6 s -> 0.4 s; the r10 official 2.26x outlier inlined the
-    # bitmap SIX times, 3 probes x word+bit). The ndarray path calls
+    # still builds the 1024-child CreateArray; dropping the 1024
+    # per-element Cast nodes is what counts (~6.5x: 2.6 s -> 0.4 s,
+    # measured with the bitmap inlined SIX times, 3 probes x word+bit,
+    # as the plan does). The ndarray path calls
     # the JVM lit directly: one Literal node per array AND the element
     # type pinned to bigint (the bare-list form leaves small words to
     # py4j's per-element int-vs-long choice + Catalyst coercion).

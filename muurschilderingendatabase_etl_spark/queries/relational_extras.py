@@ -40,7 +40,8 @@ def pivot_segment_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: revenue per market segment (columns) by order year (rows).
     Cell sums ride the exact integer-cents path (queries/money.py) — a
     year×segment cell aggregates enough rows at scale to sit in the
-    ROUND(SUM(double)) cent-flip class the r7 sf10 probe proved real."""
+    ROUND(SUM(double)) cent-flip class (seen at sf10 in
+    agg_pricing_summary)."""
     from muurschilderingendatabase_etl_spark.queries import money
 
     orders = t(spark, sf_dir, "orders")
@@ -131,39 +132,23 @@ def setop_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles per return flag, via the
-    rank-based distributed form (`exact_group_percentiles`) — the
-    builtin `percentile()` aggregate buffers a per-task value hashmap
-    that OOMed an r7 sf10 probe; the rank form is one spillable
-    range-shuffle sort plus a broadcast pick of bracketing ranks.
+    """Exact interpolated percentiles per return flag, through
+    ``stats_profile.price_percentiles`` (the rank-based form and the
+    cent-exact interpolation argument are there).
 
-    Cross-engine determinism: interpolate over exact integer CENTS with
-    binary-exact quantile fractions (k/8), so every intermediate double
-    is exact and both engines produce bit-identical values — rounding a
-    raw dollar median would sit on a half-cent boundary and amplify a
-    1-ulp interpolation difference into a whole cent. The output rounds
-    to FIVE decimals, not four: cents interpolated at eighths carry at
-    most 3 fractional digits (.875), i.e. 5 decimals after /100, so
-    ROUND(x, 5) is a no-op — an r7 sf10 parity probe caught ROUND(x, 4)
-    landing on the true decimal midpoint X.xx875, where Spark's and
-    DuckDB's tie-breaking disagree (p875 off by exactly 1e-4)."""
-    from muurschilderingendatabase_etl_spark.queries.distributed import (
-        exact_group_percentiles,
+    The output rounds to FIVE decimals, not four: cents interpolated at
+    eighths carry at most 3 fractional digits (.875), i.e. 5 decimals
+    after /100, so ROUND(x, 5) is a no-op. ROUND(x, 4) would land on the
+    true decimal midpoint X.xx875, where Spark's and DuckDB's
+    tie-breaking disagree (p875 off by exactly 1e-4 in an sf10 parity
+    check)."""
+    from muurschilderingendatabase_etl_spark.queries.stats_profile import (
+        PRICE_PROBES,
+        price_percentiles,
     )
 
-    li = t(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100, 0).alias("cents"),
-    )
-    qs = exact_group_percentiles(
-        li, "l_returnflag", "cents", [0.25, 0.5, 0.75, 0.875]
-    )
-    return qs.select(
-        "l_returnflag",
-        *[
-            F.round(F.col("qs").getItem(i) / 100, 5).alias(name)
-            for i, name in enumerate(["p25", "p50", "p75", "p875"])
-        ],
+    return price_percentiles(spark, sf_dir, PRICE_PROBES).select(
+        "l_returnflag", *[F.round(name, 5).alias(name) for name in PRICE_PROBES]
     )
 
 
@@ -179,16 +164,15 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlation (``stats_profile.pearson``, NULL on a zero-variance
+    group), covariance and price stddev per return flag."""
+    from muurschilderingendatabase_etl_spark.queries.stats_profile import pearson
+
     li = t(spark, sf_dir, "lineitem")
-    # try_divide form instead of builtin corr: ANSI-mode corr aborts on a
-    # zero-variance group where DuckDB (and the math) say NULL — see
-    # stats_corr_moments for the 1-ulp equivalence argument.
-    corr = F.try_divide(
-        F.covar_samp("l_quantity", "l_extendedprice"),
-        F.stddev_samp("l_quantity") * F.stddev_samp("l_extendedprice"),
-    )
     return li.groupBy("l_returnflag").agg(
-        F.round(corr, 6).alias("corr_qty_price"),
+        F.round(pearson("l_quantity", "l_extendedprice"), 6).alias(
+            "corr_qty_price"
+        ),
         F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).alias(
             "covar_qty_price"
         ),
@@ -226,8 +210,9 @@ def project_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bernoulli sample with a fixed seed, value-checked IN-BAND (the
-    r6-HLL/r8-ANN pattern — the RNG stream is engine-specific, so no
-    external oracle can name the sampled rows, but the sample's
+    pattern of the HLL and ANN queries — the RNG stream is
+    engine-specific, so no external oracle can name the sampled rows,
+    but the sample's
     CONTRACT is checkable inside the query):
     - deterministic: a second sample with the same seed selects the
       identical row set (count equality + key-join coverage; o_orderkey

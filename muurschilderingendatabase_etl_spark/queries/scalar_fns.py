@@ -61,7 +61,7 @@ def scalar_string_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_date_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total rides the exact integer-cents money path (queries/money.py):
     # a month of orders is exactly the group size where ROUND(SUM(double))
-    # starts flipping cents (the r7 sf10 probe's defect class).
+    # starts flipping cents (the class seen at sf10 in agg_pricing_summary).
     from muurschilderingendatabase_etl_spark.queries import money
 
     return (
@@ -118,9 +118,9 @@ def scalar_date_trunc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_math_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documented OUT of the exact-cents money class (r7 verdict item 1):
-    these sums aggregate irrational terms (SQRT of a price) or non-money
-    rate statistics (squared tax, |discount - 0.05| deviation), where no
+    """Documented OUT of the exact-cents money class: these sums
+    aggregate irrational terms (SQRT of a price) or non-money rate
+    statistics (squared tax, |discount - 0.05| deviation), where no
     integer-cents representation exists. Both engines sum the same
     doubles; the 4-6dp rounding granularity sits well above 1-ulp drift
     at these magnitudes, and any residual flip would be caught by the

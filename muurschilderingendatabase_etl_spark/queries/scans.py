@@ -127,7 +127,7 @@ def scan_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     failing the job). Two of the five synthetic lines are broken; they
     surface as rows with NULL fields + populated _corrupt_record.
 
-    Value-checked (upgraded round 6): the fixture is written by the query
+    Value-checked: the fixture is written by the query
     itself, so the expected parse outcome is a constant — the oracle is
     the literal 5-row table, putting the PERMISSIVE parse + quarantine
     flagging under the DuckDB hash gate."""
@@ -392,16 +392,15 @@ def sink_zorder_2d_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     dy = F.datediff(
         "o_orderdate", F.lit("1992-01-01").cast("date")
     ).cast("long")
-    # r12 built the 16-step bit interleave as ONE SQL-text aggregate()
-    # fold (a single py4j call instead of 64 separately constructed
-    # shift columns) — but the lambda fold runs INTERPRETED per row
-    # (the dedup_minhash_lsh lesson: NamedLambdaVariable binding per
-    # element), measured 0.75 s/pass over sf0.1 orders, and zv is
-    # evaluated twice (range-boundary sampling + the write). r13 keeps
-    # the one-call build and restores codegen exec: the 32 terms
-    # spelled FLAT in the SQL text — no lambda, whole-stage compiled.
-    # A/B 0.75 s → 0.17 s per pass; values bit-identical (disjoint bit
-    # contributions sum identically in any order).
+    # The 16-step bit interleave is ONE SQL-text expression (a single
+    # py4j call instead of 64 separately constructed shift columns) with
+    # its 32 terms spelled FLAT — no lambda, so it stays whole-stage
+    # compiled. An aggregate() lambda fold runs INTERPRETED per row
+    # (NamedLambdaVariable binding per element, as in dedup_minhash_lsh):
+    # 0.75 s vs 0.17 s per pass over sf0.1 orders, and zv is evaluated
+    # twice (range-boundary sampling + the write). Values are
+    # bit-identical (disjoint bit contributions sum identically in any
+    # order).
     z = F.expr(
         " + ".join(
             f"shiftleft((ck >> {i}) & 1, {2 * i})"
@@ -520,6 +519,29 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+def upsert_inputs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The inputs of both upsert queries (this module's copy-on-write
+    MERGE and dedup's merge-on-read upsert): ``(events, base,
+    corrections)``. ``events`` is the 5-column events projection; the
+    base snapshot is its rows with ``event_id % 3 != 0``; the correction
+    delta rewrites every ``event_id % 5 == 0`` row one hour later as
+    event type 'corrected' at twice the value, so it both updates base
+    keys and inserts keys the base lacks."""
+    ev = t(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    corrections = ev.where(F.col("event_id") % 5 == 0).select(
+        "event_id",
+        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
+        "user_id",
+        F.lit("corrected").alias("event_type"),
+        (F.col("value") * 2).alias("value"),
+    )
+    return ev, ev.where(F.col("event_id") % 3 != 0), corrections
+
+
 def _merge_frames(base: DataFrame, chg: DataFrame) -> DataFrame:
     """MERGE semantics on DataFrames (matched delete / matched update /
     unmatched insert): untouched base rows via one left_anti join on the
@@ -575,6 +597,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     this container, so the log is a single-writer manifest; the
     DATAFLOW is the real thing). The returned aggregate re-reads v1
     from disk, so parity proves the merged FILES, not just the plan.
+    The snapshot and corrections come from ``upsert_inputs``.
 
     Merge plan shape: untouched rows = one left_anti join on the key;
     upserted/inserted rows come straight from the changelog (already
@@ -586,25 +609,11 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = rm_at_exit(tempfile.mkdtemp(prefix="msdb_merge_"))
     v0, v1 = os.path.join(root, "v0"), os.path.join(root, "v1")
 
-    ev = t(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    ev.where(F.col("event_id") % 3 != 0).write.mode("overwrite").parquet(v0)
-
-    chg = (
-        ev.where(F.col("event_id") % 5 == 0)
-        .select(
-            "event_id",
-            (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
-            "user_id",
-            F.lit("corrected").alias("event_type"),
-            (F.col("value") * 2).alias("value"),
-            F.lit("upsert").alias("op"),
-        )
-        .unionByName(
-            ev.where((F.col("event_id") % 7 == 0) & (F.col("event_id") % 5 != 0))
-            .withColumn("op", F.lit("delete"))
-        )
+    ev, base, corrections = upsert_inputs(spark, sf_dir)
+    base.write.mode("overwrite").parquet(v0)
+    chg = corrections.withColumn("op", F.lit("upsert")).unionByName(
+        ev.where((F.col("event_id") % 7 == 0) & (F.col("event_id") % 5 != 0))
+        .withColumn("op", F.lit("delete"))
     )
     base = spark.read.parquet(v0)
     _merge_frames(base, chg).write.mode("overwrite").parquet(v1)

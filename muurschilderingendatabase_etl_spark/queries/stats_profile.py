@@ -17,12 +17,67 @@ summation-order noise cannot flip the driver's value hash.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
+from muurschilderingendatabase_etl_spark.queries import money
 from muurschilderingendatabase_etl_spark.registry import query
 from muurschilderingendatabase_etl_spark.tables import t
 
 N_BINS = 10
+
+# The probes of the two exact-percentile queries, by output name.
+PRICE_PROBES = {"p25": 0.25, "p50": 0.5, "p75": 0.75, "p875": 0.875}
+
+
+def pearson(x: str, y: str) -> Column:
+    """Pearson correlation of columns ``x`` and ``y`` as
+    try_divide(covar_samp, sd·sd), not the builtin corr: under ANSI mode
+    Spark's corr ABORTS THE JOB on a zero-variance group (its internal
+    ck/sqrt(xMk·yMk) divides by zero) where DuckDB returns NULL, and
+    corr is undefined there, so NULL is the right answer. The (n-1)
+    factors cancel exactly, making this the same statistic to within
+    1 ulp, far inside the 6 dp output rounding of both callers (parity
+    checked at sf0.01 and sf10)."""
+    return F.try_divide(F.covar_samp(x, y), F.stddev_samp(x) * F.stddev_samp(y))
+
+
+def price_percentiles(
+    spark: SparkSession, sf_dir: str, ps: dict[str, float]
+) -> DataFrame:
+    """Exact linear-interpolation percentiles of ``l_extendedprice`` per
+    ``l_returnflag``: one dollar column per ``ps`` entry (output name ->
+    probe). PERCENTILE_CONT semantics, the same as Spark's
+    ``percentile`` and DuckDB's ``quantile_cont``.
+
+    Computed by the rank-based distributed form
+    (``exact_group_percentiles``), not the builtin aggregate: Spark's
+    ``percentile()`` buffers a per-task value->count hashmap whose
+    serialized state OOMed an 8 GiB heap at sf10
+    (TypedAggregateWithHashMapAsBuffer, ~60M distinct prices x 32
+    concurrent tasks). The rank form is one spillable range-shuffle sort
+    plus a broadcast pick of the bracketing ranks, memory-bounded at any
+    corpus size.
+
+    Cross-engine determinism: the price is lifted to INTEGER cents
+    (``money.cents``), and for dyadic probes (1/4, 1/2, 3/4, 7/8) the
+    interpolation position (n-1)*p and the blend a + (b-a)*frac are
+    EXACT in IEEE double no matter how either engine associates the
+    arithmetic, so both engines produce bit-identical values. Monetary
+    data interpolates onto .xx5 midpoints constantly, and rounding a
+    raw-dollar interpolation that differs by half an ulp between the
+    engines to 2 dp flips the cent (seen at sf0.001)."""
+    from muurschilderingendatabase_etl_spark.queries.distributed import (
+        exact_group_percentiles,
+    )
+
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_returnflag", money.cents(F.col("l_extendedprice")).alias("cents")
+    )
+    qs = exact_group_percentiles(li, "l_returnflag", "cents", list(ps.values()))
+    return qs.select(
+        "l_returnflag",
+        *[(F.col("qs")[i] / 100.0).alias(name) for i, name in enumerate(ps)],
+    )
 
 
 @query(
@@ -42,22 +97,14 @@ def stats_corr_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group second-moment profile: Pearson correlation, sample
     covariance/variance/stddev, mean. One hash aggregation; every
     statistic is an algebraic aggregate (mergeable partial states), so
-    the plan map-side-combines and the exchange carries 3 rows."""
+    the plan map-side-combines and the exchange carries 3 rows. The
+    correlation is ``pearson``, NULL on a zero-variance group."""
     li = t(spark, sf_dir, "lineitem")
-    # Pearson as try_divide(covar_samp, sd·sd), not builtin corr: under
-    # ANSI mode Spark's corr ABORTS THE JOB on a zero-variance group
-    # (its internal ck/sqrt(xMk·yMk) divides by zero) where DuckDB
-    # returns NULL — and corr is undefined there, so NULL is the right
-    # answer. The (n-1) factors cancel exactly, making this the same
-    # statistic to within 1 ulp, far inside the 6 dp output rounding
-    # (parity re-verified at sf0.01 and sf10).
-    corr = F.try_divide(
-        F.covar_samp("l_quantity", "l_extendedprice"),
-        F.stddev_samp("l_quantity") * F.stddev_samp("l_extendedprice"),
-    )
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(corr, 6).alias("qty_price_corr"),
+        F.round(pearson("l_quantity", "l_extendedprice"), 6).alias(
+            "qty_price_corr"
+        ),
         F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).alias(
             "qty_price_covar"
         ),
@@ -140,46 +187,10 @@ def stats_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stats_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact linear-interpolation percentiles per group (the ANSI
-    PERCENTILE_CONT definition, identical semantics to Spark's
-    `percentile` and DuckDB's `quantile_cont`) — computed by the
-    rank-based distributed form (`exact_group_percentiles`), NOT the
-    builtin aggregate: Spark's `percentile()` buffers a per-task
-    value->count hashmap whose serialized state OOMed an r7 sf10 probe
-    (TypedAggregateWithHashMapAsBuffer, ~60M distinct prices x 32
-    concurrent tasks on an 8 GiB heap). The rank form is one spillable
-    range-shuffle sort + a broadcast pick of the bracketing ranks —
-    memory-bounded at any corpus size. The sketch alternative for 100 TB
-    remains `approx_percentile` (see agg_approx_percentile).
-
-    Cross-engine determinism: the price is lifted to INTEGER cents and
-    the probed percentiles are dyadic (1/4, 1/2, 3/4, 7/8), so the
-    interpolation position (n-1)*p and the blend a + (b-a)*frac are
-    EXACT in IEEE double no matter how either engine associates the
-    arithmetic — monetary data interpolates onto .xx5 midpoints
-    constantly, and rounding such a half-ulp-divergent double to 2dp
-    was a measured coin flip between engines (caught by the sf0.001
-    parity suite; sf0.01 happened to pass)."""
-    from muurschilderingendatabase_etl_spark.queries.distributed import (
-        exact_group_percentiles,
-    )
-
-    li = t(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100)
-        .cast("long")
-        .alias("cents"),
-    )
-    qs = exact_group_percentiles(
-        li, "l_returnflag", "cents", [0.25, 0.5, 0.75, 0.875]
-    )
-    return qs.select(
-        "l_returnflag",
-        (F.col("qs")[0] / 100.0).alias("p25"),
-        (F.col("qs")[1] / 100.0).alias("p50"),
-        (F.col("qs")[2] / 100.0).alias("p75"),
-        (F.col("qs")[3] / 100.0).alias("p875"),
-    )
+    """Exact price percentiles per return flag, through
+    ``price_percentiles``; the sketch alternative for 100 TB is
+    ``approx_percentile`` (see agg_approx_percentile)."""
+    return price_percentiles(spark, sf_dir, PRICE_PROBES)
 
 
 @query(

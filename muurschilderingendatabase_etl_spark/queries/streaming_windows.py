@@ -10,6 +10,14 @@ still returns a batch DataFrame for the driver to collect:
 twice on one checkpoint. The topology is the production one: swap the
 file source for Kafka and the same plan runs continuously.
 
+Queries that differ only in a constant share one stream builder:
+- ``_window_totals(spark, sf_dir, window)``: count and money sum per
+  time window and event type (tumbling and sliding windows);
+- ``_hourly_counts(ev)``: the 1-hour watermarked count (the watermark
+  append query, and the late-drop query over its two-phase source);
+- ``_signup_purchase_join(spark, sf_dir, how)``: the signup-purchase
+  interval join (inner and left outer).
+
 Oracle notes:
 - Tumbling/sliding/session windows are batch-equivalent, so they get full
   SQL oracles (sliding = union of the two 12h-offset bucket assignments;
@@ -38,7 +46,7 @@ import shutil
 import tempfile
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from muurschilderingendatabase_etl_spark.queries import money
 from muurschilderingendatabase_etl_spark.registry import query
@@ -52,23 +60,28 @@ from muurschilderingendatabase_etl_spark.streaming.replay import (
 from muurschilderingendatabase_etl_spark.tables import rm_at_exit
 
 
-@query(
-    "stream_tumbling_window",
-    oracle="""
-    SELECT strftime(date_trunc('day', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
+def _window_totals_oracle(window_start: str, source: str) -> str:
+    """Oracle of ``_window_totals``: event count and exact money sum per
+    (``window_start`` expression, event_type) over ``source``."""
+    return f"""
+    SELECT strftime({window_start}, '%Y-%m-%d %H:%M:%S') AS window_start,
            event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
              AS total_value
-    FROM events
+    FROM {source}
     GROUP BY 1, 2
-    """,
-)
-def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-day tumbling window counts+sums per event_type via readStream."""
+    """
+
+
+def _window_totals(spark: SparkSession, sf_dir: str, window: Column) -> DataFrame:
+    """Event count and exact money sum per (``window``, event_type) over
+    the replayed events stream, in complete mode. A time window is
+    batch-equivalent, so the final complete-mode state equals the
+    oracle's GROUP BY over the window start."""
     ev = read_events_stream(spark, sf_dir)
     win = (
-        ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+        ev.groupBy(window.alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             money.sum_money(F.col("value")).alias("total_value"),
@@ -81,42 +94,32 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return run_to_memory(win, "complete")
+
+
+@query(
+    "stream_tumbling_window",
+    oracle=_window_totals_oracle("date_trunc('day', ts)", "events"),
+)
+def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-day tumbling windows through ``_window_totals``."""
+    return _window_totals(spark, sf_dir, F.window("ts", "1 day"))
 
 
 @query(
     "stream_sliding_window",
-    oracle="""
-    WITH assigned AS (
+    oracle=_window_totals_oracle(
+        "ws",
+        """(
       SELECT time_bucket(INTERVAL 12 HOUR, ts) - k * INTERVAL 12 HOUR AS ws,
              event_type, value
       FROM events CROSS JOIN (VALUES (0), (1)) offs(k)
-    )
-    SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS total_value
-    FROM assigned
-    GROUP BY 1, 2
-    """,
+    ) assigned""",
+    ),
 )
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-day windows sliding every 12h: each event lands in 2 windows."""
-    ev = read_events_stream(spark, sf_dir)
-    win = (
-        ev.groupBy(F.window("ts", "1 day", "12 hours").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money.sum_money(F.col("value")).alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    return run_to_memory(win, "complete")
+    """1-day windows sliding every 12h through ``_window_totals``: each
+    event lands in 2 windows, the oracle's two bucket offsets."""
+    return _window_totals(spark, sf_dir, F.window("ts", "1 day", "12 hours"))
 
 
 @query(
@@ -172,6 +175,23 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(win, "complete")
 
 
+def _hourly_counts(ev: DataFrame) -> DataFrame:
+    """Event count per 1-hour window of the stream ``ev`` under a 1-hour
+    watermark. In append mode a window is emitted once the watermark,
+    max event time seen - 1h, passes its end; the final no-data
+    micro-batch of an availableNow run advances the watermark to that
+    run's max(ts) - 1h, so a run's output is deterministic."""
+    return (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "n_events",
+        )
+    )
+
+
 @query(
     "stream_watermark_append",
     oracle="""
@@ -184,25 +204,17 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked hourly windows in append mode: only windows finalized
-    by the end-of-replay watermark (max event time - 1h) are emitted —
+    """``_hourly_counts`` over the events stream in one append-mode run:
+    only windows closed by the end-of-replay watermark are emitted, and
     the oracle reproduces that cutoff."""
-    ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    win = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "n_events",
-        )
-    )
-    return run_to_memory(win, "append")
+    return run_to_memory(_hourly_counts(read_events_stream(spark, sf_dir)), "append")
 
 
-@query(
-    "stream_dedup_stateful",
-    oracle="SELECT DISTINCT user_id, event_type FROM events",
-)
+# Both dedup streams keep the first row per key, so each equals DISTINCT.
+_DISTINCT_USER_TYPES = "SELECT DISTINCT user_id, event_type FROM events"
+
+
+@query("stream_dedup_stateful", oracle=_DISTINCT_USER_TYPES)
 def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dedup on (user_id, event_type) — first arrival
     wins; state partitioned by key across executors."""
@@ -213,10 +225,7 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(deduped, "append")
 
 
-@query(
-    "stream_dedup_within_watermark",
-    oracle="SELECT DISTINCT user_id, event_type FROM events",
-)
+@query("stream_dedup_within_watermark", oracle=_DISTINCT_USER_TYPES)
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark: like stateful dedup but state for a
     key expires once the watermark passes its event time + delay — bounded
@@ -256,6 +265,17 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg, "complete")
 
 
+def _cents_total(values) -> int:
+    """Exact integer cents of a pandas Series of 2-dp money values,
+    NULLs skipped. The state of both pandas folds carries cents (the
+    queries/money.py class): a double running total would make the
+    emitted value depend on batch arrival order, while cents accumulate
+    exactly in int64."""
+    import numpy as np
+
+    return int(np.rint(values.dropna().to_numpy() * 100).astype("int64").sum())
+
+
 @query(
     "stream_stateful_user_stats",
     oracle="""
@@ -275,24 +295,19 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     value is a bounded summary — not the rows — so state size is
     O(users), the 100-TB-safe shape. Deterministic under availableNow
     replay, hence oracle-checkable."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     ev = read_events_stream(spark, sf_dir).select("user_id", "event_type", "value")
 
     def update(key, pdfs, state: GroupState):
-        # State carries INTEGER CENTS (queries/money.py class): a double
-        # running total would make the emitted value depend on batch
-        # arrival order; cents accumulate exactly in int64.
         n, total_cents, types = (
             state.get if state.exists else (0, 0, "")
         )
         seen = set(types.split("|")) - {""}
         for pdf in pdfs:
             n += len(pdf)
-            v = pdf["value"].dropna().to_numpy()
-            total_cents += int(np.rint(v * 100).astype("int64").sum())
+            total_cents += _cents_total(pdf["value"])
             # dropna: a NULL event_type is countable but not a type —
             # and None poisons the sorted() in the state encoding.
             seen |= set(pdf["event_type"].dropna())
@@ -348,12 +363,13 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE late-data drop via the incremental-batch-job pattern: two
-    availableNow runs sharing one checkpoint. Run 1 processes the bulk
-    file and persists its watermark (max bulk ts - 1h); the stragglers
-    file then lands in the source dir and run 2 resumes from the
-    checkpoint — its genuinely-late rows (window end <= persisted
-    watermark) are dropped, stragglers in still-open windows aggregate,
-    and run 2's final watermark closes the remaining windows. (A single
+    availableNow runs of ``_hourly_counts`` sharing one checkpoint. Run 1
+    processes the bulk file and persists its watermark (max bulk ts -
+    1h); the stragglers file then lands in the source dir and run 2
+    resumes from the checkpoint — its genuinely-late rows (window end <=
+    persisted watermark) are dropped, stragglers in still-open windows
+    aggregate, and run 2's final watermark closes the remaining windows.
+    (A single
     availableNow run can NOT drop anything: it plans every file's offsets
     up front under the initial watermark.) The combined append output of
     both runs is deterministic, and the oracle reproduces the drop rule
@@ -363,15 +379,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # atexit (not eager): the returned frame reads outdir lazily
     outdir = rm_at_exit(tempfile.mkdtemp(prefix="msdb_late_sink_"))
     schema = spark.read.parquet(f"{srcdir}/a_bulk.parquet").schema
-    ev = spark.readStream.schema(schema).parquet(srcdir).withWatermark("ts", "1 hour")
-    win = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "n_events",
-        )
-    )
+    win = _hourly_counts(spark.readStream.schema(schema).parquet(srcdir))
     try:
         run_to_sink(win, "append", outdir, ckpt)  # bulk; persists its watermark
         shutil.copy(parked, f"{srcdir}/b_stragglers.parquet")
@@ -384,9 +392,8 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_sink(spark, outdir, "append", win.schema)
 
 
-@query(
-    "stream_stream_join",
-    oracle="""
+# Signups joined to the same user's purchases within the hour after.
+_SIGNUP_PURCHASES = """
     SELECT s.user_id,
            strftime(s.ts, '%Y-%m-%d %H:%M:%S.%f') AS signup_ts,
            strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS purchase_ts,
@@ -395,37 +402,50 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON s.user_id = p.user_id
      AND s.event_type = 'signup' AND p.event_type = 'purchase'
      AND p.ts > s.ts AND p.ts <= s.ts + INTERVAL 1 HOUR
-    """,
-)
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with an event-time range condition:
-    purchases within 1h after a signup by the same user. Both sides carry
-    watermarks so the join state is bounded (each side's rows can be
-    evicted once the other side's watermark passes the range bound) —
-    the 100-TB requirement for any stream-stream join."""
-    signups = (
-        read_events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .where(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id").alias("s_user"), F.col("ts").alias("s_ts")
+"""
+
+
+def _signup_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Stream-stream interval join, type ``how``, of signups to the same
+    user's purchases within 1h after, in append mode.
+
+    Both sides carry a 1-hour watermark, so the join state is bounded:
+    a row is evicted once the other side's watermark passes its range
+    bound, the requirement for any stream-stream join at scale.
+
+    Eviction rule, which the outer oracle reproduces (checked at sf0.001
+    and sf0.01): Catalyst pushes each side's event_type filter BELOW its
+    EventTimeWatermark node, so the global watermark is min(max signup
+    ts, max purchase ts) - 1h (the delay), and the left side's state
+    watermark subtracts the 1h join interval again. An outer (null) row
+    for an unmatched signup is emitted only once that watermark proves
+    no purchase can still match, i.e. for s_ts < global_wm - 1h; under
+    availableNow the final no-data micro-batch advances the watermark
+    and flushes exactly that set, and the rest stays in state."""
+
+    def side(event_type: str, *cols: Column) -> DataFrame:
+        return (
+            read_events_stream(spark, sf_dir)
+            .withWatermark("ts", "1 hour")
+            .where(F.col("event_type") == event_type)
+            .select(*cols)
         )
+
+    signups = side(
+        "signup", F.col("user_id").alias("s_user"), F.col("ts").alias("s_ts")
     )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").alias("p_value"),
-        )
+    purchases = side(
+        "purchase",
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("p_ts"),
+        F.col("value").alias("p_value"),
     )
     joined = signups.join(
         purchases,
         (F.col("s_user") == F.col("p_user"))
         & (F.col("p_ts") > F.col("s_ts"))
         & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
     ).select(
         F.col("s_user").alias("user_id"),
         F.date_format("s_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("signup_ts"),
@@ -433,6 +453,12 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("p_value", 2).alias("purchase_value"),
     )
     return run_to_memory(joined, "append")
+
+
+@query("stream_stream_join", oracle=_SIGNUP_PURCHASES)
+def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inner interval join through ``_signup_purchase_join``."""
+    return _signup_purchase_join(spark, sf_dir, "inner")
 
 
 @query(
@@ -507,7 +533,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs: images without protobuf oracle-check the fallback, and the TWS
     path runs wherever protobuf is installed. The gate, _has_protobuf,
     is unit-tested in tests/test_streaming.py."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -518,13 +543,11 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Both API paths' per-user step: fold ``pdfs`` into ``stats``
         (n_purchases, purchase_cents, n_events), store the result with
         ``update``, and emit the user's row if they have purchases."""
-        # integer-cents state: see queries/money.py
         n_p, cents, n_e = stats
         for pdf in pdfs:
             purchases = pdf[pdf["event_type"] == "purchase"]
             n_p += len(purchases)
-            v = purchases["value"].dropna().to_numpy()
-            cents += int(np.rint(v * 100).astype("int64").sum())
+            cents += _cents_total(purchases["value"])
             n_e += len(pdf)
         update((n_p, cents, n_e))
         if n_p > 0:
@@ -582,7 +605,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_stream_outer_join",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT LEAST(
         max(ts) FILTER (event_type = 'signup'),
@@ -590,16 +613,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
       ) - INTERVAL 1 HOUR AS wm
       FROM events
     ),
-    matched AS (
-      SELECT s.user_id,
-             strftime(s.ts, '%Y-%m-%d %H:%M:%S.%f') AS signup_ts,
-             strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS purchase_ts,
-             ROUND(p.value, 2) AS purchase_value
-      FROM events s JOIN events p
-        ON s.user_id = p.user_id
-       AND s.event_type = 'signup' AND p.event_type = 'purchase'
-       AND p.ts > s.ts AND p.ts <= s.ts + INTERVAL 1 HOUR
-    ),
+    matched AS ({_SIGNUP_PURCHASES}),
     unmatched AS (
       SELECT s.user_id,
              strftime(s.ts, '%Y-%m-%d %H:%M:%S.%f') AS signup_ts,
@@ -618,46 +632,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: signups left-joined to
-    purchases within 1h. Outer (null) rows for a signup emit only when
-    the watermark proves no future purchase can match; under
-    availableNow the final no-data micro-batch advances the watermark
-    and flushes exactly that set, and the remainder stays in state —
-    bounded on both sides, identical to the inner variant.
-
-    Eviction rule the oracle reproduces (verified empirically at
-    sf0.001/sf0.01): Catalyst pushes each side's event_type filter BELOW
-    its EventTimeWatermark node, so the global watermark is
-    min(max signup ts, max purchase ts) - 1h (delay), and the left
-    side's state watermark subtracts the 1h join interval again —
-    null rows appear for unmatched signups with
-    s_ts < global_wm - 1h."""
-    signups = (
-        read_events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .where(F.col("event_type") == "signup")
-        .select(F.col("user_id").alias("s_user"), F.col("ts").alias("s_ts"))
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("value").alias("p_value"),
-        )
-    )
-    joined = signups.join(
-        purchases,
-        (F.col("s_user") == F.col("p_user"))
-        & (F.col("p_ts") > F.col("s_ts"))
-        & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    ).select(
-        F.col("s_user").alias("user_id"),
-        F.date_format("s_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("signup_ts"),
-        F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("purchase_ts"),
-        F.round("p_value", 2).alias("purchase_value"),
-    )
-    return run_to_memory(joined, "append")
+    """Left outer interval join through ``_signup_purchase_join``; its
+    docstring gives the watermark rule for the null rows."""
+    return _signup_purchase_join(spark, sf_dir, "left_outer")

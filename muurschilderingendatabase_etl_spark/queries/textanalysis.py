@@ -174,7 +174,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct minima. Standard MOSS-style fingerprinting; fingerprints
     overlap ⇒ likely shared passages.
 
-    Value-checked IN-BAND (the r6-HLL/r8-ANN pattern — xxhash64
+    Value-checked IN-BAND (the pattern of the HLL and ANN queries — xxhash64
     fingerprints are engine-specific, so no external oracle can
     recompute them, but their invariants can be checked inside the
     query): per qualifying document the driver hash-compares two
@@ -216,7 +216,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pre-filter to the qualifying docs (>= 6 words) BEFORE exploding:
     # shorter docs would only be discarded later by the pos <= max_pos-3
     # filter / left join, after paying posexplode + two lead() windows +
-    # xxhash64 + the 4-row min window for nothing (r8 ADVICE).
+    # xxhash64 + the 4-row min window for nothing.
     tok = (
         t(spark, sf_dir, "documents")
         .where(F.size(F.split("text", " ")) >= 6)

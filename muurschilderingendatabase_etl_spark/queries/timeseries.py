@@ -71,8 +71,8 @@ def timeseries_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     AVG-rounded-to-4dp, a 1-ulp cross-engine divergence in ONE bucket
     flips the 4th decimal, forward-fill replicates that bucket across
     the gap, and the amplified drift crosses a 2dp rounding boundary —
-    observed as a 0.01 filled_sum mismatch at sf1 (sf1 oracle-parity
-    sweep, round 6).
+    observed as a 0.01 filled_sum mismatch in an sf1 oracle-parity
+    sweep.
 
     Scale shape: the observation aggregation shuffles on (user, bucket);
     the dense grid is generated per user with explode(sequence(...)) —

@@ -184,12 +184,12 @@ def udf_cogroup_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key merge (full-outer semantics included) that a plain join can't
     express when the merge logic is imperative.
 
-    r12 perf (guide §2.3 "aggregate before you shuffle" + §4.1): the
-    original shipped every raw event row through Arrow and merged them in
-    Python. The per-KEY Python call (three pandas frames constructed per
-    key) is the real cost — and AQE coalesced the tiny cogroup exchange
-    to ONE partition, so ~1.5k group calls ran serially in a single
-    Python worker (4.1–4.5 s warm at sf0.1). Now both sides are reduced
+    Aggregate before the shuffle: the per-KEY Python call (three pandas
+    frames constructed per key) is the real cost, and shipping every raw
+    event row through Arrow to merge in Python left AQE coalescing the
+    tiny cogroup exchange to ONE partition, so ~1.5k group calls ran
+    serially in a single Python worker (4.1–4.5 s warm at sf0.1). So both
+    sides are reduced
     JVM-side first (map-side partial aggregation, one row per key crosses
     the boundary) and explicitly hash-repartitioned by the key to the
     core count, which FlatMapCoGroupsInPandas reuses directly (explicit

@@ -12,7 +12,9 @@ read it.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable, Iterable, Iterator
+from functools import partial
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row
@@ -29,6 +31,8 @@ from muurschilderingendatabase_etl_spark.rdf.schema import (
 from muurschilderingendatabase_etl_spark.rdf.turtle import parse_bodies, triples_only
 
 Fetcher = Callable[[str], str]
+
+log = logging.getLogger(__name__)
 
 
 def apply_mapping(triples: DataFrame, mapping: dict[str, str]) -> DataFrame:
@@ -95,13 +99,30 @@ def monument_keys(triples: DataFrame) -> DataFrame:
     )
 
 
+def fetch_bodies(rows: Iterable[Row], fetcher: Fetcher) -> Iterator[str]:
+    """The per-key loop of ``fetch_enrichments``: one ``fetcher(key)``
+    body per row. A fetch that raises yields nothing for its key
+    (transform:100-101 semantics: a failed key contributes nothing) and
+    logs one WARNING naming the key and the exception type. Module-level
+    (not a closure inside fetch_enrichments) so tests can drive it
+    directly."""
+    for row in rows:
+        try:
+            body = fetcher(row.key)
+        except Exception as exc:
+            log.warning(
+                "enrichment fetch failed for key %r: %s", row.key, type(exc).__name__
+            )
+            continue
+        yield body
+
+
 def fetch_enrichments(keys: DataFrame, fetcher: Fetcher) -> DataFrame:
     """O12 fetch: per-key lookup against an external service, executed
-    with ``mapPartitions`` so each task holds one connection/session and
-    failures are isolated per key (transform:100-101 semantics: a failed
-    key contributes nothing). A fetch that raises yields no body; a
-    malformed body is quarantined by ``parse_bodies`` and dropped by
-    ``triples_only``.
+    with ``mapPartitions`` over ``fetch_bodies`` so each task holds one
+    connection/session and failures are isolated per key. A fetch that
+    raises yields no body; a malformed body is quarantined by
+    ``parse_bodies`` and dropped by ``triples_only``.
 
     At 100 TB the key set is still small (distinct monument numbers), so
     this stage is narrow; the expensive side never moves.
@@ -112,16 +133,8 @@ def fetch_enrichments(keys: DataFrame, fetcher: Fetcher) -> DataFrame:
     and shuffle stages, ``auto_prefixes``, the writer's sort sampling)
     read the enrichments.
     """
-
-    def fetch(rows: Iterable[Row]) -> Iterator[str]:
-        for row in rows:
-            try:
-                body = fetcher(row.key)
-            except Exception:
-                continue  # per-key failure tolerance (transform:100-101)
-            yield body
-
-    return triples_only(parse_bodies(keys.rdd.mapPartitions(fetch)))
+    bodies = keys.rdd.mapPartitions(partial(fetch_bodies, fetcher=fetcher))
+    return triples_only(parse_bodies(bodies))
 
 
 def add_same_as(triples: DataFrame) -> DataFrame:

@@ -39,7 +39,7 @@ def get_spark(
         # 32 reducers no matter the data volume — at sf100 the Q5-shape
         # 6-way join paid 14.8x/decade with 32 fat spilling reducers and
         # 1.9x of it came straight back with a wider start (105.6 ->
-        # 57.0 s, SCALE.md round 11). Start every AQE-managed shuffle
+        # 57.0 s, SCALE.md). Start every AQE-managed shuffle
         # wide and let runtime coalescing pick the real count from
         # observed bytes: the sf0.1 cost is nil because AQE coalesces
         # tiny shuffles back to a handful of partitions. Stateful

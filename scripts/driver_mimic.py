@@ -5,7 +5,7 @@ builds) and compare against the DuckDB oracle the way the driver does
 (sorted columns, sorted rows, 6-dp rounding, value hash).
 
 Also flags any query whose OUTPUT schema contains array/map/struct
-columns — those crash the driver's pandas canonicalizer (VERDICT r1).
+columns — those crash the driver's pandas canonicalizer.
 
 Usage: python scripts/driver_mimic.py [sf_dir] [name1 name2 ...]
        (default sf0.01; extra args restrict to the named queries — used by
@@ -70,7 +70,7 @@ def main() -> None:
             ]
             if bad_cols:
                 raise RuntimeError(f"non-scalar output columns: {bad_cols}")
-            # The other r1 driver failure class: raw timestamp columns
+            # The other driver failure class: raw timestamp columns
             # hash-diverge on Spark µs vs DuckDB ns precision. The
             # registry convention is DATE or a formatted string.
             ts_cols = [

@@ -44,8 +44,8 @@ SEED = 20260814
 
 # --corpus realistic: documents drawn from a Zipf-Mandelbrot vocabulary
 # instead of the 31-word fixture vocab. The fixture vocab makes random
-# word SETS collide quadratically (SCALE.md round-4 notes: the sf1
-# near-dup probe measured answer growth, not algorithms); a 30k-word
+# word SETS collide quadratically (SCALE.md: the sf1 near-dup probe
+# measured answer growth, not algorithms); a 30k-word
 # vocab with a flattened head (q=100 keeps the top word at ~0.2% of
 # tokens, so short docs aren't all head words) drives incidental
 # J >= 0.95 pairs to ~zero, and TRUE near-dups are PLANTED at a bounded
@@ -146,10 +146,10 @@ def _realistic_texts(
 def gen(sf: float, out: str, skew: float = 0.0, corpus: str = "fixture") -> None:
     """Generate all ten tables at scale ``sf`` into ``out``.
 
-    ``skew`` > 0 makes the fixture deliberately hot-keyed for stress tests
-    (VERDICT r3 item 4): that fraction of events lands on user_id=0 and that
-    fraction of documents lands on source='src0' — the keys the sessionize
-    window partitions by and the jaccard blocker blocks on.
+    ``skew`` > 0 makes the fixture deliberately hot-keyed for stress
+    tests: that fraction of events lands on user_id=0 and that fraction
+    of documents lands on source='src0' — the keys the sessionize window
+    partitions by and the jaccard blocker blocks on.
     """
     os.makedirs(out, exist_ok=True)
     n = counts(sf)

@@ -37,8 +37,8 @@ HEADLINERS = [
     "window_topk_per_group",
     "dedup_exact_hash",
     "dedup_minhash_lsh",
-    # r4 rewrites: partition-signature jaccard + multi-chunk simhash —
-    # both must show pure equi-joins on signature keys, no BNL/cartesian.
+    # partition-signature jaccard + multi-chunk simhash: both must show
+    # pure equi-joins on signature keys, no BNL/cartesian.
     "dedup_ngram_jaccard",
     "dedup_simhash",  # wrapper adds 1-row BNLJ summaries; miner audited via pairs
     "quality_gopher_gates",
@@ -49,12 +49,12 @@ HEADLINERS = [
     "skyline_pareto_frontier",
     "sink_zorder_2d_skipping",
     "text_lang_id",
-    # r5 rewrites: two-phase distributed rank — must show zero
-    # single-partition exchanges (the old plans were one-task sorts).
+    # two-phase distributed rank: must show zero single-partition
+    # exchanges (a plain global window is a one-task sort).
     "pack_sequence_bins",
     "window_ntile_buckets",
-    # r7 rewrites: rank-based exact percentiles — must show no exact-
-    # percentile aggregate (the builtin's per-task value hashmap OOMed
+    # rank-based exact percentiles: must show no exact-percentile
+    # aggregate (the builtin's per-task value hashmap OOMed
     # an sf10 probe) and no single-partition exchange.
     "agg_percentiles",
     "stats_percentiles_exact",
@@ -84,8 +84,8 @@ def audit(plan: str) -> dict[str, object]:
         "bnlj": nodes("BroadcastNestedLoopJoin"),
         "cartesian": nodes("CartesianProduct"),
         "exchanges": nodes("Exchange"),
-        # one-task funnels: the plan shape that cannot scale (the r5
-        # distributed-rank rewrites exist to keep this column 0)
+        # one-task funnels: the plan shape that cannot scale (the
+        # distributed-rank form exists to keep this column 0)
         "single_part": len(re.findall(r"Exchange SinglePartition", plan)),
     }
 

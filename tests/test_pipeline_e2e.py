@@ -191,3 +191,30 @@ def test_enrichment_fetch_failures_drop_only_their_key(spark):
         (monument + "1", SDO_SAME_AS, "1"),
     }
     assert {k: acc.value for k, acc in calls.items()} == {"1": 1, "2": 1, "3": 1}
+
+
+def test_failed_enrichment_fetch_logs_its_key(caplog):
+    """Each key whose fetch raises leaves one WARNING naming the key and
+    the exception type, and its body is skipped; the other keys' bodies
+    pass through in order. Drives the fetch loop in the driver process,
+    so the log record is captured here, not in a Python worker."""
+    import logging
+
+    from pyspark.sql import Row
+
+    from muurschilderingendatabase_etl_spark.rdf.transform import fetch_bodies
+
+    def fetcher(key: str) -> str:
+        if key == "2":
+            raise OSError("HTTP 503")
+        return f"body {key}"
+
+    keys = [Row(key=k) for k in ("1", "2", "3")]
+    with caplog.at_level(logging.WARNING, logger="muurschilderingendatabase_etl_spark"):
+        bodies = list(fetch_bodies(keys, fetcher))
+
+    assert bodies == ["body 1", "body 3"]
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "'2'" in warnings[0].getMessage()
+    assert "OSError" in warnings[0].getMessage()

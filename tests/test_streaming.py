@@ -297,6 +297,75 @@ def test_resumed_stream_matches_one_run(spark, tmp_path, output_mode):
     assert resumed == _sorted_rows(run("one_run", whole))
 
 
+@pytest.mark.parametrize("output_mode", ["append", "complete"])
+def test_stream_killed_mid_batch_resumes_to_one_run(spark, tmp_path, output_mode):
+    """A stream killed inside batch 0, after its sink write but before
+    the commit, then restarted by run_to_sink on the same checkpoint,
+    must end with the rows of one clean run: the restart redelivers
+    batch 0 from the offset log and batch_sink overwrites that batch's
+    directory in place, so no row comes twice. Two source files read
+    one per trigger make batch 0 a strict prefix of the stream."""
+    from pyspark.errors import StreamingQueryException
+
+    from muurschilderingendatabase_etl_spark.streaming.replay import (
+        batch_sink,
+        read_sink,
+        run_to_sink,
+        stage_events_two_phase,
+        stream_state_partitions,
+    )
+
+    bulk_dir, parked = stage_events_two_phase(spark, SF_DIR)
+    bulk = os.path.join(bulk_dir, "a_bulk.parquet")
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copy(bulk, src / "a.parquet")
+    shutil.copy(parked, src / "b.parquet")
+    ev = (
+        spark.readStream.schema(spark.read.parquet(bulk).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    if output_mode == "append":
+        res = ev.select("event_id", "event_type", "value")
+    else:
+        res = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+
+    killed_out, ckpt = tmp_path / "killed_out", tmp_path / "killed_ckpt"
+    sink, killed = batch_sink(str(killed_out)), []
+
+    def write_then_die(batch_df, batch_id: int) -> None:
+        sink(batch_df, batch_id)
+        if batch_id == 0 and not killed:
+            killed.append(batch_id)
+            raise RuntimeError("killed after the write, before the commit")
+
+    with stream_state_partitions(res), pytest.raises(StreamingQueryException):
+        (
+            res.writeStream.foreachBatch(write_then_die)
+            .outputMode(output_mode)
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    assert os.listdir(killed_out) == ["batch-000000000"]
+    assert "0" in os.listdir(ckpt / "offsets")
+    assert "0" not in os.listdir(ckpt / "commits")
+
+    run_to_sink(res, output_mode, str(killed_out), str(ckpt))
+    clean_out = tmp_path / "clean_out"
+    run_to_sink(res, output_mode, str(clean_out), str(tmp_path / "clean_ckpt"))
+
+    assert sorted(os.listdir(killed_out)) == sorted(os.listdir(clean_out))
+    assert len(os.listdir(clean_out)) == 2
+    resumed = _sorted_rows(read_sink(spark, str(killed_out), output_mode, res.schema))
+    assert resumed
+    assert resumed == _sorted_rows(
+        read_sink(spark, str(clean_out), output_mode, res.schema)
+    )
+
+
 @pytest.mark.parametrize("output_mode", ["complete", "append", "update"])
 def test_parquet_sink_reproduces_memory_sink(spark, output_mode):
     """run_to_memory's foreachBatch parquet sink (r10 — the memory sink
